@@ -256,9 +256,17 @@ def buffer_area_planar(dist: float, quad_segs: int = 8):
 
 
 @pandas_udf(T.ArrayType(T.DoubleType()))
-def bbox_arr(geom: pd.Series) -> pd.Series:
+def _bbox_arr(geom: pd.Series) -> pd.Series:
     get = _decode_cache()
     return pd.Series([list(kernels.bbox(get(b))) for b in geom])
+
+
+# [minx, miny, maxx, maxy] per geometry, evaluated once per row (see
+# point_cell_lonlat): callers read the four elements in join conditions,
+# and Catalyst would otherwise clone the deterministic call into the
+# inferred isnotnull filter below the projection — a second
+# ArrowEvalPython, i.e. a second WKB decode and Python worker per task
+bbox_arr = _bbox_arr.asNondeterministic()
 
 
 @pandas_udf(T.StringType())
@@ -462,21 +470,6 @@ def intersects_pair(geom_a: pd.Series, geom_b: pd.Series) -> pd.Series:
 
 
 @pandas_udf(T.BooleanType())
-def point_in_polygon(point_geom: pd.Series, poly_geom: pd.Series) -> pd.Series:
-    """Vectorized PIP refine: groups the batch by polygon bytes and
-    ray-casts all points against each polygon at once."""
-    lon, lat = _decode_points(point_geom)
-    pts = np.column_stack([lon, lat])
-    keys = pd.Series([bytes(b) for b in poly_geom])
-    out = np.zeros(len(keys), dtype=bool)
-    for key, idx in keys.groupby(keys).groups.items():
-        g = wkb.decode(key)
-        ii = np.asarray(idx)
-        out[ii] = kernels.points_in_polygons(pts[ii], g.polygons())
-    return pd.Series(out)
-
-
-@pandas_udf(T.BooleanType())
 def point_in_polygon_lonlat(lon: pd.Series, lat: pd.Series, poly_geom: pd.Series) -> pd.Series:
     """PIP refine on already-decoded lon/lat doubles (skips re-decoding
     point WKBs inside the join's refine stage)."""
@@ -488,21 +481,6 @@ def point_in_polygon_lonlat(lon: pd.Series, lat: pd.Series, poly_geom: pd.Series
         ii = np.asarray(idx)
         out[ii] = kernels.points_in_polygons(pts[ii], g.polygons())
     return pd.Series(out)
-
-
-def distance_m():
-    """Planar EPSG:3035 distance in metres between two point columns."""
-    from pda_spark.geo import proj
-
-    @pandas_udf(T.DoubleType())
-    def _dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        lon_a, lat_a = _decode_points(a)
-        lon_b, lat_b = _decode_points(b)
-        xa, ya = proj.fwd(lon_a, lat_a)
-        xb, yb = proj.fwd(lon_b, lat_b)
-        return pd.Series(np.hypot(xa - xb, ya - yb))
-
-    return _dist
 
 
 def distance_m_lonlat():
@@ -535,24 +513,6 @@ def line_length_planar(geom: pd.Series) -> pd.Series:
             dx = np.diff(line[:, 0])
             dy = np.diff(line[:, 1])
             for v in np.sqrt(dx * dx + dy * dy):
-                total += float(v)
-        out[i] = total
-    return pd.Series(out)
-
-
-@pandas_udf(T.DoubleType())
-def line_length_m(geom: pd.Series) -> pd.Series:
-    """ST_Length in EPSG:3035 metres: project each vertex, then the same
-    sequential hypot sum (the meters sibling of line_length_planar)."""
-    from pda_spark.geo import proj
-
-    get = _decode_cache()
-    out = np.zeros(len(geom))
-    for i, buf in enumerate(geom):
-        total = 0.0
-        for line in get(buf).lines():
-            x, y = proj.fwd(line[:, 0], line[:, 1])
-            for v in np.hypot(np.diff(x), np.diff(y)):
                 total += float(v)
         out[i] = total
     return pd.Series(out)
@@ -609,21 +569,6 @@ def haversine_m(lon_a, lat_a, lon_b, lat_b, radius: float):
               - np.radians(np.asarray(lon_a, dtype=np.float64))) / 2.0
     s = np.sin(dphi_h) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dlam_h) ** 2
     return 2.0 * radius * np.arcsin(np.sqrt(np.clip(s, 0.0, 1.0)))
-
-
-def distance_deg():
-    """Planar lon/lat Euclidean distance (degrees) between point columns —
-    identical IEEE754 op sequence to the SQL oracle's sqrt(dx^2+dy^2)."""
-
-    @pandas_udf(T.DoubleType())
-    def _dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        lon_a, lat_a = _decode_points(a)
-        lon_b, lat_b = _decode_points(b)
-        dx = lon_a - lon_b
-        dy = lat_a - lat_b
-        return pd.Series(np.sqrt(dx * dx + dy * dy))
-
-    return _dist
 
 
 # ------------------------------------------------- JVM-side cell helpers

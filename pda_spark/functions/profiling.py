@@ -223,7 +223,9 @@ def weighted_median(
     order-statistic form warehouses use for rating/price aggregation
     with multiplicities). One per-(group, value) pre-aggregate (ties
     collapse), one ordered window cumsum, one argmin. Returns
-    (group..., w_total, wmedian)."""
+    (group..., w_total, wmedian). Rows with a NULL or non-positive
+    weight are excluded, so a group with no positive weight yields no
+    row."""
     # NULL weights would NULL the running cumsum (silently failing every
     # later 2*cumw >= W boundary) and non-positive weights break the
     # order statistic — both are excluded up front (ADVICE r06)

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pda_spark.geo import cells, kernels, sweep, wkb
+from pda_spark.session import keyed_width
 
 
 def union_area_convex(rings: list[np.ndarray], max_exact: int = 22) -> float:
@@ -96,8 +97,8 @@ def _spread(df: DataFrame) -> DataFrame:
     the whole 66k-box clip single-tasked at sf1.0). Repartition-then-
     Arrow is the POST-shuffle width pattern this host tolerates
     (BENCH/BASELINE.md §3 — only scan-forced pre-shuffle Arrow width
-    trips the throttle); the clip stage is short-lived per row, so full
-    width beats the cores/2 rule used for long-running Arrow refines.
+    trips the throttle); the clip stage is short-lived per row, so it
+    runs at full width, not at ``session.arrow_width`` (long refines).
     One shared definition: see ``pda_spark.session.spread``."""
     from pda_spark.session import spread
 
@@ -281,15 +282,12 @@ def dissolve(
         if top is not None and top > route_threshold:
             step = _auto_step(land_cover, geom)
             pieces = planar_pieces(land_cover, step, geom=geom, key_col=key)
-            # explicit partition counts on the keyed exchanges: these
-            # stages are compute-heavy per row but tiny in bytes, so
-            # AQE's size-based coalescing squeezes them onto ~4 tasks
-            # (q46 straggled there at sf1.0); a user-specified count is
-            # exempt from coalescing and satisfies the applyInPandas
-            # clustering requirement, so no extra exchange appears
+            # explicit partition counts on the keyed exchanges (see
+            # session.keyed_width): AQE would coalesce these
+            # compute-heavy, few-byte stages onto a handful of tasks
             n = land_cover.sparkSession.sparkContext.defaultParallelism
             per_tile = (
-                pieces.repartition(2 * n, "key", "ix", "iy")
+                pieces.repartition(keyed_width(land_cover), "key", "ix", "iy")
                 .groupBy("key", "ix", "iy")
                 .applyInPandas(_dissolve_cell_fn, _CELL_UNION_SCHEMA)
             )
@@ -303,7 +301,7 @@ def dissolve(
         pieces = cell_pieces(land_cover, cells_res, geom=geom, key_col=key)
         n = land_cover.sparkSession.sparkContext.defaultParallelism
         per_cell = (
-            pieces.repartition(2 * n, "key", "cell")
+            pieces.repartition(keyed_width(land_cover), "key", "cell")
             .groupBy("key", "cell")
             .applyInPandas(_dissolve_cell_fn, _CELL_UNION_SCHEMA)
         )
@@ -437,12 +435,12 @@ def coverage(
             }
         )
 
-    # explicit partition counts (the dissolve rationale): scanline work
+    # explicit partition counts (see session.keyed_width): scanline work
     # is compute-heavy on few bytes, so AQE's size-based coalescing
     # would squeeze these keyed stages onto a handful of tasks
     n_par = land_cover.sparkSession.sparkContext.defaultParallelism
     per_cell_df = (
-        tagged.repartition(2 * n_par, "key", "cell")
+        tagged.repartition(keyed_width(land_cover), "key", "cell")
         .groupBy("key", "cell")
         .applyInPandas(per_cell, _COV_CELL_SCHEMA)
     )

@@ -45,23 +45,7 @@ from pyspark.sql.functions import pandas_udf
 
 from pda_spark.functions import geo_udfs
 from pda_spark.geo import cells as C
-
-
-def _arrow_stage_width(df: DataFrame) -> int:
-    """Task width for a long-running Arrow (python-UDF) stage. Default
-    parallelism/2: an Arrow task runs ~2 busy processes (python worker +
-    JVM feeder — BENCH/BASELINE.md §3), so cores/2 tasks saturate the
-    machine without oversubscribing it (q45 refine A/B at sf1.0: width
-    32/16/8 -> 9.0/4.8/7.1 s). Env-tunable (PDA_ARROW_STAGE_WIDTH) for
-    deployments whose executor topology differs."""
-    import os
-
-    return int(
-        os.environ.get(
-            "PDA_ARROW_STAGE_WIDTH",
-            max(1, df.sparkSession.sparkContext.defaultParallelism // 2),
-        )
-    )
+from pda_spark.session import arrow_width
 
 
 def _salted(df: DataFrame, salt: int, side: str) -> DataFrame:
@@ -564,7 +548,7 @@ def intersects_join(
         # sit BEFORE the (single) bbox-cover Arrow stage and widen it
         # off the scan's skewed split count (q45: a 7-task cover stage
         # with a one-task tail was the remaining straggler)
-        left = left.repartition(_arrow_stage_width(left))
+        left = left.repartition(arrow_width(left))
     lft = with_cover(left, left_geom, lb)
     rgt = with_cover(right, right_geom, rb)
     lft = _salted(lft, salt, "big")
@@ -578,9 +562,9 @@ def intersects_join(
         # intersects_pair fuse into ONE task pipeline costing two python
         # workers per task (the chained-Arrow rule). The round-robin
         # splits them into two single-worker stages and widens the
-        # refine (see _arrow_stage_width for the cores/2 default).
+        # refine (see session.arrow_width for the default).
         # bbox-exact mode has no Python refine leg — nothing to widen.
-        lft = lft.repartition(_arrow_stage_width(lft))
+        lft = lft.repartition(arrow_width(lft))
     cand = lft.join(r, on=keys, how="inner")
 
     # reference-point dedup: keep the pair only in the cell holding the

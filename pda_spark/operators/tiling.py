@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from pda_spark.functions import geo_udfs
 from pda_spark.geo import sweep, wkb
+from pda_spark.session import keyed_width
 
 
 def rasterize_polygons(
@@ -127,7 +128,13 @@ def union_area_by_cells(
             {"key": [pdf["key"].iloc[0]], "cell": [pdf["cell"].iloc[0]], "area": [area]}
         )
 
-    partials = pieces.groupBy("key", "cell").applyInPandas(per_cell, _PARTIAL_SCHEMA)
+    # explicit count (session.keyed_width): AQE coalesced this few-byte,
+    # compute-heavy stage to one task
+    partials = (
+        pieces.repartition(keyed_width(pieces), "key", "cell")
+        .groupBy("key", "cell")
+        .applyInPandas(per_cell, _PARTIAL_SCHEMA)
+    )
     return partials.groupBy("key").agg(F.round(F.sum("area"), 12).alias("union_area"))
 
 

@@ -101,6 +101,49 @@ def spread(df):
     Apply ONLY where the spread subtree has ONE consumer (a two-consumer
     explode source re-reads the shuffled payload per consumer — the q72
     measured non-fix) and the widened work is pure JVM; long-running
-    Arrow stages use spatial_join._arrow_stage_width (cores/2) instead.
+    Arrow stages use ``arrow_width`` instead.
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def arrow_width(df) -> int:
+    """Task width for a long-running Arrow (Python UDF) stage such as
+    the polygon-pair refine: the count of the round-robin exchange that
+    feeds it. ``PDA_ARROW_STAGE_WIDTH`` overrides the default for
+    deployments whose executor topology differs; a value that is not a
+    positive integer raises ``ValueError`` naming the variable.
+
+    Default: half the session's parallelism, but at least 4 tasks (and
+    never more than the parallelism). An Arrow task keeps two processes
+    busy (Python worker + JVM feeder, BENCH/BASELINE.md §3); halving
+    pays off only once that oversubscription hits a throttle:
+    - 32 cores (~10-core throttle), q45 refine at sf1.0, width 32/16/8:
+      9.0/4.8/7.1 s, so 16;
+    - 4 vCPU, Spark 4.1, ``overlay_join`` of the ``spatial`` benchmark
+      (bbox evaluated once per row), interleaved A/B medians over 15-20
+      calls per width, width 2/3/4: seed 1 1.58/1.55/1.50 s, seed 2
+      1.70/1.65/1.63 s, seed 3 1.54/-/1.43 s, so 4.
+    Between 8 and 32 cores the crossover is unmeasured.
+    """
+    raw = os.environ.get("PDA_ARROW_STAGE_WIDTH")
+    if raw is None:
+        n = df.sparkSession.sparkContext.defaultParallelism
+        return min(n, max(4, n // 2))
+    if not raw.strip().isdigit() or int(raw) < 1:
+        raise ValueError(f"PDA_ARROW_STAGE_WIDTH={raw!r}: expected a positive integer")
+    return int(raw)
+
+
+def keyed_width(df) -> int:
+    """Partition count for the keyed exchange under a per-group Python
+    stage (``applyInPandas`` scanline unions, per-cell dissolves): twice
+    the session's parallelism, so a hot key's cells spread over all
+    cores. These stages are compute-heavy per row but tiny in bytes, so
+    AQE's size-based coalescing would squeeze an ENSURE_REQUIREMENTS
+    exchange onto one or a few tasks (q46 at sf1.0; the ``spatial``
+    benchmark's ``coverage_area`` union ran its 8 shuffle partitions as
+    one task). Use it as ``df.repartition(keyed_width(df), *keys)``
+    before ``groupBy(*keys)``: an explicit count is exempt from
+    coalescing and satisfies the grouping's clustering, so no second
+    exchange appears."""
+    return 2 * df.sparkSession.sparkContext.defaultParallelism

@@ -521,6 +521,23 @@ def test_weighted_median_semantics(spark):
     assert got["h"] == (4, 5)   # even split -> LOWER median = 5
 
 
+def test_weighted_median_excludes_null_and_nonpositive_weights(spark):
+    from pda_spark.functions import profiling
+
+    rows = [
+        ("g", 1, None), ("g", 2, 0), ("g", 3, -5), ("g", 4, 1), ("g", 5, 1),
+        ("z", 7, 0), ("z", 8, None),
+    ]
+    df = spark.createDataFrame(rows, "k string, v int, w int")
+    got = {
+        r.k: (r.w_total, r.wmedian)
+        for r in profiling.weighted_median(df, "v", "w", ["k"]).collect()
+    }
+    # only v=4 and v=5 carry weight: W=2, LOWER median 4; a group with
+    # no positive weight has no median at all
+    assert got == {"g": (2, 4)}
+
+
 def test_robust_outliers_flags(spark):
     from pda_spark.functions import profiling
 

@@ -421,6 +421,26 @@ def test_pip_join_wkb_single_decode_stage(spark, world):
     assert _n_arrow_nodes(plan) == 3, plan
 
 
+def test_intersects_join_bbox_single_decode_stage(spark, world):
+    """Polygon x polygon join: bbox_arr evaluated once per side. The
+    join's bbox reads infer an isnotnull filter below the projection;
+    Catalyst would clone a deterministic bbox_arr into it: a second WKB
+    decode and Python worker per task on each side (5 ArrowEvalPython
+    nodes)."""
+    joined = spatial_join.intersects_join(
+        world["sat_images"].select(F.col("id").alias("img_id"), "geom"),
+        world["land_cover_classes"].select(
+            F.col("id").alias("lc_id"), F.col("geom").alias("lc_geom")
+        ),
+        res=6,
+        right_geom="lc_geom",
+        refine="kernel",
+    )
+    plan = _formatted_plan(joined)
+    # one bbox_arr per side + one intersects_pair refine
+    assert _n_arrow_nodes(plan) == 3, plan
+
+
 def test_knn_query_struct_udf_single_eval(spark, world):
     """kNN query side: ring_cells struct UDF evaluated once, not once per
     .cells/.guard/.qlon/.qlat access — in the non-broadcast path the

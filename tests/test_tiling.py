@@ -1,6 +1,8 @@
 """Tiling / zonal operators: rasterization, zonal counts, and the
 cell-partitioned union area (scale path) vs the exact dissolve UDAF."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,6 +39,23 @@ def test_union_area_by_cells_matches_exact(spark, world):
         assert set(scale) == set(exact)
         for k in exact:
             assert scale[k] == pytest.approx(exact[k], rel=1e-9), f"{k} res={res}"
+
+
+def test_union_area_by_cells_keyed_exchange_not_coalescable(spark, world):
+    """The per-cell scanline union is compute-heavy on few bytes: the
+    exchange under it must carry an explicit partition count, which AQE
+    never coalesces (ENSURE_REQUIREMENTS ran it as one task)."""
+    from conftest import formatted_plan
+
+    from pda_spark.session import keyed_width
+
+    polys = world["land_cover_classes"]
+    plan = formatted_plan(tiling.union_area_by_cells(polys, res=8))
+    tree = plan.split("\n\n")[0]
+    below = tree[tree.index("FlatMapGroupsInPandas"):]
+    node = re.search(r"Exchange \((\d+)\)", below).group(1)
+    args = re.search(rf"^\({node}\) Exchange\n.*\nArguments: (.*)$", plan, re.M).group(1)
+    assert f", {keyed_width(polys)}), REPARTITION_BY_NUM" in args, plan
 
 
 def test_zonal_count_vs_exact_pip(spark, world):
