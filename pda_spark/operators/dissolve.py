@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pda_spark.geo import cells, kernels, sweep, wkb
-from pda_spark.session import keyed_width
+from pda_spark.session import keyed_width, spread
 
 
 def union_area_convex(rings: list[np.ndarray], max_exact: int = 22) -> float:
@@ -92,25 +92,13 @@ _PIECE_SCHEMA = T.StructType(
 )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the geometry table before the Arrow clip stage (q46:
-    the whole 66k-box clip single-tasked at sf1.0). Repartition-then-
-    Arrow is the POST-shuffle width pattern this host tolerates
-    (BENCH/BASELINE.md §3 — only scan-forced pre-shuffle Arrow width
-    trips the throttle); the clip stage is short-lived per row, so it
-    runs at full width, not at ``session.arrow_width`` (long refines).
-    One shared definition: see ``pda_spark.session.spread``."""
-    from pda_spark.session import spread
-
-    return spread(df)
-
-
 def cell_pieces(df: DataFrame, res: int, geom: str = "geom", key_col: str | None = None) -> DataFrame:
     """Clip every polygon (outer ring AND holes) to its covering cells at
     resolution ``res`` -> (key, cell, piece) rows. Cell boxes are convex,
     so each Sutherland–Hodgman clip is exact for arbitrary simple rings
     (bridged rings keep even-odd fill semantics — verified in tests)."""
-    df = _spread(df)
+    # full width for the short per-row Arrow clip (q46 single-tasked at sf1.0)
+    df = spread(df)
 
     def fn(pdf_iter):
         for pdf in pdf_iter:
@@ -192,7 +180,8 @@ def planar_pieces(df: DataFrame, step: float, geom: str = "geom", key_col: str |
     (clamped to the lon/lat domain — out-of-domain geometry would be
     silently truncated), tile indices here are plain unclamped floors, so
     the decomposition is exact for ANY planar coordinates."""
-    df = _spread(df)
+    # full width for the short per-row Arrow clip (q46 single-tasked at sf1.0)
+    df = spread(df)
 
     def fn(pdf_iter):
         for pdf in pdf_iter:

@@ -86,6 +86,58 @@ def _auto_res(polygons: DataFrame, geom: str, target_cells: int = 4) -> int:
     return int(min(max(C.choose_res(dim, target_cells), 2), 12))
 
 
+def _snap_res(dim: float, res_list: list[int], target_cells: int) -> int:
+    """Per-geometry resolution of the multi-resolution joins: the
+    ``cells.choose_res`` pick for a ``dim``-sized extent, clamped into
+    ``res_list`` (sorted) and snapped DOWN to a listed resolution
+    (coarser => fewer cells; never exceeds the fan-out target)."""
+    r = max(res_list[0], min(res_list[-1], C.choose_res(dim, target_cells)))
+    return max(x for x in res_list if x <= r)
+
+
+def _check_how(
+    op: str, how: str, left: DataFrame, left_id: str | None,
+    right: DataFrame, right_id: str | None, id_params: tuple[str, str],
+) -> None:
+    """Validate ``how`` and, for an outer variant, that the preserved
+    side's id names one of its columns (``id_params``: the op's
+    parameter names for the left and right id)."""
+    if how not in ("inner", "left", "right"):
+        raise ValueError(f"{op}: how={how!r} unsupported; one of 'inner', 'left', 'right'")
+    for side, df, col, param in (
+        ("left", left, left_id, id_params[0]), ("right", right, right_id, id_params[1])
+    ):
+        if how == side and (col is None or col not in df.columns):
+            raise ValueError(f"{op}: how={side!r} requires {param} naming a {side}-side column")
+
+
+def _outer(
+    inner: DataFrame, how: str, left: DataFrame, right: DataFrame,
+    left_id: str | None, right_id: str | None,
+) -> DataFrame:
+    """``inner`` plus the preserved side's unmatched rows, other side's
+    columns null (``how`` 'left' or 'right'; 'inner' returns ``inner``).
+
+    The inner result is consumed TWICE (the output union and the
+    matched-id set), so it is materialized once (lazy localCheckpoint):
+    the candidate join and Arrow refine don't re-execute per consumer.
+    The backfill is a null-SAFE anti-join on the preserved side's id: a
+    matched row with a NULL id must not reappear (plain left_anti treats
+    NULL != NULL and would emit it twice, matched and null-padded)."""
+    if how == "inner":
+        return inner
+    inner = inner.localCheckpoint(eager=False)
+    preserved, id_col, other = (left, left_id, right) if how == "left" else (right, right_id, left)
+    matched = inner.select(F.col(id_col).alias("_mid")).distinct()
+    missing = preserved.join(
+        matched, on=F.col(id_col).eqNullSafe(F.col("_mid")), how="left_anti"
+    )
+    nulls = [F.lit(None).cast(other.schema[c].dataType).alias(c) for c in other.columns]
+    if how == "left":
+        return inner.unionByName(missing.select(*left.columns, *nulls))
+    return inner.unionByName(missing.select(*nulls, *right.columns))
+
+
 def points_in_polygons_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -130,15 +182,10 @@ def points_in_polygons_join(
     unique-(by, ts) requirement. NULL ids are handled (null-safe
     anti-join), but a null id can only name one row for the same reason.
     """
-    if how not in ("inner", "left", "right"):
-        raise ValueError(
-            f"points_in_polygons_join: how={how!r} unsupported; "
-            "one of 'inner', 'left', 'right'"
-        )
-    if how == "left" and (point_id is None or point_id not in points.columns):
-        raise ValueError("points_in_polygons_join: how='left' requires point_id naming a point column")
-    if how == "right" and (poly_id is None or poly_id not in polygons.columns):
-        raise ValueError("points_in_polygons_join: how='right' requires poly_id naming a polygon column")
+    _check_how(
+        "points_in_polygons_join", how, points, point_id, polygons, poly_id,
+        ("point_id", "poly_id"),
+    )
     if res == "auto":
         res = _auto_res(polygons, poly_geom)
     # tight cover is sound here: a point in a cell the polygon doesn't
@@ -185,34 +232,7 @@ def points_in_polygons_join(
         geo_udfs.point_in_polygon_lonlat(F.col("_plon"), F.col("_plat"), F.col(poly_geom))
     )
     drop = ["_cell", "_plon", "_plat", "_pbb"] + (["_salt"] if salt > 1 else [])
-    inner = refined.drop(*drop)
-    if how == "inner":
-        return inner
-    # outer variants consume the inner result TWICE (the output union
-    # and the matched-id set for the anti-join) — materialize it once
-    # (lazy localCheckpoint) so the candidate join + Arrow refine don't
-    # re-execute per consumer; at scale the inner rows are the dominant
-    # output anyway, so this is one write the plan already implies
-    inner = inner.localCheckpoint(eager=False)
-
-    def backfill(preserved: DataFrame, id_col: str) -> DataFrame:
-        # null-SAFE anti-join: a matched row with a NULL id must not
-        # reappear in the backfill (plain left_anti treats NULL != NULL
-        # and would emit the row twice — once matched, once null-padded)
-        matched = inner.select(F.col(id_col).alias("_mid")).distinct()
-        return preserved.join(
-            matched, on=F.col(id_col).eqNullSafe(F.col("_mid")), how="left_anti"
-        )
-
-    if how == "left":
-        missing = backfill(points, point_id)
-        poly_nulls = [
-            F.lit(None).cast(polygons.schema[c].dataType).alias(c) for c in polygons.columns
-        ]
-        return inner.unionByName(missing.select(*points.columns, *poly_nulls))
-    missing = backfill(polygons, poly_id)
-    pt_nulls = [F.lit(None).cast(points.schema[c].dataType).alias(c) for c in points.columns]
-    return inner.unionByName(missing.select(*pt_nulls, *polygons.columns))
+    return _outer(refined.drop(*drop), how, points, polygons, point_id, poly_id)
 
 
 def within_distance_join(
@@ -279,7 +299,6 @@ def points_in_polygons_join_multires(
     polygon used are immediate hash-miss rows in the (broadcast) join.
     """
     res_list = sorted(set(int(r) for r in resolutions))
-    lo, hi = res_list[0], res_list[-1]
 
     @pandas_udf(T.StructType([
         T.StructField("bbox", T.ArrayType(T.DoubleType())),
@@ -295,12 +314,7 @@ def points_in_polygons_join_multires(
         for buf in geom:
             g = get(buf)
             bb = kernels.bbox(g)
-            dim = max(bb[2] - bb[0], bb[3] - bb[1])
-            want = C.choose_res(dim, target_cells)
-            r = max(lo, min(hi, want))
-            # snap DOWN to the nearest allowed resolution (coarser =>
-            # fewer cells; never exceeds the fan-out target)
-            r = max(x for x in res_list if x <= r)
+            r = _snap_res(max(bb[2] - bb[0], bb[3] - bb[1]), res_list, target_cells)
             bbs.append(list(bb))
             covers.append(_geom_cover(g, r, tight=True))
             rss.append(r)
@@ -391,7 +405,6 @@ def intersects_join_multires(
     """
     right, right_geom = _disambiguate_right_geom(left, right, left_geom, right_geom)
     res_list = sorted(set(int(r) for r in resolutions))
-    lo, hi = res_list[0], res_list[-1]
 
     @pandas_udf(T.StructType([
         T.StructField("bbox", T.ArrayType(T.DoubleType())),
@@ -406,11 +419,8 @@ def intersects_join_multires(
         bbs, rss = [], []
         for buf in geom:
             bb = kernels.bbox(get(buf))
-            dim = max(bb[2] - bb[0], bb[3] - bb[1])
-            r = max(lo, min(hi, C.choose_res(dim, target_cells)))
-            r = max(x for x in res_list if x <= r)
             bbs.append(list(bb))
-            rss.append(r)
+            rss.append(_snap_res(max(bb[2] - bb[0], bb[3] - bb[1]), res_list, target_cells))
         return pd.DataFrame({"bbox": bbs, "res": rss})
 
     def emit(df, geom, bb_col):
@@ -518,12 +528,7 @@ def intersects_join(
     right, right_geom = _disambiguate_right_geom(left, right, left_geom, right_geom)
     if refine not in ("kernel", "bbox-exact"):
         raise ValueError(f"intersects_join: refine={refine!r}; one of 'kernel', 'bbox-exact'")
-    if how not in ("inner", "left", "right"):
-        raise ValueError(f"intersects_join: how={how!r} unsupported; one of 'inner', 'left', 'right'")
-    if how == "left" and (left_id is None or left_id not in left.columns):
-        raise ValueError("intersects_join: how='left' requires left_id naming a left column")
-    if how == "right" and (right_id is None or right_id not in right.columns):
-        raise ValueError("intersects_join: how='right' requires right_id naming a right column")
+    _check_how("intersects_join", how, left, left_id, right, right_id, ("left_id", "right_id"))
     if res == "auto":
         res = min(_auto_res(left, left_geom), _auto_res(right, right_geom))
     # NOTE: bbox (non-tight) covers are REQUIRED here: the reference-point
@@ -592,23 +597,7 @@ def intersects_join(
             geo_udfs.intersects_pair(F.col(left_geom), F.col(right_geom))
         )
     drop = ["_cell", lb, rb] + (["_salt"] if salt > 1 else [])
-    inner = refined.drop(*drop)
-    if how == "inner":
-        return inner
-    # same materialize-once + null-safe anti-join backfill as the PIP
-    # join's outer variants (see points_in_polygons_join)
-    inner = inner.localCheckpoint(eager=False)
-    preserved, id_col, other = (
-        (left, left_id, right) if how == "left" else (right, right_id, left)
-    )
-    matched = inner.select(F.col(id_col).alias("_mid")).distinct()
-    missing = preserved.join(
-        matched, on=F.col(id_col).eqNullSafe(F.col("_mid")), how="left_anti"
-    )
-    nulls = [F.lit(None).cast(other.schema[c].dataType).alias(c) for c in other.columns]
-    if how == "left":
-        return inner.unionByName(missing.select(*left.columns, *nulls))
-    return inner.unionByName(missing.select(*nulls, *right.columns))
+    return _outer(refined.drop(*drop), how, left, right, left_id, right_id)
 
 
 def knn_guard_meters(lon, lat, ring: int, res: int):

@@ -1293,12 +1293,12 @@ def q82_erosion_area(spark, sf_dir):
     Rectangle erosion has sharp corners, so the closed form
     (w-2d)(h-2d) is EXACT — no arc discretization term at all."""
     d = 0.05
-    # post-shuffle spread of the Arrow kernel stage: the part scan is one
-    # sub-4MB split, so without this the whole erosion kernel runs in ONE
-    # python worker (15 s at sf0.1); post-shuffle Arrow width is safe on
-    # this host (BENCH/BASELINE.md §3 — only PRE-shuffle forced splits
-    # trip the throttle)
-    return _part_rects(spark, sf_dir).repartition(32).select(
+    # post-shuffle spread of the Arrow kernel stage, as in q79: the part
+    # scan is one sub-4MB split, so without this the whole erosion kernel
+    # runs in ONE python worker (15 s at sf0.1)
+    from pda_spark.session import spread
+
+    return spread(_part_rects(spark, sf_dir)).select(
         "p_partkey",
         F.round(geo_udfs.buffer_area_planar(-d)(F.col("geom")), 6).alias("eroded_area"),
     )
