@@ -8,7 +8,6 @@ case after a cell join against a small polygon side) are decoded once via
 a bytes-keyed cache.
 
 Reference equivalents:
-- centroid_wkb      -> CentroidFromPolygon (db.py:73-84)
 - lon_/lat_         -> ST_X/ST_Y hybrid props (db.py:134-148)
 - area_sqkm         -> area_sqkm hybrid prop (db.py:150-158)
 - buffer_point      -> city buffer (db.py:243-245)
@@ -48,16 +47,6 @@ def _decode_points(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
 
 
 # ----------------------------------------------------------- scalar UDFs
-
-
-@pandas_udf(T.BinaryType())
-def centroid_wkb(geom: pd.Series) -> pd.Series:
-    get = _decode_cache()
-    lons = np.empty(len(geom))
-    lats = np.empty(len(geom))
-    for i, buf in enumerate(geom):
-        lons[i], lats[i] = kernels.centroid_3035(get(buf))
-    return pd.Series(wkb.points_vec(lons, lats))
 
 
 @pandas_udf(T.DoubleType())

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pda_spark.session import keyed_width
+
 
 def _stars(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     """One large-star (attach bigger neighbors to the local min) or
@@ -289,15 +291,15 @@ def triangle_counts(
     # AQE's size-based coalescing squeezed it onto ~10 tasks (q127 8.9 s
     # at sf0.1). A user count is exempt from coalescing, the self-join
     # on "a" reuses the one exchange (localCheckpoint preserves the
-    # partitioning), and 2x parallelism keeps the apex-skew tail short.
-    n_par = edges.sparkSession.sparkContext.defaultParallelism
+    # partitioning), and 2x parallelism (session.keyed_width) keeps the
+    # apex-skew tail short.
     o = (
         er.select(
             F.when(low_first, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(low_first, F.col("v")).otherwise(F.col("u")).alias("b"),
             F.greatest("_ru", "_rv").alias("rb"),
         )
-        .repartition(2 * n_par, "a")
+        .repartition(keyed_width(edges), "a")
         .localCheckpoint(eager=False)
     )
     wedges = (

@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pda_spark.session import spread
+
 
 def _dot(a: str, b: str) -> F.Column:
     # NOTE (round-7 measured NON-fix): unrolling this into a fixed-dim
@@ -34,15 +36,6 @@ def _dot(a: str, b: str) -> F.Column:
 
 def _norm(a: str) -> F.Column:
     return F.sqrt(F.expr(f"aggregate({a}, 0.0D, (acc, v) -> acc + cast(v as double) * cast(v as double))"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the vector table before an O(candidates) pair stage
-    (the r06 bench ran q34's 14M-pair refine on TWO cores at sf1.0).
-    One shared definition: see ``pda_spark.session.spread``."""
-    from pda_spark.session import spread
-
-    return spread(df)
 
 
 def with_cosine(
@@ -79,7 +72,7 @@ def cosine_topk(
     BEFORE ranking (e.g. the hard-negative label-mismatch predicate);
     ``select_extra`` carries additional vector-side columns through to
     the output."""
-    cand = _spread(vectors).withColumn("_nv", _norm(vec_col)).crossJoin(
+    cand = spread(vectors).withColumn("_nv", _norm(vec_col)).crossJoin(
         F.broadcast(queries.withColumn("_nq", _norm(query_vec_col)))
     )
     if pair_filter is not None:
@@ -125,7 +118,7 @@ def cosine_neardup_pairs(
         # ONE sub-4MB parquet split (openCostInBytes floor) and the
         # whole n^2 runs in a single task; this is pure JVM (no Arrow
         # workers), so spreading is safe on this host
-        a = _spread(
+        a = spread(
             vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
         ).withColumn("_na", _norm("_va"))
         b = vectors.select(
@@ -155,16 +148,16 @@ def cosine_neardup_pairs(
 
     planes = hyperplanes(dim, n_planes, seed)
     masks = probe_masks(n_planes, probe_radius)
-    # _spread before the bucket expressions (8 HOF dots per vector — the
+    # spread before the bucket expressions (8 HOF dots per vector — the
     # 2-split scan would cap them at 2 cores); the bucket shuffle that
     # feeds the cogroup follows anyway
-    av = _spread(
+    av = spread(
         vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     ).withColumn("_home", lsh_bucket_expr("_va", planes))
     av = av.withColumn(
         "_bucket", F.explode(F.array(*[F.col("_home").bitwiseXOR(F.lit(m)) for m in masks]))
     ).drop("_home")
-    bv = _spread(
+    bv = spread(
         vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     ).withColumn("_bucket", lsh_bucket_expr("_vb", planes))
     pre_thresh = threshold - 1e-6
@@ -370,7 +363,7 @@ def ivf_topk(
             ]
         )
 
-    v = _spread(vectors).withColumn("_sc", scores(vec_col)).withColumn(
+    v = spread(vectors).withColumn("_sc", scores(vec_col)).withColumn(
         "_cid", F.array_position(F.col("_sc"), F.array_max(F.col("_sc")))
     ).drop("_sc")
     probe_structs = F.array(
@@ -459,7 +452,7 @@ def lsh_ann_topk(
     """
     planes = hyperplanes(dim, n_planes, seed)
     masks = probe_masks(n_planes, probe_radius)
-    v = _spread(vectors).withColumn("_bucket", lsh_bucket_expr(vec_col, planes))
+    v = spread(vectors).withColumn("_bucket", lsh_bucket_expr(vec_col, planes))
     q = queries.withColumn("_home", lsh_bucket_expr(query_vec_col, planes))
     q = q.withColumn(
         "_bucket",

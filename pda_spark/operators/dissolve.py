@@ -274,28 +274,26 @@ def dissolve(
             # explicit partition counts on the keyed exchanges (see
             # session.keyed_width): AQE would coalesce these
             # compute-heavy, few-byte stages onto a handful of tasks
-            n = land_cover.sparkSession.sparkContext.defaultParallelism
             per_tile = (
                 pieces.repartition(keyed_width(land_cover), "key", "ix", "iy")
                 .groupBy("key", "ix", "iy")
                 .applyInPandas(_dissolve_cell_fn, _CELL_UNION_SCHEMA)
             )
             return (
-                per_tile.repartition(n, "key")
+                per_tile.repartition(keyed_width(land_cover), "key")
                 .groupBy("key")
                 .applyInPandas(_merge_union_fn, DISSOLVE_SCHEMA)
             )
         cells_res = None
     if cells_res is not None:
         pieces = cell_pieces(land_cover, cells_res, geom=geom, key_col=key)
-        n = land_cover.sparkSession.sparkContext.defaultParallelism
         per_cell = (
             pieces.repartition(keyed_width(land_cover), "key", "cell")
             .groupBy("key", "cell")
             .applyInPandas(_dissolve_cell_fn, _CELL_UNION_SCHEMA)
         )
         return (
-            per_cell.repartition(n, "key")
+            per_cell.repartition(keyed_width(land_cover), "key")
             .groupBy("key")
             .applyInPandas(_merge_union_fn, DISSOLVE_SCHEMA)
         )
@@ -314,9 +312,7 @@ def dissolve(
     # explicit count for the same AQE-coalescing reason as above: one
     # scanline union per key is heavy compute on few bytes
     return (
-        land_cover.repartition(
-            land_cover.sparkSession.sparkContext.defaultParallelism, key
-        )
+        land_cover.repartition(keyed_width(land_cover), key)
         .groupBy(key)
         .applyInPandas(fn, DISSOLVE_SCHEMA)
     )
@@ -427,7 +423,6 @@ def coverage(
     # explicit partition counts (see session.keyed_width): scanline work
     # is compute-heavy on few bytes, so AQE's size-based coalescing
     # would squeeze these keyed stages onto a handful of tasks
-    n_par = land_cover.sparkSession.sparkContext.defaultParallelism
     per_cell_df = (
         tagged.repartition(keyed_width(land_cover), "key", "cell")
         .groupBy("key", "cell")
@@ -451,7 +446,7 @@ def coverage(
         )
 
     return (
-        per_cell_df.repartition(n_par, "key")
+        per_cell_df.repartition(keyed_width(land_cover), "key")
         .groupBy("key")
         .applyInPandas(merge, COVERAGE_SCHEMA)
     )

@@ -25,7 +25,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from pda_spark.operators import tiling
-    from pda_spark.plans.registry import _mk_box
+    from pda_spark.plans.fixtures import _mk_box
     from pda_spark.session import get_spark
 
     spark = get_spark("pda-tiles", cores=CORES, shuffle_partitions=2 * CORES)

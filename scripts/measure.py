@@ -101,15 +101,11 @@ def _q42_knn_candidates(spark, sf_dir):
     """q42 with exact=True localCheckpoints the candidate result, so its
     explain shows only the checkpoint scan; this is the real ring-join
     DAG (the exact=False plan, identical up to the guard loop)."""
-    from pda_spark.geo import wkb as W
     from pda_spark.operators import spatial_join
-    from pda_spark.plans import registry
+    from pda_spark.plans.fixtures import _event_points, _knn_query_table
 
-    pts = registry._event_points(spark, sf_dir).select("event_id", "lon", "lat")
-    queries = spark.createDataFrame(
-        [(q[0], bytearray(W.point(q[1], q[2]))) for q in registry.KNN_QUERIES],
-        "query_id int, qgeom binary",
-    )
+    pts = _event_points(spark, sf_dir).select("event_id", "lon", "lat")
+    queries = _knn_query_table(spark)
     return spatial_join.knn_join(
         pts, queries, k=5, res=6, max_ring=2, metric="degrees",
         tiebreak="event_id", lonlat_cols=("lon", "lat"), exact=False,
@@ -223,7 +219,7 @@ def _write_bench(name: str, result: dict) -> None:
 
 
 def _gen_points(spark, rows, out):
-    from pda_spark.plans.registry import _mk_point
+    from pda_spark.plans.fixtures import _mk_point
 
     pts = (
         spark.range(0, rows, numPartitions=128)
@@ -236,19 +232,15 @@ def _gen_points(spark, rows, out):
 
 
 def _job_pip(spark, src, rows, width, wkb=False):
-    from pda_spark.geo import wkb as W
     from pda_spark.operators import spatial_join
-    from pda_spark.plans.registry import BOXES
+    from pda_spark.plans.fixtures import _box_table
 
     # no repartition: the generator wrote 128 files, so the scan is
     # parallel at both levels, and the polygon side broadcasts; an input
     # repartition adds a cross-executor shuffle the single-JVM level
     # never pays (it inverted 1x2-vs-4x2 scaling at 32M points)
     pts = spark.read.parquet(src)
-    boxes = spark.createDataFrame(
-        [(b[0], bytearray(W.box(b[1], b[2], b[3], b[4]))) for b in BOXES],
-        "box_id int, box_geom binary",
-    )
+    boxes = _box_table(spark)
 
     def run(df):
         if wkb:

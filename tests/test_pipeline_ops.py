@@ -306,7 +306,7 @@ def test_kmeans_pinned_centroids_reproduce(spark):
     the pinned oracle literals and the fit implementation)."""
     import json
 
-    from pda_spark.plans.registry import _IVF_PINNED
+    from pda_spark.plans.vectors import _IVF_PINNED
 
     with open(_IVF_PINNED) as f:
         pinned = json.load(f)

@@ -715,7 +715,7 @@ def test_intersects_multires_brute_force_parity(spark):
     from pyspark.sql import functions as SF
 
     from pda_spark.operators import spatial_join
-    from pda_spark.plans.registry import _mk_box
+    from pda_spark.plans.fixtures import _mk_box
 
     def mk(prefix, n, seed, off):
         # `off` keeps the two sides' box edges off each other's grid —
@@ -762,7 +762,7 @@ def test_intersects_join_same_geom_name_disambiguated(spark):
     from pyspark.sql import functions as SF
 
     from pda_spark.operators import spatial_join
-    from pda_spark.plans.registry import _mk_box
+    from pda_spark.plans.fixtures import _mk_box
 
     def mk(n, seed, off):
         d = spark.range(n).select(
