@@ -12,7 +12,7 @@ Reference equivalents:
 - area_sqkm         -> area_sqkm hybrid prop (db.py:150-158)
 - buffer_point      -> city buffer (db.py:243-245)
 - intersects_pair   -> ST_Intersects join predicate (db.py:116-122)
-- cover_cells/point_cell -> replaces GiST index (see pda_spark.geo.cells)
+- cover_cells/point_cell_lonlat -> replaces GiST index (see pda_spark.geo.cells)
 """
 
 from __future__ import annotations
@@ -306,17 +306,6 @@ def geojson_feature(geom_col, id_col, props_col):
 # ----------------------------------------------------------- cell UDFs
 
 
-def point_cell(res: int):
-    """Cell id of point geometries — fully vectorized."""
-
-    @pandas_udf(T.LongType())
-    def _cell(geom: pd.Series) -> pd.Series:
-        lon, lat = _decode_points(geom)
-        return pd.Series(cells.cell_of(lon, lat, res))
-
-    return _cell
-
-
 def point_cell_lonlat(res: int):
     """One decode pass returning struct(cell, lon, lat) for point WKBs —
     the lon/lat ride along so the join can bbox-prefilter candidates
@@ -338,22 +327,13 @@ def point_cell_lonlat(res: int):
     return _cell.asNondeterministic()
 
 
-def lonlat_cell(res: int):
-    """Cell id from plain lon/lat double columns — no WKB decode at all."""
-
-    @pandas_udf(T.LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cells.cell_of(lon.to_numpy(), lat.to_numpy(), res))
-
-    return _cell
-
-
-def _geom_cover(g, res: int, tight: bool) -> list[int]:
-    """bbox cover of one decoded geometry, optionally tight-filtered
-    (drop cells whose rectangle doesn't intersect the geometry — the
-    tight-cover soundness invariant shared by every cover UDF)."""
+def _geom_cover(g, res: int) -> list[int]:
+    """Tight cover of one decoded geometry: its bbox cover minus the
+    cells whose rectangle doesn't intersect the geometry (the tight-cover
+    soundness invariant shared by every cover UDF; a bbox cover of at
+    most 4 cells is kept whole)."""
     cover = cells.cover_bbox(*kernels.bbox(g), res)
-    if tight and len(cover) > 4:
+    if len(cover) > 4:
         return [
             int(cid)
             for cid in cover
@@ -362,24 +342,24 @@ def _geom_cover(g, res: int, tight: bool) -> list[int]:
     return [int(c) for c in cover]
 
 
-def cover_cells(res: int, tight: bool = True):
-    """Cover cells of polygonal geometries (array<long>, to be exploded).
-
-    ``tight=True`` drops bbox-cover cells whose rectangle doesn't actually
-    intersect the geometry — cuts cell-join fan-out for slanted footprints
-    (SURVEY §7 'fan-out control').
+def cover_cells(res: int):
+    """Tight cover cells of polygonal geometries (array<long>, to be
+    exploded): bbox-cover cells whose rectangle doesn't actually
+    intersect the geometry are dropped, which cuts cell-join fan-out for
+    slanted footprints (SURVEY §7 'fan-out control'). A bbox cover is
+    ``cover_cells_bbox_expr``, with no Python stage.
     """
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _cover(geom: pd.Series) -> pd.Series:
         get = _decode_cache()
-        return pd.Series([_geom_cover(get(buf), res, tight) for buf in geom])
+        return pd.Series([_geom_cover(get(buf), res) for buf in geom])
 
     return _cover
 
 
-def bbox_cover_struct(res: int, tight: bool = True):
-    """bbox AND cover cells in ONE decode pass -> struct(bbox, cells).
+def bbox_cover_struct(res: int):
+    """bbox AND tight cover cells in ONE decode pass -> struct(bbox, cells).
     Chaining bbox_arr + cover_cells costs a second Python worker per
     task (and doubles the per-action worker spin-up fixed cost on small
     broadcast sides); this fuses them."""
@@ -394,7 +374,7 @@ def bbox_cover_struct(res: int, tight: bool = True):
         for buf in geom:
             g = get(buf)
             bbs.append(list(kernels.bbox(g)))
-            covers.append(_geom_cover(g, res, tight))
+            covers.append(_geom_cover(g, res))
         return pd.DataFrame({"bbox": bbs, "cells": covers})
 
     # single evaluation per row (see point_cell_lonlat): Catalyst would

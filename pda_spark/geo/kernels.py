@@ -469,11 +469,6 @@ def polys_contains(ga: wkb.Geom, gb: wkb.Geom) -> bool:
     return True
 
 
-def polys_within(ga: wkb.Geom, gb: wkb.Geom) -> bool:
-    """ST_Within(A, B) == ST_Contains(B, A)."""
-    return polys_contains(gb, ga)
-
-
 def is_axis_rect(g: wkb.Geom) -> bool:
     """True iff the geometry is a single closed axis-aligned rectangle
     (5-point ring, every edge horizontal or vertical). For such a pair,
@@ -616,61 +611,6 @@ def clip_convex(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
     if len(out) < 3:
         return np.empty((0, 2))
     return wkb.close_ring(np.asarray(out))
-
-
-def intersection_area(ga: wkb.Geom, gb: wkb.Geom) -> float:
-    """Exact planar intersection area. Fast path: Sutherland–Hodgman when
-    one operand of a pair is convex (and neither has holes); otherwise the
-    scanline kernel (geo.sweep) computes the exact answer for arbitrary
-    simple polygons with holes — no convexity contract to violate."""
-    pa, pb = ga.polygons(), gb.polygons()
-    simple = all(len(r) == 1 for r in pa) and all(len(r) == 1 for r in pb)
-    if simple and (all(is_convex(r[0]) for r in pa) or all(is_convex(r[0]) for r in pb)):
-        total = 0.0
-        for ra in pa:
-            for rb in pb:
-                if is_convex(rb[0]):
-                    subject, clip = ra[0], rb[0]
-                else:
-                    subject, clip = rb[0], ra[0]
-                ring = clip_convex(subject, clip)
-                if len(ring):
-                    total += abs(ring_area_signed(ring))
-        return total
-    from pda_spark.geo import sweep
-
-    return sweep.intersect_union_area(pa, pb)
-
-
-def union_intersection_area(target: wkb.Geom, others: list[wkb.Geom], max_exact: int = 20) -> float:
-    """area(target ∩ union(others)) via inclusion–exclusion.
-
-    Exact when target and all others are convex (intersections of convex
-    sets stay convex). Used for the reference's coverage query
-    (/root/reference/app/query.py:143-192) at golden-test scale; the
-    100 TB path is the tile/zonal approximation in operators.tiling.
-    """
-    rings = []
-    for g in others:
-        for p in g.polygons():
-            rings.append(p[0])
-    if len(rings) > max_exact:
-        raise ValueError(f"{len(rings)} polygons > max_exact={max_exact}; use tiling path")
-    total = 0.0
-    n = len(rings)
-    tring = target.polygons()[0][0]
-
-    def rec(start: int, current: np.ndarray, depth: int):
-        nonlocal total
-        for i in range(start, n):
-            clipped = clip_convex(current, rings[i]) if is_convex(rings[i]) else clip_convex(rings[i], current)
-            if len(clipped) == 0:
-                continue
-            total += ((-1) ** depth) * abs(ring_area_signed(clipped))
-            rec(i + 1, clipped, depth + 1)
-
-    rec(0, tring, 0)
-    return total
 
 
 def polys_intersect_batch(

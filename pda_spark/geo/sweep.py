@@ -2,7 +2,7 @@
 polygons with holes — union area, union∩union area, and dissolved
 (union) geometry as a y-monotone trapezoid decomposition.
 
-This replaces the convex-only inclusion–exclusion path for the engine's
+This replaced the convex-only inclusion–exclusion path for the engine's
 ST_UNION / coverage semantics (reference: ST_UNION GROUP BY at
 /root/reference/app/query.py:195-213 and the coverage ratio at
 app/query.py:143-192). PostGIS gets these from GEOS; we re-derive them
@@ -23,13 +23,12 @@ Algorithm (vertical decomposition):
    is L(y_mid) * slab_height.
 
 Cost: O((V + X) * E) for V vertices, X edge crossings, E edges — always
-polynomial (the inclusion–exclusion path is exponential in overlap
-count). The per-cell subproblems of the tiling scale path keep E small,
+polynomial (inclusion–exclusion is exponential in overlap count). The per-cell subproblems of the tiling scale path keep E small,
 so this is also the 100 TB inner kernel.
 
 Exactness: float64 arithmetic on exact slab topology — equal to the
 algebraic answer up to IEEE754 rounding (verified against shoelace /
-inclusion–exclusion oracles in tests/test_geo_kernels.py).
+inclusion–exclusion oracles in tests/test_sweep_dissolve.py).
 """
 
 from __future__ import annotations

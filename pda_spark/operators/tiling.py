@@ -10,11 +10,11 @@ Two layers:
    of a zonal join and a plain equi-join key against any tiled point /
    raster table.
 
-2. ``union_area_by_cells`` — the SCALE path for the dissolve/coverage
-   UDAF (operators/dissolve.py is exact but inclusion-exclusion is
-   exponential in overlapping-ring count). Cells partition the plane, so
-   area(union(polys)) == sum over cells of area(union(polys clipped to
-   cell)). Clipping to a cell box is an exact Sutherland-Hodgman convex
+2. ``union_area_by_cells`` — the area-only, cell-partitioned face of
+   the dissolve UDAF (operators/dissolve.py runs the same scanline
+   union and also emits the dissolved geometry). Cells partition the
+   plane, so area(union(polys)) == sum over cells of area(union(polys
+   clipped to cell)). Clipping to a cell box is an exact Sutherland-Hodgman convex
    clip, each per-cell subproblem is small (bounded by local overlap
    density), and the whole computation is one explode + one grouped
    aggregation — the partial/final split of a geometric UDAF, with the
@@ -51,7 +51,7 @@ def rasterize_polygons(
     polygon.
     """
     if tight:
-        cover = F.explode(geo_udfs.cover_cells(res, tight=True)(F.col(geom)))
+        cover = F.explode(geo_udfs.cover_cells(res)(F.col(geom)))
         out = polygons.select(F.col(key).alias("key"), cover.alias("tile"))
     else:
         bb = geo_udfs.bbox_arr(F.col(geom))
@@ -61,38 +61,6 @@ def rasterize_polygons(
         )
         out = tmp.select("key", F.explode(cover).alias("tile"))
     return out.dropDuplicates(["key", "tile"])
-
-
-def cluster_by_cell(df: DataFrame, cell_col: str = "tile", num_partitions: int | None = None) -> DataFrame:
-    """Range-partition + sort by cell id before writing (the north-star's
-    'repartitionByRange on cell id'): output parquet files then hold
-    disjoint, sorted cell ranges, so any downstream cell-range predicate
-    prunes whole files via parquet min/max stats, and cell-keyed
-    merge-joins read co-located data. Spatially adjacent cells share the
-    int64 prefix (res<<58|ix<<29|iy), so ranges are also spatially
-    coherent per x-stripe."""
-    parts = [num_partitions] if num_partitions else []
-    return df.repartitionByRange(*parts, F.col(cell_col)).sortWithinPartitions(cell_col)
-
-
-def zonal_count_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    res: int,
-    key: str = "featureclass",
-    poly_geom: str = "geom",
-    point_tile: str = "tile",
-) -> DataFrame:
-    """Zonal statistics: per polygon-class count of tiled points. The
-    raster side is broadcast when small; the point side never shuffles
-    (pre-tiled fact table). Approximate by construction at coarse ``res``
-    (tile granularity) — the exact path is points_in_polygons_join."""
-    raster = rasterize_polygons(polygons, res, key=key, geom=poly_geom)
-    return (
-        points.join(F.broadcast(raster), points[point_tile] == raster["tile"], "inner")
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-    )
 
 
 _PARTIAL_SCHEMA = T.StructType(

@@ -65,10 +65,10 @@ FROM stats
 
 def q44_tile_zonal(spark, sf_dir):
     """Zonal raster<->vector join: count points per (tile, box) pair —
-    tile assignment through the vectorized kernel UDF this time."""
+    tile assignment is the Catalyst cell expression (no Python stage)."""
     res = 6
     pts = _event_points(spark, sf_dir)
-    pts = pts.withColumn("tile", geo_udfs.lonlat_cell(res)(F.col("lon"), F.col("lat")))
+    pts = pts.withColumn("tile", geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res))
     pts = pts.withColumn("geom", _mk_point(F.col("lon"), F.col("lat")))
     boxes = _box_table(spark)
     joined = spatial_join.points_in_polygons_join(
@@ -101,7 +101,7 @@ def q83_zonal_stats(spark, sf_dir):
     engine; the mean is ONE double division at the end."""
     res = 6
     pts = _event_points(spark, sf_dir)
-    pts = pts.withColumn("tile", geo_udfs.lonlat_cell(res)(F.col("lon"), F.col("lat")))
+    pts = pts.withColumn("tile", geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res))
     pts = pts.withColumn("geom", _mk_point(F.col("lon"), F.col("lat")))
     pts = pts.withColumn("cents", F.floor(F.col("value") * 100.0).cast("long"))
     boxes = _box_table(spark)

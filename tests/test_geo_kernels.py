@@ -146,22 +146,6 @@ def test_clip_convex_exact():
     assert abs(kernels.ring_area_signed(ring)) == pytest.approx(4.0)
 
 
-def test_intersection_area(fake_poly):
-    clip = wkb.decode(wkb.box(0, 50.16996707220397, 20.023127886233997, 60.15824184521428))
-    # fake polygon fully inside its own bbox -> intersection == own area
-    a = kernels.intersection_area(fake_poly, clip)
-    assert a == pytest.approx(kernels.area_planar(fake_poly), rel=1e-12)
-
-
-def test_union_intersection_area_inclusion_exclusion():
-    target = wkb.decode(wkb.box(0, 0, 10, 10))
-    # two overlapping boxes inside the target: area of union = 4+4-1 = 7
-    b1 = wkb.decode(wkb.box(1, 1, 3, 3))
-    b2 = wkb.decode(wkb.box(2, 2, 4, 4))
-    a = kernels.union_intersection_area(target, [b1, b2])
-    assert a == pytest.approx(7.0)
-
-
 def test_cells_roundtrip():
     cid = cells.cell_of(np.array([13.4]), np.array([52.5]), 10)[0]
     minx, miny, maxx, maxy = cells.cell_bounds(int(cid))
@@ -489,7 +473,6 @@ def test_polys_contains_semantics():
     assert not kernels.polys_contains(A, overlapping)
     assert not kernels.polys_contains(A, outside)
     assert not kernels.polys_contains(inner, A)
-    assert kernels.polys_within(inner, A)
     # holes: B inside A's hole -> not contained; B overlapping the hole
     # boundary -> not contained; B swallowing the hole whole -> not
     # contained (zero crossings, the dedicated hole-vertex test)

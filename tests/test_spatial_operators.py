@@ -519,13 +519,14 @@ def test_auto_res_bounds_mixed_size_fanout(spark):
     res = spatial_join._auto_res(poly_df, "pgeom")
     assert 2 <= res <= 12
     # fan-out cap: even the p95+ geometries cover a bounded cell count
-    fan = poly_df.select(F.size(G.cover_cells(res, tight=False)(F.col("pgeom"))).alias("n"))
+    bb = poly_df.select(G.bbox_arr(F.col("pgeom")).alias("bb"))
+    cover = G.cover_cells_bbox_expr(F.col("bb")[0], F.col("bb")[1], F.col("bb")[2], F.col("bb")[3], res)
+    fan = bb.select(F.size(cover).alias("n"))
     mx = fan.agg(F.max("n")).first()[0]
     assert mx <= 64, f"res={res} max fan-out {mx}"
 
     auto = spatial_join.points_in_polygons_join(
         pts, poly_df, res="auto", poly_geom="pgeom", lonlat_cols=("lon", "lat"),
-        broadcast_polygons=True,
     )
     fixed = spatial_join.points_in_polygons_join(
         pts, poly_df, res=7, poly_geom="pgeom", lonlat_cols=("lon", "lat"),

@@ -22,6 +22,33 @@ U_SHAPE = np.array(
 )
 
 
+def union_area_convex(rings: list[np.ndarray], max_exact: int = 22) -> float:
+    """Exact union area of CONVEX rings via inclusion–exclusion: the
+    independent oracle the scanline kernel is checked against
+    (exponential in overlap count and convex-only, so test-scale only)."""
+    n = len(rings)
+    if n == 0:
+        return 0.0
+    if n > max_exact:
+        raise ValueError(f"{n} rings > max_exact={max_exact}: use geo.sweep.union_area")
+    for r in rings:
+        if not kernels.is_convex(r):
+            raise ValueError("union_area_convex: non-convex ring (use geo.sweep.union_area)")
+    total = 0.0
+
+    def rec(start: int, current: np.ndarray, depth: int):
+        nonlocal total
+        total += ((-1) ** depth) * abs(kernels.ring_area_signed(current))
+        for i in range(start, n):
+            clipped = kernels.clip_convex(current, rings[i])
+            if len(clipped):
+                rec(i + 1, clipped, depth + 1)
+
+    for i in range(n):
+        rec(i + 1, wkb.close_ring(rings[i]), 0)
+    return total
+
+
 # ------------------------------------------------------------ pure kernel
 
 
@@ -44,7 +71,7 @@ def test_sweep_matches_inclusion_exclusion_on_convex():
             r = rng.uniform(0.3, 1.5)
             th = np.sort(rng.uniform(0, 2 * np.pi, 12))
             rings.append(np.column_stack([cx + r * np.cos(th), cy + r * np.sin(th)]))
-        exact = dissolve.union_area_convex([wkb.close_ring(r) for r in rings])
+        exact = union_area_convex([wkb.close_ring(r) for r in rings])
         got = sweep.union_area([[r] for r in rings])
         assert got == pytest.approx(exact, rel=1e-12)
 
@@ -76,24 +103,14 @@ def test_sweep_union_geometry_partitions_union():
 
 
 def test_sweep_many_overlapping_rings_polynomial():
-    """>22 overlapping rings: the legacy inclusion–exclusion path raises;
+    """>22 overlapping rings: the inclusion–exclusion oracle raises;
     the sweep kernel must give the exact answer cheaply. 40 concentric
     shifted squares whose union is computable in closed form."""
     rings = [sq(i * 0.1, 0, i * 0.1 + 1.0, 1.0) for i in range(40)]
     with pytest.raises(ValueError):
-        dissolve.union_area_convex([wkb.close_ring(r) for r in rings])
+        union_area_convex([wkb.close_ring(r) for r in rings])
     # union = bounding box [0, 4.9] x [0, 1]
     assert sweep.union_area([[r] for r in rings]) == pytest.approx(4.9)
-
-
-def test_intersection_area_nonconvex_fallback():
-    ga = wkb.decode(wkb.polygon([U_SHAPE]))
-    gb = wkb.decode(wkb.polygon([L_SHAPE + np.array([0.5, 0.0])]))
-    # neither convex: round 1 raised here; now exact via sweep
-    got = kernels.intersection_area(ga, gb)
-    brute = sweep.intersect_union_area([[U_SHAPE]], [[L_SHAPE + np.array([0.5, 0.0])]])
-    assert got == pytest.approx(brute, rel=1e-12)
-    assert got > 0
 
 
 # ------------------------------------------------------- Spark operators
@@ -135,24 +152,30 @@ def test_dissolve_nonconvex_holes(spark, holed_world):
     assert list(got) == [False, True, True, True, False]  # hole center excluded
 
 
-def test_dissolve_cell_routed_matches(spark, holed_world):
+def test_dissolve_cell_routed_matches(spark, holed_world, monkeypatch):
+    """The planar-grid route (forced by a zero routing threshold) gives
+    the single-task route's exact area and geometry on non-convex,
+    holed polygons."""
     lc, _ = holed_world
     exact = {r["featureclass"]: r["union_area"] for r in dissolve.dissolve(lc).collect()}
-    for res in (3, 6):
-        cellr = dissolve.dissolve(lc, cells_res=res).collect()
-        got = {r["featureclass"]: r["union_area"] for r in cellr}
-        assert got.keys() == exact.keys()
-        for k in exact:
-            assert got[k] == pytest.approx(exact[k], rel=1e-9), f"{k} res={res}"
-        # cell-routed geometry also partitions the union exactly
-        for r in cellr:
-            g = wkb.decode(bytes(r["geom"]))
-            assert kernels.area_planar(g) == pytest.approx(exact[r["featureclass"]], rel=1e-9)
+    monkeypatch.setattr(dissolve, "AUTO_ROUTE_PIECES", 0)
+    out = dissolve.dissolve(lc)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 2, "not grid-routed"
+    gridr = out.collect()
+    got = {r["featureclass"]: r["union_area"] for r in gridr}
+    assert got.keys() == exact.keys()
+    for k in exact:
+        assert got[k] == pytest.approx(exact[k], rel=1e-9), k
+    # grid-routed geometry also partitions the union exactly
+    for r in gridr:
+        g = wkb.decode(bytes(r["geom"]))
+        assert kernels.area_planar(g) == pytest.approx(exact[r["featureclass"]], rel=1e-9)
 
 
-def test_dissolve_auto_routes_hot_key(spark):
+def test_dissolve_auto_routes_hot_key(spark, monkeypatch):
     """Round-3 auto-routing: a hot key above the piece threshold must be
-    dissolved via the cell-partitioned path (no single straggler task),
+    dissolved via the grid-partitioned path (no single straggler task),
     with EXACT area parity against a numpy 1D interval-union oracle
     (boxes share one y-band, so union area = interval union x height)."""
     n = 6000
@@ -176,22 +199,19 @@ def test_dissolve_auto_routes_hot_key(spark):
             cur1 = max(cur1, b)
     area += cur1 - cur0
 
-    out = dissolve.dissolve(df, cells_res="auto", route_threshold=1000)
-    # the auto decision must have picked the cell path: two grouped
-    # pandas stages (per-cell union + per-key merge) instead of one
+    monkeypatch.setattr(dissolve, "AUTO_ROUTE_PIECES", 1000)
+    out = dissolve.dissolve(df)
+    # the auto decision must have picked the grid path: two grouped
+    # pandas stages (per-tile union + per-key merge) instead of one
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 2, "hot key was not cell-routed"
+    assert plan.count("FlatMapGroupsInPandas") == 2, "hot key was not grid-routed"
     got = {r["featureclass"]: r["union_area"] for r in out.collect()}
     assert got["hot"] == pytest.approx(area, rel=1e-12)
     assert got["cold"] == pytest.approx(5.0, rel=1e-12)
 
     # below the threshold the same input stays on the one-task path
-    plan2 = (
-        dissolve.dissolve(df, cells_res="auto", route_threshold=100_000)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    monkeypatch.setattr(dissolve, "AUTO_ROUTE_PIECES", 100_000)
+    plan2 = dissolve.dissolve(df)._jdf.queryExecution().optimizedPlan().toString()
     assert plan2.count("FlatMapGroupsInPandas") == 1
 
 

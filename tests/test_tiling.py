@@ -1,5 +1,6 @@
-"""Tiling / zonal operators: rasterization, zonal counts, and the
-cell-partitioned union area (scale path) vs the exact dissolve UDAF."""
+"""Tiling / zonal operators: rasterization, the Catalyst cell
+expressions, and the cell-partitioned union area vs the exact dissolve
+UDAF."""
 
 import re
 
@@ -26,7 +27,7 @@ def test_rasterize_dedups(spark, world):
 
 def test_union_area_by_cells_matches_exact(spark, world):
     """The cell-partitioned union area must equal the exact
-    inclusion-exclusion dissolve, for every featureclass, at any res."""
+    single-task dissolve, for every featureclass, at any res."""
     exact = {
         r["featureclass"]: r["union_area"]
         for r in dissolve.dissolve(world["land_cover_classes"]).collect()
@@ -58,43 +59,10 @@ def test_union_area_by_cells_keyed_exchange_not_coalescable(spark, world):
     assert f", {keyed_width(polys)}), REPARTITION_BY_NUM" in args, plan
 
 
-def test_zonal_count_vs_exact_pip(spark, world):
-    """At fine resolution the zonal tile count converges on the exact PIP
-    count; at any resolution it is an upper bound (tiles over-cover)."""
-    from pda_spark.operators import spatial_join
-
-    pts = world["cities"].select(F.col("id").alias("pt_id"), "geom")
-    from pda_spark.functions import geo_udfs
-
-    tiled = pts.withColumn("tile", geo_udfs.point_cell(12)(F.col("geom")))
-    polys = world["land_cover_classes"]
-    zonal = {
-        r["key"]: r["n_points"]
-        for r in tiling.zonal_count_join(tiled, polys, res=12).collect()
-    }
-    exact_pairs = spatial_join.points_in_polygons_join(
-        pts, polys.select(F.col("featureclass").alias("key"), F.col("geom").alias("lc_geom")),
-        res=7, poly_geom="lc_geom",
-    )
-    # zonal counts each point once per CLASS (raster is deduped per
-    # (key, tile)); the exact join yields one row per (point, polygon) —
-    # dedup to (point, class) before comparing
-    exact = {
-        r["key"]: r["n"]
-        for r in exact_pairs.select("pt_id", "key")
-        .dropDuplicates(["pt_id", "key"])
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    for k, n_exact in exact.items():
-        assert zonal.get(k, 0) >= n_exact  # tiles over-cover
-        assert zonal[k] <= n_exact * 2 + 5  # but not wildly at res 12
-
-
 def test_cover_cells_bbox_expr_parity(spark):
     """The Catalyst bbox-cover fan-out must be bit-identical to the numpy
-    cells.cover_bbox across resolutions and domain edges."""
+    cells.cover_bbox, and the Catalyst point cell to cells.cell_of,
+    across resolutions and domain edges."""
     import numpy as np
     from pda_spark.functions import geo_udfs
     from pda_spark.geo import cells
@@ -113,6 +81,23 @@ def test_cover_cells_bbox_expr_parity(spark):
         for i, x0, y0, x1, y1 in rows:
             assert got[i] == sorted(int(c) for c in cells.cover_bbox(x0, y0, x1, y1, res)), (i, res)
 
+    # point cells: the same random rows' corners, the exact +-180/+-90
+    # edges and out-of-domain coordinates (clamped into the edge cells)
+    pts = [(x0, y0) for _, x0, y0, _, _ in rows] + [(x1, y1) for *_, x1, y1 in rows]
+    edges = (-200.0, -180.0, -0.0, 0.0, 180.0, 200.0, -90.0, 90.0, -95.0, 95.0, 1e9, -1e9)
+    pts += [(x, y) for x in edges for y in edges]
+    pdf = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)], "i int, lon double, lat double"
+    )
+    lon = np.array([x for x, _ in pts])
+    lat = np.array([y for _, y in pts])
+    for res in (3, 7, 12):
+        expr = geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res)
+        got = {r["i"]: r["c"] for r in pdf.select("i", expr.alias("c")).collect()}
+        want = cells.cell_of(lon, lat, res)
+        for i in range(len(pts)):
+            assert got[i] == int(want[i]), (pts[i], res)
+
 
 def test_rasterize_loose_equals_tight_for_boxes(spark, world):
     """For axis-aligned geometries the bbox cover IS the tight cover, so
@@ -122,22 +107,6 @@ def test_rasterize_loose_equals_tight_for_boxes(spark, world):
     a = {(r["key"], r["tile"]) for r in tiling.rasterize_polygons(lc, res=7, tight=True).collect()}
     b = {(r["key"], r["tile"]) for r in tiling.rasterize_polygons(lc, res=7, tight=False).collect()}
     assert a <= b  # tight is always a subset of bbox cover
-
-
-def test_cluster_by_cell_disjoint_ranges(spark, world):
-    """Range clustering must yield disjoint sorted cell ranges per output
-    partition (the property parquet min/max file pruning relies on)."""
-    r = tiling.rasterize_polygons(world["land_cover_classes"], res=8)
-    clustered = tiling.cluster_by_cell(r, "tile", num_partitions=8)
-    stats = (
-        clustered.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.min("tile").alias("lo"), F.max("tile").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    assert len(stats) > 1
-    for prev, cur in zip(stats, stats[1:]):
-        assert prev["hi"] <= cur["lo"]  # ranges don't interleave
 
 
 def test_focal_stats_hand_computed(spark):
