@@ -48,12 +48,18 @@ def cell_ixy(cid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return ((c >> _IX_SHIFT) & _MASK29, c & _MASK29)
 
 
+def _axis_index(v, lo: float, span: float, n: int) -> np.ndarray:
+    # Clamp in floating point before the cast, so +-inf and huge values
+    # land in the edge cells as in the Catalyst twin and cover_bbox; NaN
+    # maps to 0 like Java's (long) NaN.
+    x = np.clip((np.asarray(v, dtype=np.float64) - lo) / span * n, 0, n - 1)
+    return np.where(np.isnan(x), 0, x).astype(np.int64)
+
+
 def cell_of(lon: np.ndarray, lat: np.ndarray, res: int):
     """Cell id containing each point. Vectorized."""
     n = 1 << res
-    ix = np.clip(((np.asarray(lon) + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    iy = np.clip(((np.asarray(lat) + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
-    return cell_id(res, ix, iy)
+    return cell_id(res, _axis_index(lon, -180.0, 360.0, n), _axis_index(lat, -90.0, 180.0, n))
 
 
 def cell_bounds(cid: int) -> tuple[float, float, float, float]:

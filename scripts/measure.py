@@ -679,6 +679,8 @@ def _ensure_input(name: str, rows: int) -> None:
 def _level(name: str, n_exec: int, cpe: int, rows: int, reps: int) -> dict:
     from pyspark.sql import SparkSession
 
+    from pda_spark.session import DAEMON_MODULE
+
     leg = LEGS[name]
     pp = os.environ.get("PYTHONPATH", "")
     os.environ["PYTHONPATH"] = REPO + os.pathsep + pp if pp else REPO
@@ -688,6 +690,7 @@ def _level(name: str, n_exec: int, cpe: int, rows: int, reps: int) -> dict:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
+        "spark.python.daemon.module": DAEMON_MODULE,
         "spark.ui.enabled": "false",
         **leg.conf,
     }

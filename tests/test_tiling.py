@@ -82,9 +82,11 @@ def test_cover_cells_bbox_expr_parity(spark):
             assert got[i] == sorted(int(c) for c in cells.cover_bbox(x0, y0, x1, y1, res)), (i, res)
 
     # point cells: the same random rows' corners, the exact +-180/+-90
-    # edges and out-of-domain coordinates (clamped into the edge cells)
+    # edges and out-of-domain coordinates (clamped into the edge cells;
+    # NaN goes to index 0 like Java's (long) NaN)
     pts = [(x0, y0) for _, x0, y0, _, _ in rows] + [(x1, y1) for *_, x1, y1 in rows]
-    edges = (-200.0, -180.0, -0.0, 0.0, 180.0, 200.0, -90.0, 90.0, -95.0, 95.0, 1e9, -1e9)
+    edges = (-200.0, -180.0, -0.0, 0.0, 180.0, 200.0, -90.0, 90.0, -95.0, 95.0, 1e9, -1e9,
+             float("inf"), float("-inf"), float("nan"), 1e300, -1e300)
     pts += [(x, y) for x in edges for y in edges]
     pdf = spark.createDataFrame(
         [(i, x, y) for i, (x, y) in enumerate(pts)], "i int, lon double, lat double"
@@ -99,14 +101,33 @@ def test_cover_cells_bbox_expr_parity(spark):
             assert got[i] == int(want[i]), (pts[i], res)
 
 
-def test_rasterize_loose_equals_tight_for_boxes(spark, world):
-    """For axis-aligned geometries the bbox cover IS the tight cover, so
-    the JVM fast path must produce the identical tile set."""
-    imgs = world["sat_images"].select("id", "geom")  # fixture footprints are boxes? use land_cover
-    lc = world["land_cover_classes"]
-    a = {(r["key"], r["tile"]) for r in tiling.rasterize_polygons(lc, res=7, tight=True).collect()}
-    b = {(r["key"], r["tile"]) for r in tiling.rasterize_polygons(lc, res=7, tight=False).collect()}
-    assert a <= b  # tight is always a subset of bbox cover
+def test_rasterize_loose_equals_tight_for_boxes(spark):
+    """For axis-aligned boxes the bbox cover IS the tight cover, so the
+    JVM fast path must produce the identical tile set, including boxes
+    whose edges lie exactly on cell boundaries."""
+    import numpy as np
+
+    from pda_spark.geo import wkb
+
+    rng = np.random.default_rng(7)
+    for res in (5, 7, 10):
+        w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+        boxes = []
+        for _ in range(12):  # 1.5-6 cells a side: wider than the kept-whole 4-cell cover
+            x0, y0 = float(rng.uniform(-179, 150)), float(rng.uniform(-89, 60))
+            boxes.append((x0, y0, x0 + float(rng.uniform(1.5, 6)) * w, y0 + float(rng.uniform(1.5, 6)) * h))
+        for ix, iy, cx, cy in ((3, 5, 3, 2), (0, 0, 4, 4), ((1 << res) - 4, (1 << res) - 3, 4, 3)):
+            x0, y0 = -180.0 + ix * w, -90.0 + iy * h  # every edge on a cell boundary
+            boxes.append((x0, y0, x0 + cx * w, y0 + cy * h))
+            boxes.append((x0 + 0.3 * w, y0 + 0.4 * h, x0 + cx * w, y0 + cy * h))  # max edges only
+            boxes.append((x0, y0, x0 + (cx + 0.5) * w, y0 + (cy + 0.5) * h))  # min edges only
+        polys = spark.createDataFrame(
+            [(f"b{i}", bytearray(wkb.box(*b))) for i, b in enumerate(boxes)],
+            "featureclass string, geom binary",
+        )
+        tight = {tuple(r) for r in tiling.rasterize_polygons(polys, res=res, tight=True).collect()}
+        loose = {tuple(r) for r in tiling.rasterize_polygons(polys, res=res, tight=False).collect()}
+        assert tight == loose, (res, sorted(loose - tight)[:5], sorted(tight - loose)[:5])
 
 
 def test_focal_stats_hand_computed(spark):
