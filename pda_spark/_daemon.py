@@ -13,8 +13,11 @@ Python task of every stage even with warm reused workers.
 
 Run as the daemon, this module swaps in an ``invalidate_caches`` that
 re-reads an archive only when its ``(st_mtime_ns, st_size)`` differs
-from the stat recorded at that importer's last read, then hands over to
-``pyspark.daemon.manager()`` unchanged. Semantics are kept: a zip added
+from the stat recorded at that importer's last read, calls it once so
+the daemon's own importers hold a recorded stat, then hands over to
+``pyspark.daemon.manager()`` unchanged. Forked workers inherit those
+stats, so a new worker's first task does not re-read the archives the
+daemon already read. Semantics are kept: a zip added
 at run time (``addPyFile``) gets a new importer that reads it on first
 use, and a zip rewritten in place changes its stat and is re-read.
 Importing this module has no side effects; the patch is applied only
@@ -54,6 +57,9 @@ if __name__ == "__main__":
 
     zipimport.zipimporter.invalidate_caches = _invalidate_caches
 
+    import importlib
+
     from pyspark import daemon
 
+    importlib.invalidate_caches()
     daemon.manager()

@@ -17,8 +17,12 @@ Reference equivalents:
 
 from __future__ import annotations
 
+import math
+import re
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -543,38 +547,96 @@ def haversine_m(lon_a, lat_a, lon_b, lat_b, radius: float):
 # ------------------------------------------------- JVM-side cell helpers
 
 
+# The cell builders below emit Spark SQL text and parse it once with
+# F.expr: a chain of Column operators costs one or more py4j round trips
+# per operator on the driver (251 for one cell id), the text costs three.
+# Double literals carry the D suffix (Spark SQL reads 180.0 as DECIMAL),
+# so the analyzed plan is the one the Column chain built.
+
+# a Column the builders accept, as PySpark prints it: a column name (or
+# struct-field path), optionally with one integer element index
+_NAMED_COLUMN = re.compile(r"Column<'([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*(?:\[\d+\])?)'>")
+
+
+def _sql_arg(arg, name: str) -> str:
+    """SQL text of one argument of the cell builders: a str is SQL text
+    (a column name, ``bb[0]``, ``clon - 0.5D``, ...) and is
+    parenthesized; a ``Column`` must name a column or one element of
+    one (``F.col("lon")``, ``F.col("bb")[0]``). Any other ``Column``
+    raises ``TypeError``: rebuilding its text would cost the round trips
+    the text form exists to save."""
+    if isinstance(arg, str):
+        return f"({arg})"
+    if isinstance(arg, Column):
+        m = _NAMED_COLUMN.fullmatch(str(arg))
+        if m:
+            return m.group(1)
+    raise TypeError(
+        f"{name}={arg!r}: pass SQL text, or a Column naming a column or one element of one"
+    )
+
+
+def sql_double(v: float) -> str:
+    """A Spark SQL DOUBLE literal of ``v`` (``0.5D``; non-finite values
+    as a cast string)."""
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+
+
+def _cell_index_sql(v: str, res: int, scale: str, off: str) -> str:
+    n = 1 << res
+    return f"CAST(least(greatest(floor(({v} + {off}) / {scale} * {n}), 0), {n - 1}) AS BIGINT)"
+
+
+def _cell_base_sql(res: int) -> str:
+    return f"CAST({res} AS BIGINT) * CAST({1 << 58} AS BIGINT)"
+
+
+def cover_cells_bbox_text(minx, miny, maxx, maxy, res: int) -> str:
+    """Spark SQL text of ``cover_cells_bbox_expr`` (arguments as in
+    ``_sql_arg``), for callers that embed the cover in a larger
+    expression or projection."""
+    x0, y0, x1, y1 = (
+        _sql_arg(a, n) for a, n in ((minx, "minx"), (miny, "miny"), (maxx, "maxx"), (maxy, "maxy"))
+    )
+    ix0, ix1 = (_cell_index_sql(v, res, "360.0D", "180.0D") for v in (x0, x1))
+    iy0, iy1 = (_cell_index_sql(v, res, "180.0D", "90.0D") for v in (y0, y1))
+    return (
+        f"flatten(transform(sequence({ix0}, {ix1}), _cix -> transform(sequence({iy0}, {iy1}), "
+        f"_ciy -> {_cell_base_sql(res)} + shiftleft(_cix, 29) + _ciy)))"
+    )
+
+
 def cover_cells_bbox_expr(minx, miny, maxx, maxy, res: int):
     """bbox cover cells as a PURE Catalyst expression (array<long> via
     sequence x sequence fan-out, whole-stage codegen) — replaces the
     cover_cells Arrow UDF wherever a bbox cover suffices, removing a
     Python stage (and, chained after bbox_arr, a second Python worker
     per task). Bit-identical to cells.cover_bbox: same floor/clamp on
-    the same doubles, same res<<58|ix<<29|iy packing."""
-    n = F.lit(1 << res)
-    nm1 = F.lit((1 << res) - 1)
+    the same doubles, same res<<58|ix<<29|iy packing.
 
-    def cl(v, scale, off):
-        return F.least(F.greatest(F.floor((v + off) / scale * n), F.lit(0)), nm1).cast("long")
-
-    ix0, ix1 = cl(minx, 360.0, 180.0), cl(maxx, 360.0, 180.0)
-    iy0, iy1 = cl(miny, 180.0, 90.0), cl(maxy, 180.0, 90.0)
-    base = F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(F.sequence(iy0, iy1), lambda iy: base + F.shiftleft(ix, 29) + iy),
-        )
-    )
+    The four bounds are SQL text (``"bb[0]"``, ``"clon - 0.5D"``) or
+    Columns naming a column or an element of one (see ``_sql_arg``); the
+    expression is parsed once from ``cover_cells_bbox_text``."""
+    return F.expr(cover_cells_bbox_text(minx, miny, maxx, maxy, res))
 
 
-def cell_of_xy_expr(lon_col, lat_col, res: int):
+def cell_of_xy_text(lon, lat, res: int) -> str:
+    """Spark SQL text of ``cell_of_xy_expr`` (arguments as in
+    ``_sql_arg``)."""
+    ix = _cell_index_sql(_sql_arg(lon, "lon"), res, "360.0D", "180.0D")
+    iy = _cell_index_sql(_sql_arg(lat, "lat"), res, "180.0D", "90.0D")
+    return f"{_cell_base_sql(res)} + shiftleft({ix}, 29) + {iy}"
+
+
+def cell_of_xy_expr(lon, lat, res: int):
     """cell_of as a pure Catalyst expression (no Python) — used for the
     reference-point pair dedup inside polygon-polygon cell joins, so the
-    dedup is a codegen'd filter instead of a shuffle."""
-    n = F.lit(1 << res)
-    ix = F.least(F.greatest(F.floor((lon_col + 180.0) / 360.0 * n), F.lit(0)), n - 1).cast("long")
-    iy = F.least(F.greatest(F.floor((lat_col + 90.0) / 180.0 * n), F.lit(0)), n - 1).cast("long")
-    return (F.lit(res).cast("long") * F.lit(1 << 58).cast("long")) + F.shiftleft(ix, 29) + iy
+    dedup is a codegen'd filter instead of a shuffle. ``lon``/``lat``
+    are SQL text or Columns naming a column or an element of one (see
+    ``_sql_arg``); the expression is parsed once from
+    ``cell_of_xy_text``."""
+    return F.expr(cell_of_xy_text(lon, lat, res))
 
 
 @pandas_udf(T.BinaryType())

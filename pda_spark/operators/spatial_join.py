@@ -25,6 +25,14 @@ Physical strategy (Spark-first):
 4. REFINE  — exact kernel predicate (vectorized PIP / intersects) as an
              Arrow UDF filter.
 
+Plan construction: cell ids, covers, bbox prefilters and the dedup
+filter are written as Spark SQL text (``geo_udfs.cell_of_xy_text``,
+``cover_cells_bbox_text``) and each step adds or drops its helper
+columns in one projection. Each Column operator is a py4j round trip
+or more on the driver, and each DataFrame step is re-analyzed, so a
+Column-chain build made hundreds to thousands of round trips per call;
+the text builds the same optimized plan.
+
 Skew: pass ``salt=k`` to split hot cells: the big side gets a random salt
 in [0,k), the small side is replicated k times (explode of a literal
 array). AQE skew-join is also on (session.py) as a safety net.
@@ -40,7 +48,8 @@ making candidate lists small.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -144,6 +153,12 @@ def _outer(
     return inner.unionByName(missing.select(*nulls, *right.columns))
 
 
+def _cols(df: DataFrame) -> list[str]:
+    """``df``'s columns as quoted SQL identifiers, for the projections
+    that keep them and add or drop helper columns in one step."""
+    return ["`" + c.replace("`", "``") + "`" for c in df.columns]
+
+
 def _point_side(
     points: DataFrame, res: int, point_geom: str, lonlat_cols: tuple[str, str] | None
 ) -> DataFrame:
@@ -153,17 +168,16 @@ def _point_side(
     ``point_cell_lonlat`` pass decodes the point WKB."""
     if lonlat_cols is not None:
         lon_c, lat_c = lonlat_cols
-        return points.withColumns(
-            {
-                "_cell": geo_udfs.cell_of_xy_expr(F.col(lon_c), F.col(lat_c), res),
-                "_plon": F.col(lon_c),
-                "_plat": F.col(lat_c),
-            }
+        return points.selectExpr(
+            "*",
+            f"{geo_udfs.cell_of_xy_text(lon_c, lat_c, res)} AS _cell",
+            f"{lon_c} AS _plon",
+            f"{lat_c} AS _plat",
         )
-    pts = points.withColumn("_pc", geo_udfs.point_cell_lonlat(res)(F.col(point_geom)))
-    return pts.withColumns(
-        {"_cell": F.col("_pc.cell"), "_plon": F.col("_pc.lon"), "_plat": F.col("_pc.lat")}
-    ).drop("_pc")
+    pts = points.withColumn("_pc", geo_udfs.point_cell_lonlat(res)(point_geom))
+    return pts.selectExpr(
+        *_cols(points), "_pc.cell AS _cell", "_pc.lon AS _plon", "_pc.lat AS _plat"
+    )
 
 
 def _pip_refine(cand: DataFrame, poly_geom: str) -> DataFrame:
@@ -171,24 +185,27 @@ def _pip_refine(cand: DataFrame, poly_geom: str) -> DataFrame:
     bbox prefilter (whole-stage codegen) on the polygon's ``_pbb``: the
     Python refine sees only near-hit candidates."""
     cand = cand.filter(
-        F.col("_plon").between(F.col("_pbb")[0], F.col("_pbb")[2])
-        & F.col("_plat").between(F.col("_pbb")[1], F.col("_pbb")[3])
+        "(_plon >= _pbb[0] AND _plon <= _pbb[2]) AND (_plat >= _pbb[1] AND _plat <= _pbb[3])"
     )
-    return cand.filter(
-        geo_udfs.point_in_polygon_lonlat(F.col("_plon"), F.col("_plat"), F.col(poly_geom))
-    )
+    return cand.filter(geo_udfs.point_in_polygon_lonlat("_plon", "_plat", poly_geom))
 
 
-def _bboxes_overlap(lb: str, rb: str):
+def _bboxes_overlap(lb: str, rb: str) -> str:
     """Overlap of two [minx, miny, maxx, maxy] bbox columns, as codegen'd
-    comparisons: geometries can share a cell without their bboxes
-    overlapping, and this rejects those pairs before any Python refine."""
+    comparisons (SQL text): geometries can share a cell without their
+    bboxes overlapping, and this rejects those pairs before any Python
+    refine."""
     return (
-        (F.col(lb)[0] <= F.col(rb)[2])
-        & (F.col(rb)[0] <= F.col(lb)[2])
-        & (F.col(lb)[1] <= F.col(rb)[3])
-        & (F.col(rb)[1] <= F.col(lb)[3])
+        f"{lb}[0] <= {rb}[2] AND {rb}[0] <= {lb}[2] AND {lb}[1] <= {rb}[3] AND {rb}[1] <= {lb}[3]"
     )
+
+
+def _polygon_cover(polygons: DataFrame, cover_udf, poly_geom: str) -> DataFrame:
+    """Polygon side of a PIP cell join: one ``cover_udf`` pass (a
+    struct of bbox and cover cells), then ``_pbb`` and one row per cover
+    cell in ``_cell``."""
+    pys = polygons.withColumn("_bc", cover_udf(poly_geom))
+    return pys.selectExpr(*_cols(polygons), "_bc.bbox AS _pbb", "explode(_bc.cells) AS _cell")
 
 
 def points_in_polygons_join(
@@ -245,10 +262,7 @@ def points_in_polygons_join(
     # single Python stage (chained UDFs would spin up two workers). The
     # tight cover is sound here: a point in a cell the polygon doesn't
     # touch cannot be inside the polygon.
-    pys = polygons.withColumn("_bc", geo_udfs.bbox_cover_struct(res)(F.col(poly_geom)))
-    pys = pys.withColumns(
-        {"_pbb": F.col("_bc.bbox"), "_cell": F.explode(F.col("_bc.cells"))}
-    ).drop("_bc")
+    pys = _polygon_cover(polygons, geo_udfs.bbox_cover_struct(res), poly_geom)
     pts = _salted(pts, salt, "big")
     pys = _salted(pys, salt, "small")
     keys = ["_cell", "_salt"] if salt > 1 else ["_cell"]
@@ -287,16 +301,15 @@ def within_distance_join(
     """
     lon_c, lat_c = lonlat_cols
     clon_c, clat_c = center_lonlat_cols
-    r = float(radius)
-    cov = geo_udfs.cover_cells_bbox_expr(
-        F.col(clon_c) - r, F.col(clat_c) - r, F.col(clon_c) + r, F.col(clat_c) + r, res
+    r = geo_udfs.sql_double(radius)
+    cov = geo_udfs.cover_cells_bbox_text(
+        f"{clon_c} - {r}", f"{clat_c} - {r}", f"{clon_c} + {r}", f"{clat_c} + {r}", res
     )
-    cen = centers.withColumn("_cell", F.explode(cov))
-    pts = points.withColumn("_cell", geo_udfs.cell_of_xy_expr(F.col(lon_c), F.col(lat_c), res))
+    cen = centers.selectExpr("*", f"explode({cov}) AS _cell")
+    pts = points.selectExpr("*", f"{geo_udfs.cell_of_xy_text(lon_c, lat_c, res)} AS _cell")
     cand = pts.join(F.broadcast(cen), on="_cell", how="inner")
-    dx = F.col(lon_c) - F.col(clon_c)
-    dy = F.col(lat_c) - F.col(clat_c)
-    return cand.filter(F.sqrt(dx * dx + dy * dy) <= F.lit(r)).drop("_cell")
+    dx, dy = f"({lon_c} - {clon_c})", f"({lat_c} - {clat_c})"
+    return cand.filter(f"sqrt({dx} * {dx} + {dy} * {dy}) <= {r}").drop("_cell")
 
 
 def points_in_polygons_join_multires(
@@ -346,19 +359,15 @@ def points_in_polygons_join_multires(
             rss.append(r)
         return pd.DataFrame({"bbox": bbs, "cells": covers, "res": rss})
 
-    pys = polygons.withColumn("_bc", _bc_auto.asNondeterministic()(F.col(poly_geom)))
-    pys = pys.withColumns(
-        {"_pbb": F.col("_bc.bbox"), "_cell": F.explode(F.col("_bc.cells"))}
-    ).drop("_bc")
+    pys = _polygon_cover(polygons, _bc_auto.asNondeterministic(), poly_geom)
 
-    pts = _point_side(points, res_list[0], point_geom, lonlat_cols).drop("_cell")
-    # one cell per resolution the polygon side can use; res lives in the
-    # id's high bits, so this single column joins against every level
-    pts = pts.withColumn(
-        "_cell",
-        F.explode(
-            F.array(*[geo_udfs.cell_of_xy_expr(F.col("_plon"), F.col("_plat"), r) for r in res_list])
-        ),
+    pts = _point_side(points, res_list[0], point_geom, lonlat_cols)
+    # one cell per resolution the polygon side can use (replacing the
+    # res_list[0] one); res lives in the id's high bits, so this single
+    # column joins against every level
+    level_cells = ", ".join(geo_udfs.cell_of_xy_text("_plon", "_plat", r) for r in res_list)
+    pts = pts.selectExpr(
+        *_cols(points), "_plon", "_plat", f"explode(array({level_cells})) AS _cell"
     )
     cand = pts.join(F.broadcast(pys), on="_cell", how="inner")
     return _pip_refine(cand, poly_geom).drop("_cell", "_plon", "_plat", "_pbb")
@@ -432,55 +441,42 @@ def intersects_join_multires(
             rss.append(_snap_res(max(bb[2] - bb[0], bb[3] - bb[1]), res_list))
         return pd.DataFrame({"bbox": bbs, "res": rss})
 
-    def emit(df, geom, bb_col):
-        df = df.withColumn("_br", _br.asNondeterministic()(F.col(geom)))
-        df = df.withColumns(
-            {bb_col: F.col("_br.bbox"), "_res": F.col("_br.res")}
-        ).drop("_br")
-        def level_emit(rm: int):
-            # NOTE: the tag lambda must take exactly ONE parameter — a
-            # two-arg lambda (e.g. the `rm=rm` default-capture idiom)
-            # is interpreted by F.transform as (element, INDEX) and the
-            # level constant silently becomes the array index
-            arr = geo_udfs.cover_cells_bbox_expr(
-                F.col(bb_col)[0], F.col(bb_col)[1], F.col(bb_col)[2], F.col(bb_col)[3], rm
-            )
-            tagged = F.transform(
-                arr,
-                lambda c: F.struct(
-                    c.alias("cell"), (F.lit(rm) == F.col("_res")).alias("is_cover")
-                ),
-            )
-            # emit this level only for geometries at least as fine as it
-            return F.slice(
-                tagged, 1,
-                F.when(F.col("_res") >= rm, F.size(tagged)).otherwise(F.lit(0)),
-            )
+    def emit(df, geom, bb_col, cov_col):
+        keep = _cols(df)
+        df = df.withColumn("_br", _br.asNondeterministic()(geom))
+        df = df.selectExpr(*keep, f"_br.bbox AS {bb_col}", "_br.res AS _res")
 
-        per_level = [level_emit(rm) for rm in res_list]
-        df = df.withColumn("_e", F.explode(F.concat(*per_level)))
-        return df.withColumns(
-            {"_cell": F.col("_e.cell"), "_is_cover": F.col("_e.is_cover")}
-        ).drop("_e", "_res")
+        def level_emit(rm: int) -> str:
+            arr = geo_udfs.cover_cells_bbox_text(
+                f"{bb_col}[0]", f"{bb_col}[1]", f"{bb_col}[2]", f"{bb_col}[3]", rm
+            )
+            tagged = f"transform({arr}, _lc -> struct(_lc AS cell, ({rm} = _res) AS is_cover))"
+            # emit this level only for geometries at least as fine as it
+            return f"slice({tagged}, 1, CASE WHEN _res >= {rm} THEN size({tagged}) ELSE 0 END)"
+
+        per_level = ", ".join(level_emit(rm) for rm in res_list)
+        df = df.selectExpr("*", f"explode(concat({per_level})) AS _e")
+        return df.selectExpr(*keep, bb_col, "_e.cell AS _cell", f"_e.is_cover AS {cov_col}")
 
     lb, rb = "_lbb", "_rbb"
-    lft = emit(left, left_geom, lb).withColumnRenamed("_is_cover", "_lcov")
-    rgt = emit(right, right_geom, rb).withColumnRenamed("_is_cover", "_rcov")
+    lft = emit(left, left_geom, lb, "_lcov")
+    rgt = emit(right, right_geom, rb, "_rcov")
     cand = lft.join(F.broadcast(rgt), on="_cell", how="inner")
     # meeting level: at least one side's row is its REAL cover
-    cand = cand.filter(F.col("_lcov") | F.col("_rcov"))
+    cand = cand.filter("_lcov OR _rcov")
     # SW-reference-point dedup evaluated at the meeting level (the res
     # lives in the cell id's high bits)
-    ref_lon = F.greatest(F.col(lb)[0], F.col(rb)[0])
-    ref_lat = F.greatest(F.col(lb)[1], F.col(rb)[1])
-    level = F.shiftright(F.col("_cell"), 58).cast("int")
+    ref_lon, ref_lat = f"greatest({lb}[0], {rb}[0])", f"greatest({lb}[1], {rb}[1])"
+    level = "CAST(shiftright(_cell, 58) AS INT)"
     ref_cell = None
     for rm in res_list:
-        this = geo_udfs.cell_of_xy_expr(ref_lon, ref_lat, rm)
-        ref_cell = this if ref_cell is None else F.when(level == rm, this).otherwise(ref_cell)
-    cand = cand.filter(F.col("_cell") == ref_cell)
+        this = geo_udfs.cell_of_xy_text(ref_lon, ref_lat, rm)
+        ref_cell = (
+            this if ref_cell is None else f"CASE WHEN {level} = {rm} THEN {this} ELSE {ref_cell} END"
+        )
+    cand = cand.filter(f"_cell = ({ref_cell})")
     cand = cand.filter(_bboxes_overlap(lb, rb))
-    refined = cand.filter(geo_udfs.intersects_pair(F.col(left_geom), F.col(right_geom)))
+    refined = cand.filter(geo_udfs.intersects_pair(left_geom, right_geom))
     return refined.drop("_cell", "_lcov", "_rcov", lb, rb)
 
 
@@ -544,11 +540,9 @@ def intersects_join(
     lb, rb = "_lbb", "_rbb"
 
     def with_cover(df, geom, bb):
-        df = df.withColumn(bb, geo_udfs.bbox_arr(F.col(geom)))
-        c = geo_udfs.cover_cells_bbox_expr(
-            F.col(bb)[0], F.col(bb)[1], F.col(bb)[2], F.col(bb)[3], res
-        )
-        return df.withColumn("_cell", F.explode(c))
+        df = df.withColumn(bb, geo_udfs.bbox_arr(geom))
+        c = geo_udfs.cover_cells_bbox_text(f"{bb}[0]", f"{bb}[1]", f"{bb}[2]", f"{bb}[3]", res)
+        return df.selectExpr("*", f"explode({c}) AS _cell")
 
     if refine == "bbox-exact":
         # no Python refine leg exists in this mode, so the exchange can
@@ -576,9 +570,10 @@ def intersects_join(
     # reference-point dedup: keep the pair only in the cell holding the
     # SW corner of the bbox intersection (clamped into the intersection,
     # which is non-empty for any candidate sharing a cell).
-    ref_lon = F.greatest(F.col(lb)[0], F.col(rb)[0])
-    ref_lat = F.greatest(F.col(lb)[1], F.col(rb)[1])
-    cand = cand.filter(F.col("_cell") == geo_udfs.cell_of_xy_expr(ref_lon, ref_lat, res))
+    ref_cell = geo_udfs.cell_of_xy_text(
+        f"greatest({lb}[0], {rb}[0])", f"greatest({lb}[1], {rb}[1])", res
+    )
+    cand = cand.filter(f"_cell = ({ref_cell})")
 
     cand = cand.filter(_bboxes_overlap(lb, rb))
     if refine == "bbox-exact":
@@ -586,9 +581,7 @@ def intersects_join(
         # ST_Intersects, so the candidate set is already exact
         refined = cand
     else:
-        refined = cand.filter(
-            geo_udfs.intersects_pair(F.col(left_geom), F.col(right_geom))
-        )
+        refined = cand.filter(geo_udfs.intersects_pair(left_geom, right_geom))
     drop = ["_cell", lb, rb] + (["_salt"] if salt > 1 else [])
     return _outer(refined.drop(*drop), how, left, right, left_id, right_id)
 
@@ -724,6 +717,17 @@ def _init_guard_constants():
 _DBDP_MIN, _DBDP_MAX, _DMIN = _init_guard_constants()
 
 
+def _observed_count(obs: Observation) -> int | None:
+    """The ``n`` an Observation reported, or None when its subtree was
+    optimized away (an input the optimizer proves empty): the action then
+    completes the Observation with an empty row, which ``get`` cannot
+    convert."""
+    try:
+        return obs.get["n"]
+    except Py4JJavaError:
+        return None
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -771,10 +775,16 @@ def knn_join(
     candidates were found AND the k-th distance is inside the ring's
     guaranteed radius (``knn_guard_meters`` for metres — sound in
     projected space; ring*lat_step for degrees). The candidate result is
-    localCheckpoint'ed so the guard aggregation and the final consumer
-    never re-execute the join DAG. Incomplete queries re-run with a 4x
-    wider ring, up to ``max_retries`` times (a driver-side loop over an
-    ever-smaller broadcast query set — bounded work at scale).
+    localCheckpoint'ed so the guard check and the final consumer never
+    re-execute the join DAG. The checkpoint's own job counts, through
+    two ``Observation``s, the query side's rows and the complete answers
+    (rows with a non-NULL id, ``knn_rank = k`` and ``dist_m`` below the
+    guard). When the two are equal every query is exact and the call
+    returns with no further job. Otherwise — an incomplete query, a
+    duplicate or NULL id, or a subtree the optimizer removed as empty —
+    the guard loop runs: incomplete queries re-run with a 4x wider ring,
+    up to ``max_retries`` times (a driver-side loop over an ever-smaller
+    broadcast query set — bounded work at scale).
     """
     import numpy as np
 
@@ -811,43 +821,37 @@ def knn_join(
 
     p = _point_side(points, res, point_geom, lonlat_cols)
 
-    order = [F.col("dist_m").asc()]
     if tiebreak:
-        order.append(F.col(tiebreak).asc())
+        order = [tiebreak]
     elif lonlat_cols is not None:
-        order += [F.col("_plon").asc(), F.col("_plat").asc()]
+        order = ["_plon", "_plat"]
     else:
-        order.append(F.col(point_geom).asc())
-    w = Window.partitionBy(query_id).orderBy(*order)
+        order = [point_geom]
+    rank = (
+        f"row_number() OVER (PARTITION BY {query_id} ORDER BY "
+        + ", ".join(f"{c} ASC" for c in ["dist_m", *order])
+        + ")"
+    )
 
     def attempt(queries_df: DataFrame, ring: int) -> DataFrame:
-        q = queries_df.withColumn("_rc", ring_cells_udf(ring)(F.col(query_geom)))
-        q = q.withColumns(
-            {"_guard": F.col("_rc.guard"), "_qlon": F.col("_rc.qlon"), "_qlat": F.col("_rc.qlat")}
-        ).withColumn("_cell", F.explode(F.col("_rc.cells"))).drop("_rc")
+        keep = _cols(queries_df)
+        q = queries_df.withColumn("_rc", ring_cells_udf(ring)(query_geom))
+        q = q.selectExpr("*", "_rc.guard AS _guard", "_rc.qlon AS _qlon", "_rc.qlat AS _qlat")
+        q = q.selectExpr(*keep, "_guard", "_qlon", "_qlat", "explode(_rc.cells) AS _cell")
         cand = p.join(F.broadcast(q) if broadcast_queries else q, on="_cell", how="inner")
         if metric == "degrees":
-            dx = F.col("_plon") - F.col("_qlon")
-            dy = F.col("_plat") - F.col("_qlat")
             # same IEEE754 op order as the SQL oracle's sqrt(dx*dx+dy*dy)
-            cand = cand.withColumn("dist_m", F.sqrt(dx * dx + dy * dy))
+            dist = F.expr(
+                "sqrt((_plon - _qlon) * (_plon - _qlon) + (_plat - _qlat) * (_plat - _qlat))"
+            )
         elif metric == "geodesic":
-            cand = cand.withColumn(
-                "dist_m",
-                geo_udfs.distance_geodesic_lonlat()(
-                    F.col("_plon"), F.col("_plat"), F.col("_qlon"), F.col("_qlat")
-                ),
-            )
+            dist = geo_udfs.distance_geodesic_lonlat()("_plon", "_plat", "_qlon", "_qlat")
         else:
-            cand = cand.withColumn(
-                "dist_m",
-                geo_udfs.distance_m_lonlat()(
-                    F.col("_plon"), F.col("_plat"), F.col("_qlon"), F.col("_qlat")
-                ),
-            )
+            dist = geo_udfs.distance_m_lonlat()("_plon", "_plat", "_qlon", "_qlat")
         return (
-            cand.withColumn("knn_rank", F.row_number().over(w))
-            .filter(F.col("knn_rank") <= k)
+            cand.withColumn("dist_m", dist)
+            .withColumn("knn_rank", F.expr(rank))
+            .filter(f"knn_rank <= {k}")
             .drop("_cell", "_qlon", "_qlat")
         )
 
@@ -855,13 +859,24 @@ def knn_join(
     if max_ring < 1:
         # ring 0 would also break the retry loop (ring *= 4 keeps it 0)
         raise ValueError(f"knn_join: max_ring must be >= 1, got {max_ring}")
-    result = attempt(queries, max_ring)
     if not exact:
+        return attempt(queries, max_ring).drop(*helper_cols)
+
+    # materialize once: the final consumer reads the checkpointed
+    # candidates instead of re-executing the join DAG. The checkpoint's
+    # own job also counts the query rows (inside the broadcast side) and
+    # the complete answers, so the common all-exact case needs no
+    # further job.
+    n_queries, n_complete = Observation(), Observation()
+    result = attempt(queries.observe(n_queries, F.count(F.lit(1)).alias("n")), max_ring)
+    complete_row = f"{query_id} IS NOT NULL AND knn_rank = {k} AND dist_m < _guard"
+    result = result.observe(
+        n_complete, F.expr(f"count(CASE WHEN {complete_row} THEN 1 END)").alias("n")
+    ).localCheckpoint()
+    complete = _observed_count(n_complete)
+    if complete is not None and complete == _observed_count(n_queries):
         return result.drop(*helper_cols)
 
-    # materialize once: the guard aggregation and the final consumer read
-    # the checkpointed candidates instead of re-executing the join DAG
-    result = result.localCheckpoint()
     def incomplete_queries(res_df: DataFrame) -> DataFrame:
         # a query's answer is exact iff k candidates exist and the k-th
         # distance is within the ring's guaranteed radius. Queries with
@@ -943,42 +958,33 @@ def snap_to_segments(
     """
     lon_c, lat_c = lonlat_cols
     x0, y0, x1, y1 = seg_cols
-    r = float(radius)
-    cov = geo_udfs.cover_cells_bbox_expr(
-        F.least(F.col(x0), F.col(x1)) - r,
-        F.least(F.col(y0), F.col(y1)) - r,
-        F.greatest(F.col(x0), F.col(x1)) + r,
-        F.greatest(F.col(y0), F.col(y1)) + r,
+    r_f = float(radius)
+    r = geo_udfs.sql_double(r_f)
+    cov = geo_udfs.cover_cells_bbox_text(
+        f"least({x0}, {x1}) - {r}",
+        f"least({y0}, {y1}) - {r}",
+        f"greatest({x0}, {x1}) + {r}",
+        f"greatest({y0}, {y1}) + {r}",
         res,
     )
-    segs = segments.withColumn("_cell", F.explode(cov))
-    pts = points.withColumn(
-        "_cell", geo_udfs.cell_of_xy_expr(F.col(lon_c), F.col(lat_c), res)
-    )
+    segs = segments.selectExpr("*", f"explode({cov}) AS _cell")
+    pts = points.selectExpr("*", f"{geo_udfs.cell_of_xy_text(lon_c, lat_c, res)} AS _cell")
     cand = pts.join(F.broadcast(segs), on="_cell", how="inner")
 
-    ex = F.col(x1) - F.col(x0)
-    ey = F.col(y1) - F.col(y0)
-    len2 = ex * ex + ey * ey
-    dot = (F.col(lon_c) - F.col(x0)) * ex + (F.col(lat_c) - F.col(y0)) * ey
-    t = F.when(len2 > F.lit(0.0), F.least(F.greatest(dot / len2, F.lit(0.0)), F.lit(1.0))).otherwise(
-        F.lit(0.0)
+    ex, ey = f"({x1} - {x0})", f"({y1} - {y0})"
+    len2 = f"({ex} * {ex} + {ey} * {ey})"
+    dot = f"(({lon_c} - {x0}) * {ex} + ({lat_c} - {y0}) * {ey})"
+    t = f"(CASE WHEN {len2} > 0.0D THEN least(greatest({dot} / {len2}, 0.0D), 1.0D) ELSE 0.0D END)"
+    dx, dy = f"({lon_c} - ({x0} + {t} * {ex}))", f"({lat_c} - ({y0} + {t} * {ey}))"
+    d2 = f"({dx} * {dx} + {dy} * {dy})"
+    best = ", ".join([f"{d2} AS d2", *seg_id_cols, f"{t} AS t"])
+    scored = cand.selectExpr(point_id_col, f"struct({best}) AS _best").filter(
+        f"_best.d2 <= {geo_udfs.sql_double(r_f * r_f)}"
     )
-    qx = F.col(x0) + t * ex
-    qy = F.col(y0) + t * ey
-    dx = F.col(lon_c) - qx
-    dy = F.col(lat_c) - qy
-    d2 = dx * dx + dy * dy
-    scored = cand.select(
-        F.col(point_id_col),
-        F.struct(
-            d2.alias("d2"), *[F.col(c) for c in seg_id_cols], t.alias("t")
-        ).alias("_best"),
-    ).filter(F.col("_best.d2") <= F.lit(r * r))
-    won = scored.groupBy(point_id_col).agg(F.min("_best").alias("_w"))
-    return won.select(
+    won = scored.groupBy(point_id_col).agg(F.expr("min(_best) AS _w"))
+    return won.selectExpr(
         point_id_col,
-        *[F.col(f"_w.{c}").alias(c) for c in seg_id_cols],
-        F.col("_w.t").alias("snap_t"),
-        F.col("_w.d2").alias("snap_d2"),
+        *[f"_w.{c} AS {c}" for c in seg_id_cols],
+        "_w.t AS snap_t",
+        "_w.d2 AS snap_d2",
     )

@@ -195,7 +195,7 @@ def od_flows(
     from pda_spark.functions import geo_udfs
 
     w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
-    cell = geo_udfs.cell_of_xy_expr(F.col(lon_col), F.col(lat_col), res)
+    cell = geo_udfs.cell_of_xy_expr(lon_col, lat_col, res)
     steps = events.withColumn("_cell", cell).withColumn("_prev", F.lag("_cell").over(w))
     return (
         steps.filter(F.col("_prev").isNotNull() & (F.col("_prev") != F.col("_cell")))

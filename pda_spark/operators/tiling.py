@@ -51,14 +51,11 @@ def rasterize_polygons(
     polygon.
     """
     if tight:
-        cover = F.explode(geo_udfs.cover_cells(res)(F.col(geom)))
+        cover = F.explode(geo_udfs.cover_cells(res)(geom))
         out = polygons.select(F.col(key).alias("key"), cover.alias("tile"))
     else:
-        bb = geo_udfs.bbox_arr(F.col(geom))
-        tmp = polygons.select(F.col(key).alias("key"), bb.alias("_bb"))
-        cover = geo_udfs.cover_cells_bbox_expr(
-            F.col("_bb")[0], F.col("_bb")[1], F.col("_bb")[2], F.col("_bb")[3], res
-        )
+        tmp = polygons.select(F.col(key).alias("key"), geo_udfs.bbox_arr(geom).alias("_bb"))
+        cover = geo_udfs.cover_cells_bbox_expr("_bb[0]", "_bb[1]", "_bb[2]", "_bb[3]", res)
         out = tmp.select("key", F.explode(cover).alias("tile"))
     return out.dropDuplicates(["key", "tile"])
 
@@ -128,30 +125,22 @@ def tile_pyramid(
     floor(v*2^z)). At 100 TB the pyramid shuffle moves only
     O(cells * levels) rows, never the raw points. Output one row per
     (zoom, tile): packed cell id plus (tx, ty) grid coords."""
-    ix = F.shiftright(F.col(cell_col), 29).bitwiseAND(F.lit((1 << 29) - 1))
-    iy = F.col(cell_col).bitwiseAND(F.lit((1 << 29) - 1))
-    zoom = F.explode(F.sequence(F.lit(min_res), F.lit(res))).alias("zoom")
-    donors = cell_counts.select(
-        ix.alias("_ix"), iy.alias("_iy"), F.col(value_col).alias("_v")
-    ).select("_ix", "_iy", "_v", zoom)
-    scattered = donors.select(
-        "zoom",
-        F.expr(f"shiftright(_ix, {res} - zoom)").alias("tx"),
-        F.expr(f"shiftright(_iy, {res} - zoom)").alias("ty"),
-        "_v",
+    mask = (1 << 29) - 1
+    donors = cell_counts.selectExpr(
+        f"shiftright({cell_col}, 29) & {mask} AS _ix", f"{cell_col} & {mask} AS _iy",
+        f"{value_col} AS _v",
+    ).selectExpr("_ix", "_iy", "_v", f"explode(sequence({min_res}, {res})) AS zoom")
+    scattered = donors.selectExpr(
+        "zoom", f"shiftright(_ix, {res} - zoom) AS tx", f"shiftright(_iy, {res} - zoom) AS ty", "_v"
     )
-    agg = scattered.groupBy("zoom", "tx", "ty").agg(F.sum("_v").alias("_sum"))
-    cell_out = (
-        F.col("zoom").cast("long") * F.lit(1 << 58)
-        + F.shiftleft(F.col("tx").cast("long"), 29)
-        + F.col("ty").cast("long")
-    )
-    return agg.select(
+    agg = scattered.groupBy("zoom", "tx", "ty").agg(F.expr("sum(_v) AS _sum"))
+    return agg.selectExpr(
         "zoom",
-        cell_out.alias(cell_col),
-        F.col("tx").cast("long").alias("tx"),
-        F.col("ty").cast("long").alias("ty"),
-        F.col("_sum").cast("long").alias(value_col),
+        f"CAST(zoom AS BIGINT) * {1 << 58} + shiftleft(CAST(tx AS BIGINT), 29) + CAST(ty AS BIGINT)"
+        f" AS {cell_col}",
+        "CAST(tx AS BIGINT) AS tx",
+        "CAST(ty AS BIGINT) AS ty",
+        f"CAST(_sum AS BIGINT) AS {value_col}",
     )
 
 

@@ -146,7 +146,7 @@ def _cell_counts(spark, sf_dir, res: int) -> DataFrame:
     """Events per occupied res-`res` grid cell: (cell, n)."""
     return (
         _event_points(spark, sf_dir)
-        .withColumn("cell", geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res))
+        .withColumn("cell", geo_udfs.cell_of_xy_expr("lon", "lat", res))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )

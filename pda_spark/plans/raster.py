@@ -68,7 +68,7 @@ def q44_tile_zonal(spark, sf_dir):
     tile assignment is the Catalyst cell expression (no Python stage)."""
     res = 6
     pts = _event_points(spark, sf_dir)
-    pts = pts.withColumn("tile", geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res))
+    pts = pts.withColumn("tile", geo_udfs.cell_of_xy_expr("lon", "lat", res))
     pts = pts.withColumn("geom", _mk_point(F.col("lon"), F.col("lat")))
     boxes = _box_table(spark)
     joined = spatial_join.points_in_polygons_join(
@@ -101,7 +101,7 @@ def q83_zonal_stats(spark, sf_dir):
     engine; the mean is ONE double division at the end."""
     res = 6
     pts = _event_points(spark, sf_dir)
-    pts = pts.withColumn("tile", geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res))
+    pts = pts.withColumn("tile", geo_udfs.cell_of_xy_expr("lon", "lat", res))
     pts = pts.withColumn("geom", _mk_point(F.col("lon"), F.col("lat")))
     pts = pts.withColumn("cents", F.floor(F.col("value") * 100.0).cast("long"))
     boxes = _box_table(spark)
@@ -177,7 +177,7 @@ def q94_zorder(spark, sf_dir):
     generates both sides)."""
     res = 8
     pts = _event_points(spark, sf_dir)
-    cell = geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res)
+    cell = geo_udfs.cell_of_xy_expr("lon", "lat", res)
     mask = (1 << 29) - 1
     ix = F.shiftright(cell, 29).bitwiseAND(F.lit(mask))
     iy = cell.bitwiseAND(F.lit(mask))
@@ -555,7 +555,7 @@ def q111_hilbert(spark, sf_dir):
     generated from the same loop (geo_udfs.hilbert_sql)."""
     res = 7
     pts = _event_points(spark, sf_dir).filter(F.pmod(F.col("event_id"), F.lit(17)) == 0)
-    cell = geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res)
+    cell = geo_udfs.cell_of_xy_expr("lon", "lat", res)
     mask = (1 << 29) - 1
     df = pts.select(
         "event_id",

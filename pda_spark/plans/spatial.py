@@ -27,7 +27,7 @@ def q40_cell_assign(spark, sf_dir):
     pts = _event_points(spark, sf_dir)
     res = 7
     return (
-        pts.withColumn("cell", geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res))
+        pts.withColumn("cell", geo_udfs.cell_of_xy_expr("lon", "lat", res))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )

@@ -276,7 +276,7 @@ def q117_mann_kendall(spark, sf_dir):
     res = 6
     pts = _event_points(spark, sf_dir)
     c = pts.select(
-        geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res).alias("cell"),
+        geo_udfs.cell_of_xy_expr("lon", "lat", res).alias("cell"),
         F.to_date("ts").alias("d"),
     )
     cnt = c.groupBy("cell", "d").agg(F.count(F.lit(1)).alias("n"))
@@ -324,7 +324,7 @@ def q131_cusum(spark, sf_dir):
     res = 6
     pts = _event_points(spark, sf_dir)
     c = pts.select(
-        geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res).alias("cell"),
+        geo_udfs.cell_of_xy_expr("lon", "lat", res).alias("cell"),
         F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000").alias("d"),
     )
     cnt = c.groupBy("cell", "d").agg(F.count(F.lit(1)).alias("n"))

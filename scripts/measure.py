@@ -152,9 +152,16 @@ def time_queries(names: list[str], sf_dir: str, reps: int) -> None:
         warm_dir = sf_dir
 
     def run(name: str, sf: str, tag: str) -> float:
+        # build = the builder call (plan construction and any eager jobs
+        # it runs), action = the noop write of its result
         spark.sparkContext.setJobDescription(f"{name}:{tag}")
-        dt = round(_timed(lambda: _force(registry.QUERIES[name][0](spark, sf))), 3)
-        print(f"{tag} {name} {dt:.2f}s", file=sys.stderr, flush=True)
+        t0 = time.time()
+        df = registry.QUERIES[name][0](spark, sf)
+        build = time.time() - t0
+        action = _timed(lambda: _force(df))
+        dt = round(build + action, 3)
+        print(f"{tag} {name} {dt:.2f}s build={build:.2f}s action={action:.2f}s",
+              file=sys.stderr, flush=True)
         return dt
 
     for name in names:

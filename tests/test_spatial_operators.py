@@ -806,3 +806,178 @@ def test_intersects_join_same_geom_name_disambiguated(spark):
         ).select("a_id", "b_id").collect()
     )
     assert p1 == p2
+
+
+# ---- kNN exactness counted on the checkpoint's own job ------------------
+
+# res 6 cells are 5.625 x 2.8125 deg, so ring 1 certifies a 2.8125 deg
+# radius and ring 4 (one retry) 11.25 deg: a 5x5 cluster near (10, 50)
+# and five points on lat -20 at lon 40..44 (all in column 39)
+_KNN_PTS = [(i, 10.0 + 0.1 * (i % 5), 50.0 + 0.1 * (i // 5)) for i in range(25)] + [
+    (100 + j, 40.0 + j, -20.0) for j in range(5)
+]
+_KNN_KW = dict(
+    k=3, res=6, max_ring=1, metric="degrees", tiebreak="pt_id",
+    lonlat_cols=("lon", "lat"), query_id="query_id", exact=True,
+)
+
+
+def _knn_run(spark, queries, group):
+    """knn_join(...).toPandas() for (query_id, lon, lat) queries under
+    job group ``group``: (rows, jobs run)."""
+    pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
+    qs = spark.createDataFrame(
+        [(q, bytearray(wkb.point(x, y))) for q, x, y in queries], "query_id int, qgeom binary"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = spatial_join.knn_join(pts, qs, **_KNN_KW)
+        rows = out.select("query_id", "pt_id", "dist_m", "knn_rank").toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _knn_brute(queries, k=3):
+    """Top-k per query id over every (query row, point) pair, ordered by
+    (distance, pt_id) with the operator's IEEE754 op order."""
+    by_id: dict = {}
+    for q, x, y in queries:
+        for pid, lon, lat in _KNN_PTS:
+            dx, dy = np.float64(lon) - x, np.float64(lat) - y
+            by_id.setdefault(q, []).append((float(np.sqrt(dx * dx + dy * dy)), pid))
+    return sorted(
+        (q, pid, d, rank)
+        for q, cand in by_id.items()
+        for rank, (d, pid) in enumerate(sorted(cand)[:k], start=1)
+    )
+
+
+def _knn_rows(rows):
+    return sorted(
+        (int(r.query_id), int(r.pt_id), float(r.dist_m), int(r.knn_rank)) for r in rows.itertuples()
+    )
+
+
+def test_knn_exact_fast_path_jobs(spark):
+    """All queries complete at the seed ring: the counts observed on the
+    checkpoint's job match, so the whole call (checkpoint plus the
+    consumer's collect) runs at most 4 jobs."""
+    queries = [(0, 10.2, 50.2), (1, 10.05, 50.35), (2, 10.3, 50.0)]
+    rows, jobs = _knn_run(spark, queries, "knn-fast")
+    assert _knn_rows(rows) == _knn_brute(queries)
+    assert jobs <= 4, jobs
+
+
+def test_knn_exact_duplicate_query_ids(spark):
+    """Two query rows share an id: one id cannot certify two rows, so
+    the guard loop runs; its answer is the top-k over both rows'
+    candidates."""
+    queries = [(5, 10.1, 50.1), (5, 10.1, 50.1), (6, 10.3, 50.3)]
+    rows, jobs = _knn_run(spark, queries, "knn-dup")
+    assert _knn_rows(rows) == _knn_brute(queries)
+    assert jobs > 4, jobs
+
+
+def test_knn_exact_null_query_id_raises(spark):
+    """A NULL query id never matches the complete-id set, so it stays
+    inexact through every retry and the call raises."""
+    pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
+    qs = spark.createDataFrame(
+        [(None, bytearray(wkb.point(10.1, 50.1))), (1, bytearray(wkb.point(10.2, 50.2)))],
+        "query_id int, qgeom binary",
+    )
+    with pytest.raises(RuntimeError, match="1 queries still inexact"):
+        spatial_join.knn_join(pts, qs, max_retries=1, **_KNN_KW)
+
+
+def test_knn_exact_zero_candidate_query(spark):
+    """(33, -20) has no point in its seed ring (column 37, ring 36..38);
+    one retry at ring 4 certifies its 3rd neighbour at 9 deg."""
+    queries = [(0, 10.2, 50.2), (1, 33.0, -20.0)]
+    rows, _ = _knn_run(spark, queries, "knn-zero")
+    assert _knn_rows(rows) == _knn_brute(queries)
+
+
+def test_knn_exact_one_ring_retry(spark):
+    """(38.5, -20) finds all five far points in its seed ring, but its
+    3rd neighbour (3.5 deg) lies beyond the ring's 2.8125 deg guard:
+    one retry at ring 4 certifies it."""
+    queries = [(0, 10.2, 50.2), (1, 38.5, -20.0)]
+    rows, jobs = _knn_run(spark, queries, "knn-retry")
+    assert _knn_rows(rows) == _knn_brute(queries)
+    assert jobs > 4, jobs
+
+
+def test_knn_exact_empty_inputs(spark):
+    """An input the optimizer proves empty prunes the observed subtree;
+    the check then falls back to the guard loop: no queries give no
+    rows, no points leave every query inexact."""
+    pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
+    qs = spark.createDataFrame(
+        [(0, bytearray(wkb.point(10.2, 50.2)))], "query_id int, qgeom binary"
+    )
+    none = F.lit(False)
+    assert spatial_join.knn_join(pts, qs.filter(none), **_KNN_KW).count() == 0
+    with pytest.raises(RuntimeError, match="1 queries still inexact"):
+        spatial_join.knn_join(pts.filter(none), qs, max_retries=1, **_KNN_KW)
+
+
+def test_builders_py4j_round_trip_budget(spark):
+    """Building the joins (no action) stays within a py4j round-trip
+    budget: their cell, cover and filter expressions are parsed from SQL
+    text, not chained from Column operators at one or more round trips
+    each (the Column-chain builders made 470-2,500 per call). Counted on
+    this thread after one warm-up build, with cyclic gc paused so no
+    JVM-object release lands inside the count."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    pts = spark.createDataFrame(
+        [(1, 10.0, 50.0, bytearray(wkb.point(10.0, 50.0)))],
+        "pt_id int, lon double, lat double, geom binary",
+    )
+    polys = spark.createDataFrame(
+        [(7, bytearray(wkb.box(9.0, 49.0, 11.0, 51.0)))], "poly_id int, pgeom binary"
+    )
+    qs = spark.createDataFrame(
+        [(0, bytearray(wkb.point(10.0, 50.0)), 10.0, 50.0)],
+        "query_id int, qgeom binary, clon double, clat double",
+    )
+    builders = {
+        "points_in_polygons_join": (100, lambda: spatial_join.points_in_polygons_join(
+            pts, polys, res=7, poly_geom="pgeom", lonlat_cols=("lon", "lat"))),
+        "intersects_join": (95, lambda: spatial_join.intersects_join(
+            polys, polys, res=6, left_geom="pgeom", right_geom="pgeom")),
+        "knn_join": (150, lambda: spatial_join.knn_join(
+            pts, qs, k=1, res=6, exact=False, lonlat_cols=("lon", "lat"), tiebreak="pt_id")),
+        "within_distance_join": (40, lambda: spatial_join.within_distance_join(
+            pts, qs, 0.5, res=6)),
+    }
+    thread = threading.get_ident()
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, *a, **kw):
+        if threading.get_ident() == thread:
+            calls[0] += 1
+        return send(self, *a, **kw)
+
+    used = {}
+    gc.collect()
+    gc.disable()
+    ClientServerConnection.send_command = counted
+    try:
+        for name, (_, build) in builders.items():
+            build()
+            calls[0] = 0
+            build()
+            used[name] = calls[0]
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+    over = {n: (used[n], budget) for n, (budget, _) in builders.items() if used[n] > budget}
+    assert not over, f"round trips over budget (used, budget): {over}"

@@ -73,13 +73,26 @@ def test_cover_cells_bbox_expr_parity(spark):
         x0 = float(rng.uniform(-185, 180)); y0 = float(rng.uniform(-95, 90))
         rows.append((i, x0, y0, x0 + float(rng.uniform(0, 8)), y0 + float(rng.uniform(0, 8))))
     df = spark.createDataFrame(rows, "i int, minx double, miny double, maxx double, maxy double")
+    # the forms the operators pass: Columns naming a column or an element
+    # of one, and SQL text reading an element or doing arithmetic on it
+    # (the bounds are stored as a bbox array, shifted by -1/+1 degree)
+    df = df.selectExpr("*", "array(minx - 1.0D, miny - 1.0D, maxx + 1.0D, maxy + 1.0D) AS bb")
+    forms = {  # form: (builder arguments, the same bounds in Python floats)
+        "columns": ((F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy")),
+                    lambda x0, y0, x1, y1: (x0, y0, x1, y1)),
+        "elements": (tuple(F.col("bb")[j] for j in range(4)),
+                     lambda x0, y0, x1, y1: (x0 - 1.0, y0 - 1.0, x1 + 1.0, y1 + 1.0)),
+        "text": (("bb[0] + 1.0D", "bb[1] + 1.0D", "bb[2] - 1.0D", "bb[3] - 1.0D"),
+                 lambda x0, y0, x1, y1: ((x0 - 1.0) + 1.0, (y0 - 1.0) + 1.0,
+                                         (x1 + 1.0) - 1.0, (y1 + 1.0) - 1.0)),
+    }
     for res in (3, 7, 12):
-        expr = geo_udfs.cover_cells_bbox_expr(
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res
-        )
-        got = {r["i"]: sorted(r["c"]) for r in df.select("i", expr.alias("c")).collect()}
-        for i, x0, y0, x1, y1 in rows:
-            assert got[i] == sorted(int(c) for c in cells.cover_bbox(x0, y0, x1, y1, res)), (i, res)
+        for form, (args, bounds) in forms.items():
+            expr = geo_udfs.cover_cells_bbox_expr(*args, res)
+            got = {r["i"]: sorted(r["c"]) for r in df.select("i", expr.alias("c")).collect()}
+            for i, *bb in rows:
+                want = sorted(int(c) for c in cells.cover_bbox(*bounds(*bb), res))
+                assert got[i] == want, (i, res, form)
 
     # point cells: the same random rows' corners, the exact +-180/+-90
     # edges and out-of-domain coordinates (clamped into the edge cells;
@@ -93,12 +106,27 @@ def test_cover_cells_bbox_expr_parity(spark):
     )
     lon = np.array([x for x, _ in pts])
     lat = np.array([y for _, y in pts])
+    pdf = pdf.selectExpr("*", "array(lon, lat) AS xy")
     for res in (3, 7, 12):
-        expr = geo_udfs.cell_of_xy_expr(F.col("lon"), F.col("lat"), res)
-        got = {r["i"]: r["c"] for r in pdf.select("i", expr.alias("c")).collect()}
         want = cells.cell_of(lon, lat, res)
-        for i in range(len(pts)):
-            assert got[i] == int(want[i]), (pts[i], res)
+        for args in ((F.col("lon"), F.col("lat")), ("xy[0]", "xy[1] * 1.0D"),
+                     (F.col("xy")[0], F.col("xy").getItem(1))):
+            expr = geo_udfs.cell_of_xy_expr(*args, res)
+            got = {r["i"]: r["c"] for r in pdf.select("i", expr.alias("c")).collect()}
+            for i in range(len(pts)):
+                assert got[i] == int(want[i]), (pts[i], res, args)
+
+
+def test_cell_builders_reject_other_columns(spark):
+    """A Column other than a column name or an element of one (or a
+    value that is not text) is refused with a TypeError that names it."""
+    from pda_spark.functions import geo_udfs
+
+    for bad in (F.col("lon") + 1.0, F.lit(3.0), F.col("lon").alias("x"), F.col("bb")["k"], 1.5):
+        with pytest.raises(TypeError, match=rf"lon={re.escape(repr(bad))}: pass SQL text"):
+            geo_udfs.cell_of_xy_expr(bad, "lat", 7)
+        with pytest.raises(TypeError, match=rf"maxx={re.escape(repr(bad))}: pass SQL text"):
+            geo_udfs.cover_cells_bbox_expr("bb[0]", "bb[1]", bad, "bb[3]", 7)
 
 
 def test_rasterize_loose_equals_tight_for_boxes(spark):
