@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import re
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -89,6 +90,28 @@ FOOTPRINT_SCHEMA = T.StructType(
 )
 
 
+def _parse_acquired(values: list) -> pd.Series:
+    """``acquired`` values -> timestamps with one ``pd.to_datetime`` call
+    per batch; Spark stores the same instants as for one call per value.
+
+    A batch with one offset (or none) parses as is, so naive values take
+    the session time zone. A batch mixing offsets, or offsets with naive
+    values, parses to UTC with naive values read as UTC: value by value
+    it would be an object column, whose naive values Arrow also reads as
+    UTC (pandas 2.2 returns that object column with a FutureWarning,
+    later pandas raise). Values that are not ISO 8601 are parsed one by
+    one."""
+    s = pd.Series(values, dtype=object)
+    for kw in ({}, {"utc": True}):
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", FutureWarning)
+                return pd.to_datetime(s, format="ISO8601", **kw)
+        except (ValueError, FutureWarning):
+            pass
+    return pd.Series([pd.to_datetime(v) for v in values])
+
+
 def parse_footprints(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """Pages -> sat_images-shaped fact rows (SURVEY §1.3 web-corpus row).
 
@@ -104,7 +127,7 @@ def parse_footprints(pages: DataFrame, html_col: str = "html") -> DataFrame:
         for pdf in batches:
             s = pdf[html_col].map(lambda b: bytes(b).decode("utf-8", errors="replace"))
             blocks = s.str.extract(_GEOJSON_RE)[0]
-            rows = []
+            rows, acquired = [], []
             for url, block in zip(pdf["url"], blocks):
                 if not isinstance(block, str):
                     continue
@@ -118,12 +141,12 @@ def parse_footprints(pages: DataFrame, html_col: str = "html") -> DataFrame:
                     continue
                 geom = wkb.polygon([np.asarray(c, dtype=np.float64) for c in coords])
                 lon_c, lat_c = kernels.centroid_3035(wkb.decode(geom))
+                acquired.append(props.get("acquired"))
                 rows.append(
                     {
                         "id": str(props["id"]),
                         "clear_confidence_percent": float(props.get("clear_confidence_percent", np.nan)),
                         "cloud_cover": float(props.get("cloud_cover", np.nan)),
-                        "time_acquired": pd.to_datetime(props.get("acquired")),
                         "geom": geom,
                         "centroid": wkb.point(lon_c, lat_c),
                         "sat_id": str(props.get("satellite_id")),
@@ -133,6 +156,8 @@ def parse_footprints(pages: DataFrame, html_col: str = "html") -> DataFrame:
                         "url": url,
                     }
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in FOOTPRINT_SCHEMA.fields])
+            out = pd.DataFrame(rows, columns=[f.name for f in FOOTPRINT_SCHEMA.fields])
+            out["time_acquired"] = _parse_acquired(acquired)
+            yield out
 
     return pages.mapInPandas(fn, FOOTPRINT_SCHEMA)

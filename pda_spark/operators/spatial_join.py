@@ -780,11 +780,12 @@ def knn_join(
     two ``Observation``s, the query side's rows and the complete answers
     (rows with a non-NULL id, ``knn_rank = k`` and ``dist_m`` below the
     guard). When the two are equal every query is exact and the call
-    returns with no further job. Otherwise — an incomplete query, a
-    duplicate or NULL id, or a subtree the optimizer removed as empty —
-    the guard loop runs: incomplete queries re-run with a 4x wider ring,
-    up to ``max_retries`` times (a driver-side loop over an ever-smaller
-    broadcast query set — bounded work at scale).
+    returns with no further job. Otherwise a NULL ``query_id`` raises
+    ``ValueError`` (one job checks, before any retry), and for an
+    incomplete query, a duplicate id or a subtree the optimizer removed
+    as empty the guard loop runs: incomplete queries re-run with a 4x
+    wider ring, up to ``max_retries`` times (a driver-side loop over an
+    ever-smaller broadcast query set — bounded work at scale).
     """
     import numpy as np
 
@@ -876,6 +877,13 @@ def knn_join(
     complete = _observed_count(n_complete)
     if complete is not None and complete == _observed_count(n_queries):
         return result.drop(*helper_cols)
+    # NULL ids share one window partition and never match the complete-id
+    # set, so no ring can certify them: fail before the first retry
+    if queries.filter(F.col(query_id).isNull()).limit(1).count():
+        raise ValueError(
+            f"knn_join(exact=True): query_id column {query_id!r} has NULL values; "
+            "exact answers need a non-NULL id per query"
+        )
 
     def incomplete_queries(res_df: DataFrame) -> DataFrame:
         # a query's answer is exact iff k candidates exist and the k-th

@@ -12,8 +12,17 @@ on parquet directories plus an atomic JSON manifest:
 - ``<base>/<name>/manifest.json`` is written LAST (tmp + rename) and is
   the commit marker — a stage without a readable manifest is incomplete
   and recomputed on resume;
-- the manifest records schema, total rows, per-partition row counts,
-  per-file byte sizes, parent stage names (lineage), and engine version.
+- the manifest records schema, total rows, one ``partitions`` entry
+  (file, rows) per data file, since each file is one write task's output,
+  per-file byte sizes and parent stage names (lineage). Row counts come
+  from the parquet footers of the files just written
+  (``pyarrow.parquet.read_metadata``), as Iceberg manifests keep per-file
+  counts, so a commit runs no Spark job besides the write itself;
+- every re-read declares its schema (the written frame's schema made
+  nullable, or the committed manifest's), so neither a commit nor a
+  ``read()`` runs Spark's footer-inference job, and a directory whose
+  files differ in schema reads the same way whatever order Spark lists
+  them in.
 
 Idempotent writes (the reference's ``ON CONFLICT DO NOTHING``,
 /root/reference/database/db.py:65-70) are ``merge_append``: new rows are
@@ -28,8 +37,25 @@ import os
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable:
+    the schema Spark's parquet inference returns for files written from
+    a frame of schema ``dt``."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class CheckpointManager:
@@ -46,12 +72,17 @@ class CheckpointManager:
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self._dir(name), "manifest.json")
 
-    def is_complete(self, name: str) -> bool:
+    def _committed(self, name: str) -> dict:
+        """The stage's manifest if it is committed, else ``{}``."""
         try:
             with open(self._manifest_path(name)) as f:
-                return json.load(f).get("status") == "committed"
+                m = json.load(f)
         except (OSError, json.JSONDecodeError):
-            return False
+            return {}
+        return m if m.get("status") == "committed" else {}
+
+    def is_complete(self, name: str) -> bool:
+        return bool(self._committed(name))
 
     def manifest(self, name: str) -> dict:
         with open(self._manifest_path(name)) as f:
@@ -67,23 +98,29 @@ class CheckpointManager:
         digest = hashlib.md5(f"{self.base}\x00{name}".encode()).hexdigest()[:10]
         return f"ckpt_{safe}_{digest}"
 
+    def _reread(self, data_dir: str, schema: T.StructType) -> DataFrame:
+        """The parquet files under ``data_dir`` read with a declared
+        schema: no footer-inference job, and the same columns whichever
+        file Spark lists first."""
+        return self.spark.read.schema(schema).parquet(data_dir)
+
     def read(self, name: str) -> DataFrame:
-        """Read a committed stage. Bucketed stages come back THROUGH the
-        catalog so the bucket spec survives into join planning — on a
-        fresh session (resume) the table is re-registered over the
-        existing files from the manifest's recorded spec, so the
-        Exchange-free co-located join works across restarts, not just in
-        the writing session."""
+        """Read a committed stage under its manifest's schema; runs no
+        Spark job. Bucketed stages come back THROUGH the catalog so the
+        bucket spec survives into join planning — on a fresh session
+        (resume) the table is re-registered over the existing files from
+        the manifest's recorded spec, so the Exchange-free co-located
+        join works across restarts, not just in the writing session."""
+        m = self._committed(name)
+        if not m:
+            raise ValueError(f"checkpoint stage {name!r} under {self.base} is not committed")
         data_dir = os.path.join(self._dir(name), "data")
-        m = self.manifest(name) if self.is_complete(name) else {}
+        schema = T.StructType.fromJson(m["schema"])
         spec = m.get("cluster_by")
         if not spec:
-            return self.spark.read.parquet(data_dir)
+            return self._reread(data_dir, schema)
         tbl = self._table_name(name)
         if not self.spark.catalog.tableExists(tbl):
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(m["schema"])
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
             )
@@ -95,23 +132,26 @@ class CheckpointManager:
         return self.spark.table(tbl)
 
     # ------------------------------------------------------------ write
-    def _collect_metrics(self, data_dir: str, df: DataFrame) -> dict:
-        per_partition = [
-            {"partition": int(r["_pid"]), "rows": int(r["rows"])}
-            for r in df.groupBy(F.spark_partition_id().alias("_pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        files = []
-        for root, _, names in os.walk(data_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    p = os.path.join(root, n)
-                    files.append({"file": os.path.relpath(p, data_dir), "bytes": os.path.getsize(p)})
+    @staticmethod
+    def _collect_metrics(data_dir: str) -> dict:
+        """Rows, one ``partitions`` entry per data file (each is one write
+        task's output) and per-file bytes, from the files' parquet
+        footers: no Spark job."""
+        paths = sorted(
+            os.path.relpath(os.path.join(root, n), data_dir)
+            for root, _, names in os.walk(data_dir)
+            for n in names
+            if n.endswith(".parquet")
+        )
+        files, partitions = [], []
+        for i, rel in enumerate(paths):
+            p = os.path.join(data_dir, rel)
+            files.append({"file": rel, "bytes": os.path.getsize(p)})
+            partitions.append({"partition": i, "file": rel, "rows": pq.read_metadata(p).num_rows})
         return {
-            "rows": sum(p["rows"] for p in per_partition),
-            "partitions": sorted(per_partition, key=lambda p: p["partition"]),
-            "files": sorted(files, key=lambda f: f["file"]),
+            "rows": sum(p["rows"] for p in partitions),
+            "partitions": partitions,
+            "files": files,
             "bytes": sum(f["bytes"] for f in files),
         }
 
@@ -146,8 +186,9 @@ class CheckpointManager:
         must NOT invalidate children."""
         fp = {}
         for p in parents or []:
-            if self.is_complete(p):
-                fp[p] = {"rows": self.manifest(p).get("rows")}
+            m = self._committed(p)
+            if m:
+                fp[p] = {"rows": m.get("rows")}
         return fp
 
     def write_stage(
@@ -160,7 +201,11 @@ class CheckpointManager:
     ) -> DataFrame:
         """Materialize a stage and commit its manifest; returns the
         re-read DataFrame (downstream stages read the checkpoint, so a
-        resumed run is plan-identical to a fresh one).
+        resumed run is plan-identical to a fresh one). The only Spark jobs
+        are the write's: the manifest's row counts come from the written
+        files' parquet footers, one ``partitions`` entry per file, and the
+        re-read declares ``df``'s schema made nullable (what Spark's
+        footer inference would return).
 
         ``cluster_by=(col, n_buckets)``: land the stage bucketed+sorted
         by ``col`` (Iceberg's ``CLUSTERED BY`` on the parquet substitute)
@@ -185,8 +230,7 @@ class CheckpointManager:
             out = self.spark.table(tbl)
         else:
             df.write.mode(mode).parquet(data_dir)
-            out = self.spark.read.parquet(data_dir)
-        metrics = self._collect_metrics(data_dir, out)
+            out = self._reread(data_dir, _nullable(df.schema))
         self._commit(
             name,
             {
@@ -202,7 +246,7 @@ class CheckpointManager:
                     if cluster_by
                     else {}
                 ),
-                **metrics,
+                **self._collect_metrics(data_dir),
             },
         )
         return out
@@ -216,13 +260,14 @@ class CheckpointManager:
     ) -> DataFrame:
         """Resume-aware stage: reuse the checkpoint if committed AND its
         parents are unchanged, else compute ``build()`` and commit."""
-        if self.is_complete(name):
-            m = self.manifest(name)
-            if m.get("parent_fingerprint", {}) == self._parent_fingerprint(parents):
-                return self.read(name)
+        m = self._committed(name)
+        if m and m.get("parent_fingerprint", {}) == self._parent_fingerprint(parents):
+            return self.read(name)
         return self.write_stage(build(), name, parents=parents, cluster_by=cluster_by)
 
-    def _merge_swap(self, name: str, merged: DataFrame, prev: dict) -> None:
+    def _merge_swap(
+        self, name: str, merged: DataFrame, schema: T.StructType, prev: dict
+    ) -> None:
         """Atomic-enough replace of a stage's data dir with ``merged``
         (staging write + double rename). Crash safety (round-5 review):
         the manifest is demoted to ``status: swapping`` BEFORE the
@@ -232,7 +277,8 @@ class CheckpointManager:
         re-commits. A ``cluster_by`` layout recorded by a prior
         ``write_stage`` is preserved: merged rows are re-written
         bucketed under the same spec and the catalog table re-registered
-        (dropped first, never left stale over re-laid-out files)."""
+        (dropped first, never left stale over re-laid-out files);
+        ``schema`` is ``merged``'s, made nullable, for that re-read."""
         import shutil
 
         data_dir = os.path.join(self._dir(name), "data")
@@ -246,7 +292,7 @@ class CheckpointManager:
         old = data_dir + f".old.{uuid.uuid4().hex[:8]}"
         os.rename(data_dir, old)
         if spec:
-            remerged = self.spark.read.parquet(staging)
+            remerged = self._reread(staging, schema)
             (
                 remerged.write.mode("overwrite")
                 .bucketBy(spec["buckets"], spec["col"])
@@ -259,12 +305,25 @@ class CheckpointManager:
             os.rename(staging, data_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    def _merge_commit(
-        self, name: str, key: str, prev: dict, parents: list[str] | None
+    def _merge_write(
+        self,
+        name: str,
+        key: str,
+        merged: DataFrame,
+        prev: dict,
+        parents: list[str] | None,
     ) -> DataFrame:
+        """Land ``merged`` as the stage's rows (through the crash-safe
+        swap over a committed stage ``prev``, directly otherwise), commit
+        a manifest that keeps ``prev``'s bucket spec and lineage, and
+        return the stage through ``read``, so a preserved bucket spec
+        comes back catalog-routed."""
+        schema = _nullable(merged.schema)
         data_dir = os.path.join(self._dir(name), "data")
-        out = self.spark.read.parquet(data_dir)
-        metrics = self._collect_metrics(data_dir, out)
+        if prev:
+            self._merge_swap(name, merged, schema, prev)
+        else:
+            merged.write.mode("overwrite").parquet(data_dir)
         spec = prev.get("cluster_by")
         self._commit(
             name,
@@ -273,15 +332,13 @@ class CheckpointManager:
                 "stage": name,
                 "run_id": self.run_id,
                 "parents": sorted(set((parents or []) + prev.get("parents", []))),
-                "schema": out.schema.jsonValue(),
+                "schema": schema.jsonValue(),
                 "key": key,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 **({"cluster_by": spec} if spec else {}),
-                **metrics,
+                **self._collect_metrics(data_dir),
             },
         )
-        # re-read through the manifest so a preserved bucket spec comes
-        # back catalog-routed (bucketing survives into join planning)
         return self.read(name)
 
     def _align_for_merge(
@@ -312,18 +369,14 @@ class CheckpointManager:
         schema to add/drop columns (see ``_align_for_merge``)."""
         self._sweep_stale(name)
         incoming = df.dropDuplicates([key])
-        prev = self.manifest(name) if self.is_complete(name) else {}
+        prev = self._committed(name)
+        merged = incoming
         if prev:
             kept = self.read(name).join(
                 incoming.select(key), on=key, how="left_anti"
             )
-            self._merge_swap(
-                name, self._align_for_merge(kept, incoming, evolve_schema), prev
-            )
-        else:
-            data_dir = os.path.join(self._dir(name), "data")
-            incoming.write.mode("overwrite").parquet(data_dir)
-        return self._merge_commit(name, key, prev, parents)
+            merged = self._align_for_merge(kept, incoming, evolve_schema)
+        return self._merge_write(name, key, merged, prev, parents)
 
     def merge_sync(
         self,
@@ -347,25 +400,18 @@ class CheckpointManager:
         lineage-merging manifest commit."""
         self._sweep_stale(name)
         incoming = df.dropDuplicates([key])
-        prev = self.manifest(name) if self.is_complete(name) else {}
-        if prev:
+        prev = self._committed(name)
+        merged = incoming
+        if prev and delete_condition is not None:
             unmatched = self.read(name).join(
                 incoming.select(key), on=key, how="left_anti"
             )
-            if delete_condition is not None:
-                # SQL MERGE deletes only where the condition is TRUE;
-                # a NULL condition (e.g. the scoping column is NULL)
-                # must KEEP the row — bare ~cond filters NULLs out too
-                # (round-6 review)
-                kept = unmatched.filter(~F.coalesce(delete_condition, F.lit(False)))
-                merged = self._align_for_merge(kept, incoming, evolve_schema)
-            else:
-                merged = incoming
-            self._merge_swap(name, merged, prev)
-        else:
-            data_dir = os.path.join(self._dir(name), "data")
-            incoming.write.mode("overwrite").parquet(data_dir)
-        return self._merge_commit(name, key, prev, parents)
+            # SQL MERGE deletes only where the condition is TRUE; a NULL
+            # condition (e.g. the scoping column is NULL) must KEEP the
+            # row — bare ~cond filters NULLs out too (round-6 review)
+            kept = unmatched.filter(~F.coalesce(delete_condition, F.lit(False)))
+            merged = self._align_for_merge(kept, incoming, evolve_schema)
+        return self._merge_write(name, key, merged, prev, parents)
 
     def merge_append(self, df: DataFrame, name: str, key: str, parents: list[str] | None = None) -> DataFrame:
         """Idempotent keyed append (ON CONFLICT DO NOTHING / Iceberg
@@ -373,26 +419,26 @@ class CheckpointManager:
         incoming batch are also collapsed (source dedup, SURVEY S4)."""
         incoming = df.dropDuplicates([key])
         data_dir = os.path.join(self._dir(name), "data")
-        if self.is_complete(name):
+        prev = self._committed(name)
+        if prev:
             existing_keys = self.read(name).select(key)
             fresh = incoming.join(existing_keys, on=key, how="left_anti")
             fresh.write.mode("append").parquet(data_dir)
+            schema = T.StructType.fromJson(prev["schema"])
         else:
             incoming.write.mode("overwrite").parquet(data_dir)
-        out = self.spark.read.parquet(data_dir)
-        metrics = self._collect_metrics(data_dir, out)
-        prev_parents = self.manifest(name).get("parents", []) if self.is_complete(name) else []
+            schema = _nullable(incoming.schema)
         self._commit(
             name,
             {
                 "status": "committed",
                 "stage": name,
                 "run_id": self.run_id,
-                "parents": sorted(set((parents or []) + prev_parents)),
-                "schema": out.schema.jsonValue(),
+                "parents": sorted(set((parents or []) + prev.get("parents", []))),
+                "schema": schema.jsonValue(),
                 "key": key,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                **metrics,
+                **self._collect_metrics(data_dir),
             },
         )
-        return out
+        return self._reread(data_dir, schema)

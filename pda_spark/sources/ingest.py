@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pda_spark import session
 from pda_spark.functions import extract
 from pda_spark.sources.checkpoint import CheckpointManager
 
@@ -40,9 +41,12 @@ def ingest_web_corpus(pages: DataFrame, ckpt: CheckpointManager) -> dict[str, Da
     """
     web_pages = ckpt.merge_append(pages, "web_pages", key="url")
 
+    # the web_pages checkpoint is one or a few small files, so a parse
+    # read straight off it runs in as many Python tasks: spread it over
+    # the Arrow stage width instead
     footprints = ckpt.stage(
         "footprints",
-        lambda: extract.parse_footprints(web_pages),
+        lambda: extract.parse_footprints(web_pages.repartition(session.arrow_width(web_pages))),
         parents=["web_pages"],
     )
 

@@ -27,6 +27,18 @@ def formatted_plan(df) -> str:
     return buf.getvalue()
 
 
+def jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under Spark job group ``group``: (its result, the
+    number of jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def n_arrow_nodes(plan: str) -> int:
     """Count physical ArrowEvalPython nodes: formatted explain prints
     each node twice (tree + detail section) — count detail headers."""

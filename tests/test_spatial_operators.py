@@ -390,6 +390,7 @@ def test_knn_meters_property_sweep(spark):
 
 from conftest import formatted_plan as _formatted_plan
 from conftest import n_arrow_nodes as _n_arrow_nodes
+from conftest import jobs_in_group
 
 
 def test_salt_spreads_identical_hot_rows(spark):
@@ -829,14 +830,13 @@ def _knn_run(spark, queries, group):
     qs = spark.createDataFrame(
         [(q, bytearray(wkb.point(x, y))) for q, x, y in queries], "query_id int, qgeom binary"
     )
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = spatial_join.knn_join(pts, qs, **_KNN_KW)
-        rows = out.select("query_id", "pt_id", "dist_m", "knn_rank").toPandas()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs_in_group(
+        spark,
+        group,
+        lambda: spatial_join.knn_join(pts, qs, **_KNN_KW)
+        .select("query_id", "pt_id", "dist_m", "knn_rank")
+        .toPandas(),
+    )
 
 
 def _knn_brute(queries, k=3):
@@ -881,15 +881,31 @@ def test_knn_exact_duplicate_query_ids(spark):
 
 
 def test_knn_exact_null_query_id_raises(spark):
-    """A NULL query id never matches the complete-id set, so it stays
-    inexact through every retry and the call raises."""
+    """A NULL query id matches no complete id and shares one window
+    partition with every other NULL id, so no ring can certify it: the
+    call raises before its first retry, naming the id column. Its jobs
+    are the checkpoint's (as many as a certified call's checkpoint) plus
+    one filtered count (a shuffle-map job and a result job); one retry
+    round runs over a dozen more (a checkpoint of the incomplete ids,
+    counts and a wider ring attempt)."""
     pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
-    qs = spark.createDataFrame(
-        [(None, bytearray(wkb.point(10.1, 50.1))), (1, bytearray(wkb.point(10.2, 50.2)))],
-        "query_id int, qgeom binary",
+
+    def queries(q0):
+        return spark.createDataFrame(
+            [(q0, bytearray(wkb.point(10.1, 50.1))), (1, bytearray(wkb.point(10.2, 50.2)))],
+            "query_id int, qgeom binary",
+        )
+
+    _, ckpt_jobs = jobs_in_group(
+        spark, "knn-null-ref", lambda: spatial_join.knn_join(pts, queries(0), **_KNN_KW)
     )
-    with pytest.raises(RuntimeError, match="1 queries still inexact"):
-        spatial_join.knn_join(pts, qs, max_retries=1, **_KNN_KW)
+
+    def null_call():
+        with pytest.raises(ValueError, match="query_id"):
+            spatial_join.knn_join(pts, queries(None), max_retries=1, **_KNN_KW)
+
+    _, jobs = jobs_in_group(spark, "knn-null", null_call)
+    assert jobs <= ckpt_jobs + 2, (jobs, ckpt_jobs)
 
 
 def test_knn_exact_zero_candidate_query(spark):

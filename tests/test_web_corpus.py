@@ -90,6 +90,64 @@ def test_malformed_pages_skipped(spark):
     assert extract.parse_footprints(df).count() == 0
 
 
+def _footprint_page(url, acquired):
+    """A page whose footprint block carries ``acquired`` (no key when
+    None)."""
+    props = {"id": url, "satellite_id": "s1", "provider": "p", "item_type": "PSScene"}
+    if acquired is not None:
+        props["acquired"] = acquired
+    ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    feat = {"type": "Feature", "geometry": {"type": "Polygon", "coordinates": [ring]}, "properties": props}
+    html = f'<html><script type="application/geo+json">{json.dumps(feat)}</script></html>'
+    return (url, None, html.encode(), "", "en")
+
+
+def test_parse_footprints_acquired_matches_per_value_parse(spark):
+    """The batch parse of ``acquired`` gives Spark the same timestamps
+    as one ``pd.to_datetime`` per value, for each input kind in a batch
+    of its own and for one batch mixing naive and offset strings, in a
+    UTC and a non-UTC session time zone."""
+    import re
+
+    import pandas as pd
+
+    from pda_spark import schemas
+
+    batches = {
+        "naive": ["2022-03-04T05:06:07", "2021-12-31T23:59:59"],
+        "z": ["2022-03-04T05:06:07Z"],
+        "fractional": ["2022-03-04T05:06:07.123456", "2022-03-04T05:06:07.5"],
+        "offset": ["2022-03-04T05:06:07+02:00"],
+        "date": ["2022-03-04"],
+        "missing": [None, "2022-03-04T05:06:07"],
+        "mixed": ["2022-03-04T05:06:07", "2022-03-04T05:06:07+02:00", "2022-03-04T05:06:07Z", None, "2022-03-04"],
+    }
+
+    def per_value(pdfs):
+        for pdf in pdfs:
+            props = [
+                json.loads(re.search(r'geo\+json">(.*?)</script>', bytes(h).decode()).group(1))["properties"]
+                for h in pdf["html"]
+            ]
+            yield pd.DataFrame(
+                {"url": pdf["url"], "time_acquired": [pd.to_datetime(p.get("acquired")) for p in props]}
+            )
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            for kind, values in batches.items():
+                rows = [_footprint_page(f"{kind}{i}", v) for i, v in enumerate(values)]
+                pages = spark.createDataFrame(rows, schemas.WEB_PAGES).coalesce(1)
+                got = extract.parse_footprints(pages).select("url", "time_acquired").collect()
+                want = pages.mapInPandas(per_value, "url string, time_acquired timestamp").collect()
+                assert sorted(got) == sorted(want), (tz, kind)
+                assert len(got) == len(values)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
 def test_ingest_idempotent(spark, corpus, tmp_path):
     """Reference insert idempotency (test_db_i.py:293-304): running the
     same ingest twice leaves row counts unchanged."""
@@ -371,3 +429,119 @@ def test_merge_sync_preserves_bucketed_layout(spark, tmp_path):
     out = ckpt.merge_sync(src, "facts", key="id")
     assert out.count() == 20
     assert ckpt.manifest("facts")["cluster_by"] == {"col": "id", "buckets": 4}
+
+
+# ---- checkpoint commits and reads run no Spark job of their own ------------
+
+STAGES = ["web_pages", "footprints", "satellites", "item_types", "sat_images"]
+
+
+def _assert_manifest_matches_files(spark, ckpt, name):
+    """Manifest rows and its one ``partitions`` entry per data file agree
+    with a Spark count of each file, and the declared schema with Spark's
+    inference over the stage directory."""
+    import os
+
+    from pyspark.sql import types as T
+
+    data_dir = os.path.join(ckpt._dir(name), "data")
+    m = ckpt.manifest(name)
+    assert [p["file"] for p in m["partitions"]] == [f["file"] for f in m["files"]], name
+    for p in m["partitions"]:
+        assert p["rows"] == spark.read.parquet(os.path.join(data_dir, p["file"])).count(), name
+    assert m["rows"] == sum(p["rows"] for p in m["partitions"]) == spark.read.parquet(data_dir).count()
+    assert T.StructType.fromJson(m["schema"]) == spark.read.parquet(data_dir).schema, name
+    assert ckpt.read(name).schema == spark.read.parquet(data_dir).schema, name
+
+
+def test_checkpoint_manifests_match_files_through_ingest_append_resume(spark, tmp_path):
+    """Every stage of a fresh ingest, an overlapping append and a resume
+    after the later stages' manifests are deleted: footer row counts and
+    declared schemas equal what Spark reads back."""
+    ckpt = CheckpointManager(spark, str(tmp_path / "mf"))
+    ingest_web_corpus(web_pages.corpus(spark, 40, partitions=2), ckpt)
+    for name in STAGES:
+        _assert_manifest_matches_files(spark, ckpt, name)
+    both = web_pages.corpus(spark, 60, partitions=3)
+    ingest_web_corpus(both, ckpt)
+    for name in STAGES:
+        _assert_manifest_matches_files(spark, ckpt, name)
+    assert ckpt.manifest("sat_images")["rows"] == 60
+    for name in STAGES[2:]:
+        (tmp_path / "mf" / name / "manifest.json").unlink()
+    ingest_web_corpus(both, ckpt)
+    for name in STAGES:
+        _assert_manifest_matches_files(spark, ckpt, name)
+
+
+def test_checkpoint_merge_schemas_match_inference(spark, tmp_path):
+    """merge_upsert / merge_sync widening the schema (evolve_schema) and
+    a cluster_by stage merged in place: the manifest schema and read()
+    equal Spark's inference over the files."""
+    ckpt = CheckpointManager(spark, str(tmp_path / "ms"))
+    ckpt.merge_upsert(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), "dim", key="id"
+    )
+    _assert_manifest_matches_files(spark, ckpt, "dim")
+    ckpt.merge_upsert(
+        spark.createDataFrame([(2, "B", 9.5)], "id long, v string, score double"),
+        "dim", key="id", evolve_schema=True,
+    )
+    _assert_manifest_matches_files(spark, ckpt, "dim")
+    ckpt.merge_sync(
+        spark.createDataFrame([(3, [1, 2], {"k": 1.0})], "id long, tags array<int>, attrs map<string,double>"),
+        "dim", key="id", delete_condition=F.col("id") > 1, evolve_schema=True,
+    )
+    _assert_manifest_matches_files(spark, ckpt, "dim")
+    assert {r["id"] for r in ckpt.read("dim").collect()} == {1, 3}
+
+    facts = spark.range(100).selectExpr("id AS cell", "struct(id, id * 2 AS d) AS s")
+    ckpt.write_stage(facts, "facts", cluster_by=("cell", 4))
+    _assert_manifest_matches_files(spark, ckpt, "facts")
+    ckpt.merge_upsert(
+        spark.range(90, 110).selectExpr("id AS cell", "struct(id, id * 3 AS d) AS s", "1.5D AS w"),
+        "facts", key="cell", evolve_schema=True,
+    )
+    _assert_manifest_matches_files(spark, ckpt, "facts")
+    assert ckpt.manifest("facts")["rows"] == 110
+
+
+def test_checkpoint_write_read_run_only_the_write_jobs(spark, tmp_path):
+    """write_stage runs the jobs of its parquet write and nothing else,
+    read() of a committed stage runs none (bucketed too, after a catalog
+    wipe), and merge_append runs only its anti-join write."""
+    from conftest import jobs_in_group
+
+    df = spark.range(2000).selectExpr("id % 37 AS k", "id").groupBy("k").count()
+    _, plain = jobs_in_group(spark, "ck-plain", lambda: df.write.parquet(str(tmp_path / "plain")))
+    ckpt = CheckpointManager(spark, str(tmp_path / "jb"))
+    _, staged = jobs_in_group(spark, "ck-stage", lambda: ckpt.write_stage(df, "agg"))
+    assert plain >= 1 and staged == plain, (staged, plain)
+    _, read_jobs = jobs_in_group(spark, "ck-read", lambda: ckpt.read("agg"))
+    assert read_jobs == 0
+
+    ckpt.write_stage(spark.range(100).selectExpr("id AS cell", "id AS v"), "b", cluster_by=("cell", 4))
+    spark.sql(f"DROP TABLE {ckpt._table_name('b')}")
+    out, read_jobs = jobs_in_group(spark, "ck-read-b", lambda: ckpt.read("b"))
+    assert read_jobs == 0 and out.count() == 100
+
+    first = spark.range(0, 300).selectExpr("id AS key", "id * 2 AS v")
+    _, plain = jobs_in_group(
+        spark, "ck-app0-plain",
+        lambda: first.dropDuplicates(["key"]).write.parquet(str(tmp_path / "app0")),
+    )
+    _, appended = jobs_in_group(spark, "ck-app0", lambda: ckpt.merge_append(first, "app", key="key"))
+    assert appended == plain, (appended, plain)
+
+    more = spark.range(200, 500).selectExpr("id AS key", "id * 3 AS v")
+    existing = spark.read.parquet(str(tmp_path / "app0")).select("key")
+    _, plain = jobs_in_group(
+        spark, "ck-app1-plain",
+        lambda: more.dropDuplicates(["key"])
+        .join(existing, on="key", how="left_anti")
+        .write.mode("append")
+        .parquet(str(tmp_path / "app0")),
+    )
+    out, appended = jobs_in_group(spark, "ck-app1", lambda: ckpt.merge_append(more, "app", key="key"))
+    assert appended == plain, (appended, plain)
+    assert ckpt.manifest("app")["rows"] == 500 and out.count() == 500
