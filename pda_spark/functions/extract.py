@@ -93,23 +93,15 @@ FOOTPRINT_SCHEMA = T.StructType(
 def _parse_acquired(values: list) -> pd.Series:
     """``acquired`` values -> timestamps with one ``pd.to_datetime`` call
     per batch; Spark stores the same instants as for one call per value.
-
-    A batch with one offset (or none) parses as is, so naive values take
-    the session time zone. A batch mixing offsets, or offsets with naive
-    values, parses to UTC with naive values read as UTC: value by value
-    it would be an object column, whose naive values Arrow also reads as
-    UTC (pandas 2.2 returns that object column with a FutureWarning,
-    later pandas raise). Values that are not ISO 8601 are parsed one by
-    one."""
-    s = pd.Series(values, dtype=object)
-    for kw in ({}, {"utc": True}):
-        try:
-            with warnings.catch_warnings():
-                warnings.simplefilter("error", FutureWarning)
-                return pd.to_datetime(s, format="ISO8601", **kw)
-        except (ValueError, FutureWarning):
-            pass
-    return pd.Series([pd.to_datetime(v) for v in values])
+    A batch that this one call would not parse exactly as the per-value
+    calls (values that are not ISO 8601, or that mix time zone offsets)
+    is parsed value by value."""
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            return pd.to_datetime(pd.Series(values, dtype=object), format="ISO8601")
+    except (ValueError, FutureWarning):
+        return pd.Series([pd.to_datetime(v) for v in values])
 
 
 def parse_footprints(pages: DataFrame, html_col: str = "html") -> DataFrame:

@@ -18,11 +18,11 @@ on parquet directories plus an atomic JSON manifest:
   from the parquet footers of the files just written
   (``pyarrow.parquet.read_metadata``), as Iceberg manifests keep per-file
   counts, so a commit runs no Spark job besides the write itself;
-- every re-read declares its schema (the written frame's schema made
-  nullable, or the committed manifest's), so neither a commit nor a
-  ``read()`` runs Spark's footer-inference job, and a directory whose
-  files differ in schema reads the same way whatever order Spark lists
-  them in.
+- every re-read declares its schema (the written frame's, which Spark
+  makes nullable as its inference would, or the committed manifest's),
+  so neither a commit nor a ``read()`` runs Spark's footer-inference
+  job, and a directory whose files differ in schema reads the same way
+  whatever order Spark lists them in.
 
 Idempotent writes (the reference's ``ON CONFLICT DO NOTHING``,
 /root/reference/database/db.py:65-70) are ``merge_append``: new rows are
@@ -41,21 +41,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _nullable(dt: T.DataType) -> T.DataType:
-    """``dt`` with every field, array element and map value nullable:
-    the schema Spark's parquet inference returns for files written from
-    a frame of schema ``dt``."""
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
-    return dt
 
 
 class CheckpointManager:
@@ -100,8 +85,9 @@ class CheckpointManager:
 
     def _reread(self, data_dir: str, schema: T.StructType) -> DataFrame:
         """The parquet files under ``data_dir`` read with a declared
-        schema: no footer-inference job, and the same columns whichever
-        file Spark lists first."""
+        schema, which Spark makes nullable as its inference would: no
+        footer-inference job, and the same columns whichever file Spark
+        lists first."""
         return self.spark.read.schema(schema).parquet(data_dir)
 
     def read(self, name: str) -> DataFrame:
@@ -136,13 +122,18 @@ class CheckpointManager:
     def _collect_metrics(data_dir: str) -> dict:
         """Rows, one ``partitions`` entry per data file (each is one write
         task's output) and per-file bytes, from the files' parquet
-        footers: no Spark job."""
-        paths = sorted(
-            os.path.relpath(os.path.join(root, n), data_dir)
-            for root, _, names in os.walk(data_dir)
-            for n in names
-            if n.endswith(".parquet")
-        )
+        footers: no Spark job. Paths with a component starting with ``_``
+        or ``.`` are skipped, as Spark's reader skips them: a write killed
+        mid-commit can leave task files under ``_temporary/``."""
+        paths = []
+        for root, dirs, names in os.walk(data_dir):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            paths += [
+                os.path.relpath(os.path.join(root, n), data_dir)
+                for n in names
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            ]
+        paths.sort()
         files, partitions = [], []
         for i, rel in enumerate(paths):
             p = os.path.join(data_dir, rel)
@@ -204,8 +195,8 @@ class CheckpointManager:
         resumed run is plan-identical to a fresh one). The only Spark jobs
         are the write's: the manifest's row counts come from the written
         files' parquet footers, one ``partitions`` entry per file, and the
-        re-read declares ``df``'s schema made nullable (what Spark's
-        footer inference would return).
+        re-read declares ``df``'s schema (made nullable by Spark, as its
+        footer inference would).
 
         ``cluster_by=(col, n_buckets)``: land the stage bucketed+sorted
         by ``col`` (Iceberg's ``CLUSTERED BY`` on the parquet substitute)
@@ -230,7 +221,7 @@ class CheckpointManager:
             out = self.spark.table(tbl)
         else:
             df.write.mode(mode).parquet(data_dir)
-            out = self._reread(data_dir, _nullable(df.schema))
+            out = self._reread(data_dir, df.schema)
         self._commit(
             name,
             {
@@ -265,9 +256,7 @@ class CheckpointManager:
             return self.read(name)
         return self.write_stage(build(), name, parents=parents, cluster_by=cluster_by)
 
-    def _merge_swap(
-        self, name: str, merged: DataFrame, schema: T.StructType, prev: dict
-    ) -> None:
+    def _merge_swap(self, name: str, merged: DataFrame, prev: dict) -> None:
         """Atomic-enough replace of a stage's data dir with ``merged``
         (staging write + double rename). Crash safety (round-5 review):
         the manifest is demoted to ``status: swapping`` BEFORE the
@@ -277,8 +266,7 @@ class CheckpointManager:
         re-commits. A ``cluster_by`` layout recorded by a prior
         ``write_stage`` is preserved: merged rows are re-written
         bucketed under the same spec and the catalog table re-registered
-        (dropped first, never left stale over re-laid-out files);
-        ``schema`` is ``merged``'s, made nullable, for that re-read."""
+        (dropped first, never left stale over re-laid-out files)."""
         import shutil
 
         data_dir = os.path.join(self._dir(name), "data")
@@ -292,7 +280,7 @@ class CheckpointManager:
         old = data_dir + f".old.{uuid.uuid4().hex[:8]}"
         os.rename(data_dir, old)
         if spec:
-            remerged = self._reread(staging, schema)
+            remerged = self._reread(staging, merged.schema)
             (
                 remerged.write.mode("overwrite")
                 .bucketBy(spec["buckets"], spec["col"])
@@ -318,12 +306,12 @@ class CheckpointManager:
         a manifest that keeps ``prev``'s bucket spec and lineage, and
         return the stage through ``read``, so a preserved bucket spec
         comes back catalog-routed."""
-        schema = _nullable(merged.schema)
         data_dir = os.path.join(self._dir(name), "data")
         if prev:
-            self._merge_swap(name, merged, schema, prev)
+            self._merge_swap(name, merged, prev)
         else:
             merged.write.mode("overwrite").parquet(data_dir)
+        schema = self._reread(data_dir, merged.schema).schema
         spec = prev.get("cluster_by")
         self._commit(
             name,
@@ -427,7 +415,8 @@ class CheckpointManager:
             schema = T.StructType.fromJson(prev["schema"])
         else:
             incoming.write.mode("overwrite").parquet(data_dir)
-            schema = _nullable(incoming.schema)
+            schema = incoming.schema
+        out = self._reread(data_dir, schema)
         self._commit(
             name,
             {
@@ -435,10 +424,10 @@ class CheckpointManager:
                 "stage": name,
                 "run_id": self.run_id,
                 "parents": sorted(set((parents or []) + prev.get("parents", []))),
-                "schema": schema.jsonValue(),
+                "schema": out.schema.jsonValue(),
                 "key": key,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 **self._collect_metrics(data_dir),
             },
         )
-        return self._reread(data_dir, schema)
+        return out

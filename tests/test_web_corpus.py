@@ -545,3 +545,28 @@ def test_checkpoint_write_read_run_only_the_write_jobs(spark, tmp_path):
     out, appended = jobs_in_group(spark, "ck-app1", lambda: ckpt.merge_append(more, "app", key="key"))
     assert appended == plain, (appended, plain)
     assert ckpt.manifest("app")["rows"] == 500 and out.count() == 500
+
+
+def test_merge_append_manifest_skips_uncommitted_task_files(spark, tmp_path):
+    """Task files a killed write left in hidden staging directories are
+    not stage rows: Spark does not read them, so the manifest counts
+    only what ``read()`` returns. The next append's job commit removes
+    ``_temporary/``, but a ``.spark-staging-<job>`` directory (dynamic
+    partition overwrite) is only removed by its own job."""
+    import os
+    import shutil
+
+    ckpt = CheckpointManager(spark, str(tmp_path / "tmpf"))
+    ckpt.merge_append(spark.range(0, 50).selectExpr("id AS key", "id AS v"), "app", key="key")
+    data_dir = os.path.join(ckpt._dir("app"), "data")
+    first = next(f["file"] for f in ckpt.manifest("app")["files"])
+    for leftover in ("_temporary/0/_temporary/attempt_0", ".spark-staging-0"):
+        os.makedirs(os.path.join(data_dir, leftover))
+        shutil.copy(os.path.join(data_dir, first), os.path.join(data_dir, leftover, first))
+
+    out = ckpt.merge_append(spark.range(40, 70).selectExpr("id AS key", "id AS v"), "app", key="key")
+    m = ckpt.manifest("app")
+    assert os.path.isdir(os.path.join(data_dir, ".spark-staging-0"))
+    assert m["rows"] == out.count() == ckpt.read("app").count() == 70
+    assert not any(f["file"].startswith((".", "_")) for f in m["files"])
+    _assert_manifest_matches_files(spark, ckpt, "app")
