@@ -18,6 +18,9 @@ from pyspark.sql import SparkSession
 
 # ``spark.python.daemon.module`` of every engine session (see get_spark).
 DAEMON_MODULE = "pda_spark._daemon"
+# ``spark.sql.codegen.cache.maxEntries`` of every engine session (see
+# get_spark for the measured working sets it is sized from).
+CODEGEN_CACHE_ENTRIES = 5000
 
 
 def get_spark(
@@ -40,6 +43,32 @@ def get_spark(
     Arrow/pandas UDF stage skips the cost with no plan change. It needs
     the package importable by the daemon process, which the
     ``PYTHONPATH`` line below guarantees.
+
+    ``spark.sql.codegen.cache.maxEntries`` is fixed to
+    ``CODEGEN_CACHE_ENTRIES``, not an option. Spark keeps each class it
+    compiles from generated code (whole-stage codegen, projections,
+    orderings) in one JVM-wide LRU cache keyed by the source text, and
+    its default 100 entries is smaller than the engine's working sets,
+    counted as first-pass compiles on a 4-vCPU host (Spark 4.1.2):
+    ~110 classes for one cycle of the ``spatial`` benchmark's five ops,
+    ~830 for ``bench.py``'s 53 ``HEADLINE`` queries at sf0.01, and
+    2,422 for the whole 170-query registry (``scripts/measure.py
+    time``: 2,280 at the sf0.001 warm-up, 142 more at sf0.01). With
+    ops run round-robin an undersized cache evicts in a cycle: at 100
+    entries a steady ``spatial`` cycle recompiled 77 classes (~0.7 s of
+    Janino time), and its tasks, running fresh classes that start in
+    HotSpot's interpreter, were busy 17% longer (traced, seed 3:
+    ``task.busy_s`` 16.5 s against 14.1 s). 5,000 entries is 2x the
+    largest working set: a cap near it still evicts, because code that
+    differs per call (a ``limit`` gets a fresh counter name in each
+    plan) keeps entering the cache. A cached class keeps its source
+    text and bytecode on the driver heap, ~0.3 MB each (after three
+    headline passes, 607 MB used after a full GC against 328 MB at 100
+    entries, with ~1,400 more classes loaded), so a full cache holds
+    ~1.5 GB; a session only retains what it compiled, and the
+    ``spatial`` benchmark's ``peak_rss_mb`` is unchanged. The conf is static
+    and read when the JVM first generates code: a later session in the
+    same JVM cannot resize the cache.
     """
     # Make the package importable in executor Python workers regardless of
     # the driver's cwd (the cluster equivalent is spark-submit --py-files).
@@ -60,6 +89,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.adaptive.enabled", "true")
@@ -107,6 +137,14 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the driver JVM has compiled from generated code so far
+    (Spark's ``CodegenMetrics`` compilation count); a cache hit adds
+    nothing, so the delta over a call is its codegen cache misses."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
 
 
 def spread(df):

@@ -146,6 +146,28 @@ class CheckpointManager:
             "bytes": sum(f["bytes"] for f in files),
         }
 
+    @staticmethod
+    def _drop_new_empty_files(data_dir: str, metrics: dict, kept: set[str]) -> dict:
+        """``metrics`` without the zero-row files not in ``kept`` (the
+        files an append found), which are deleted with their checksums."""
+        drop = {p["file"] for p in metrics["partitions"] if not p["rows"] and p["file"] not in kept}
+        if not drop:
+            return metrics
+        for rel in drop:
+            path = os.path.join(data_dir, rel)
+            crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+            for p in (path, crc):
+                if os.path.exists(p):
+                    os.remove(p)
+        files = [f for f in metrics["files"] if f["file"] not in drop]
+        partitions = [p for p in metrics["partitions"] if p["file"] not in drop]
+        return {
+            "rows": metrics["rows"],
+            "partitions": [{**p, "partition": i} for i, p in enumerate(partitions)],
+            "files": files,
+            "bytes": sum(f["bytes"] for f in files),
+        }
+
     def _sweep_stale(self, name: str) -> None:
         """GC orphaned swap directories (ADVICE r5): a kill mid-swap in
         ``merge_upsert`` can leak ``data.staging.*`` / ``data.old.*``
@@ -404,19 +426,37 @@ class CheckpointManager:
     def merge_append(self, df: DataFrame, name: str, key: str, parents: list[str] | None = None) -> DataFrame:
         """Idempotent keyed append (ON CONFLICT DO NOTHING / Iceberg
         MERGE WHEN NOT MATCHED THEN INSERT). Duplicate keys *within* the
-        incoming batch are also collapsed (source dedup, SURVEY S4)."""
+        incoming batch are also collapsed (source dedup, SURVEY S4).
+
+        Onto a ``cluster_by`` stage the fresh rows append through its
+        catalog table under the recorded bucket spec, so the stage keeps
+        its layout. The only Spark jobs are the write's: files it left
+        with no rows (an append of nothing writes one) are found from the
+        footers and deleted before the commit, so a no-op re-run leaves
+        the stage's file list unchanged."""
         incoming = df.dropDuplicates([key])
         data_dir = os.path.join(self._dir(name), "data")
         prev = self._committed(name)
+        spec = prev.get("cluster_by")
         if prev:
             existing_keys = self.read(name).select(key)
             fresh = incoming.join(existing_keys, on=key, how="left_anti")
-            fresh.write.mode("append").parquet(data_dir)
+            if spec:
+                (
+                    fresh.write.mode("append")
+                    .bucketBy(spec["buckets"], spec["col"])
+                    .sortBy(spec["col"])
+                    .saveAsTable(self._table_name(name))
+                )
+            else:
+                fresh.write.mode("append").parquet(data_dir)
             schema = T.StructType.fromJson(prev["schema"])
         else:
             incoming.write.mode("overwrite").parquet(data_dir)
             schema = incoming.schema
-        out = self._reread(data_dir, schema)
+        metrics = self._collect_metrics(data_dir)
+        if prev:
+            metrics = self._drop_new_empty_files(data_dir, metrics, {f["file"] for f in prev.get("files", [])})
         self._commit(
             name,
             {
@@ -424,10 +464,11 @@ class CheckpointManager:
                 "stage": name,
                 "run_id": self.run_id,
                 "parents": sorted(set((parents or []) + prev.get("parents", []))),
-                "schema": out.schema.jsonValue(),
+                "schema": self._reread(data_dir, schema).schema.jsonValue(),
                 "key": key,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                **self._collect_metrics(data_dir),
+                **({"cluster_by": spec} if spec else {}),
+                **metrics,
             },
         )
-        return out
+        return self.read(name)

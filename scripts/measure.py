@@ -7,7 +7,11 @@
 ``time``: each query is forced through the noop sink, after one warmup
 pass at the ``sf0.001`` directory next to ``--sf`` (Python-worker import
 storm and JVM codegen amortized; ``--sf`` itself when there is none),
-and the minimum of ``--reps`` runs is kept. Prints one JSON line
+and the minimum of ``--reps`` runs is kept. Each run logs one stderr
+line that splits its wall into ``build=`` (the builder call, eager jobs
+included) and ``action=`` (the noop write), with ``compiles=``, the
+classes compiled from generated code over both: 0 on a warm rep unless
+the query's generated code differs per call. Prints one JSON line
 ``{"sf_dir", "cpus", "queries"}``. With no query names it sweeps every
 ``registry.QUERIES`` entry in key order and writes
 ``BENCH/full_suite.json``; queries slower than ``SUITE_THRESHOLD_S`` are
@@ -140,7 +144,7 @@ def _timed(fn) -> float:
 
 def time_queries(names: list[str], sf_dir: str, reps: int) -> None:
     from pda_spark.plans import registry
-    from pda_spark.session import get_spark
+    from pda_spark.session import codegen_compiles, get_spark
 
     sweep = not names
     names = query_names(names)
@@ -153,15 +157,19 @@ def time_queries(names: list[str], sf_dir: str, reps: int) -> None:
 
     def run(name: str, sf: str, tag: str) -> float:
         # build = the builder call (plan construction and any eager jobs
-        # it runs), action = the noop write of its result
+        # it runs), action = the noop write of its result, compiles = the
+        # classes compiled from generated code over both (codegen cache
+        # misses)
         spark.sparkContext.setJobDescription(f"{name}:{tag}")
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         df = registry.QUERIES[name][0](spark, sf)
         build = time.time() - t0
         action = _timed(lambda: _force(df))
         dt = round(build + action, 3)
-        print(f"{tag} {name} {dt:.2f}s build={build:.2f}s action={action:.2f}s",
-              file=sys.stderr, flush=True)
+        compiles = codegen_compiles(spark) - c0
+        print(f"{tag} {name} {dt:.2f}s build={build:.2f}s action={action:.2f}s "
+              f"compiles={compiles}", file=sys.stderr, flush=True)
         return dt
 
     for name in names:

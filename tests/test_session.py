@@ -1,5 +1,6 @@
 """Session-level policies: one definition each for the Arrow stage width
-and the keyed exchange width, and the engine's Python worker daemon."""
+and the keyed exchange width, the engine's Python worker daemon and the
+size of Spark's generated-code class cache."""
 
 import sys
 import zipimport
@@ -7,7 +8,13 @@ import zipimport
 import pytest
 
 from pda_spark import _daemon
-from pda_spark.session import DAEMON_MODULE, arrow_width, keyed_width
+from pda_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    DAEMON_MODULE,
+    arrow_width,
+    codegen_compiles,
+    keyed_width,
+)
 
 
 def test_arrow_width_env_override(spark, monkeypatch):
@@ -81,3 +88,36 @@ def test_python_workers_run_under_engine_daemon(spark):
     assert spark.conf.get("spark.python.daemon.module") == DAEMON_MODULE
     row = spark.range(1, numPartitions=1).select(patched_by("id")).first()
     assert row[0] == "pda_spark._daemon"
+
+
+def test_codegen_cache_sized_to_engine_working_set(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_operator_stays_compiled_across_other_plans(spark):
+    """An operator's classes stay cached while 150 other plans compile
+    (about 300 classes, three times Spark's default cache of 100), so
+    its next call compiles nothing."""
+    from pyspark.sql import functions as F
+
+    from pda_spark.geo import wkb
+    from pda_spark.operators import spatial_join
+
+    pts = spark.createDataFrame(
+        [(i, 10.0 + i / 10, 50.0 + i / 20) for i in range(20)], "pt_id int, lon double, lat double"
+    )
+    polys = spark.createDataFrame(
+        [(7, bytearray(wkb.box(9.5, 49.5, 11.0, 51.0)))], "poly_id int, pgeom binary"
+    )
+
+    def op():
+        return spatial_join.points_in_polygons_join(
+            pts, polys, res=7, poly_geom="pgeom", lonlat_cols=("lon", "lat")
+        ).agg(F.count(F.lit(1))).first()[0]
+
+    n = op()
+    for i in range(150):
+        spark.range(8).selectExpr(f"id * {i} + {i}").collect()
+    before = codegen_compiles(spark)
+    assert op() == n == 10
+    assert codegen_compiles(spark) - before == 0

@@ -997,3 +997,41 @@ def test_builders_py4j_round_trip_budget(spark):
         gc.enable()
     over = {n: (used[n], budget) for n, (budget, _) in builders.items() if used[n] > budget}
     assert not over, f"round trips over budget (used, budget): {over}"
+
+
+@pytest.mark.parametrize("op", [
+    "points_in_polygons_join", "knn_join", "intersects_join",
+    "union_area_by_cells", "rasterize_polygons",
+])
+def test_operator_warm_repeat_compiles_nothing(spark, world, op):
+    """A second call of an operator on the same inputs generates the same
+    code as the first, so it is served from Spark's codegen cache."""
+    from pda_spark.operators import tiling
+    from pda_spark.session import codegen_compiles
+
+    pts = world["cities"].select(F.col("id").alias("pt_id"), "geom")
+    imgs = world["sat_images"].select(F.col("id").alias("img_id"), "geom")
+    lcs = world["land_cover_classes"]
+    polys = lcs.select(F.col("id").alias("lc_id"), F.col("geom").alias("lc_geom"))
+    knn_pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
+    # every query is certified at the seed ring: the retry path's limits
+    # get a fresh counter name, so new code, on every call
+    qs = spark.createDataFrame(
+        [(q, bytearray(wkb.point(x, y))) for q, x, y in [(0, 10.2, 50.2), (1, 10.3, 50.0)]],
+        "query_id int, qgeom binary",
+    )
+    for df in world.values():
+        df.count()  # a cache filled by the first call changes the second's plan
+    calls = {
+        "points_in_polygons_join": lambda: spatial_join.points_in_polygons_join(
+            pts, polys, res=7, poly_geom="lc_geom"),
+        "knn_join": lambda: spatial_join.knn_join(knn_pts, qs, **_KNN_KW),
+        "intersects_join": lambda: spatial_join.intersects_join(
+            imgs, polys, res=6, right_geom="lc_geom"),
+        "union_area_by_cells": lambda: tiling.union_area_by_cells(lcs, res=6),
+        "rasterize_polygons": lambda: tiling.rasterize_polygons(lcs, res=7),
+    }
+    first = sorted(calls[op]().collect())
+    before = codegen_compiles(spark)
+    assert sorted(calls[op]().collect()) == first
+    assert codegen_compiles(spark) - before == 0

@@ -570,3 +570,55 @@ def test_merge_append_manifest_skips_uncommitted_task_files(spark, tmp_path):
     assert m["rows"] == out.count() == ckpt.read("app").count() == 70
     assert not any(f["file"].startswith((".", "_")) for f in m["files"])
     _assert_manifest_matches_files(spark, ckpt, "app")
+
+
+def test_merge_append_noop_leaves_file_list_unchanged(spark, tmp_path):
+    """An append whose rows are all present writes one empty file; the
+    commit deletes it, so repeating the same append keeps the stage's
+    files, rows and contents."""
+    import os
+
+    ckpt = CheckpointManager(spark, str(tmp_path / "noop"))
+    data_dir = os.path.join(ckpt._dir("app"), "data")
+    batch = spark.range(0, 120).selectExpr("id AS key", "id * 2 AS v")
+    ckpt.merge_append(spark.range(0, 80).selectExpr("id AS key", "id * 2 AS v"), "app", key="key")
+    first = sorted(ckpt.merge_append(batch, "app", key="key").collect())
+    files = [f["file"] for f in ckpt.manifest("app")["files"]]
+    on_disk = sorted(os.listdir(data_dir))  # checksum files included
+    for _ in range(3):
+        ckpt.merge_append(batch, "app", key="key")
+        m = ckpt.manifest("app")
+        assert [f["file"] for f in m["files"]] == files
+        assert sorted(os.listdir(data_dir)) == on_disk
+        assert m["rows"] == 120 and len(first) == 120
+        assert sorted(ckpt.read("app").collect()) == first
+    _assert_manifest_matches_files(spark, ckpt, "app")
+
+
+def test_merge_append_keeps_bucketed_layout(spark, tmp_path):
+    """Appending to a ``cluster_by`` stage lands the fresh rows bucketed
+    under the recorded spec: the manifest keeps ``cluster_by`` and a join
+    with a co-bucketed stage carries no Exchange."""
+    from conftest import formatted_plan
+
+    ckpt = CheckpointManager(spark, str(tmp_path / "bap"))
+    ckpt.write_stage(spark.range(100).selectExpr("id AS cell", "id * 2 AS v"), "facts", cluster_by=("cell", 4))
+    out = ckpt.merge_append(
+        spark.range(90, 120).selectExpr("id AS cell", "id * 3 AS v"), "facts", key="cell"
+    )
+    m = ckpt.manifest("facts")
+    assert m["cluster_by"] == {"col": "cell", "buckets": 4} and m["rows"] == 120
+    want = {i: 2 * i for i in range(100)} | {i: 3 * i for i in range(100, 120)}
+    assert {r["cell"]: r["v"] for r in out.collect()} == want
+    assert {r["cell"]: r["v"] for r in ckpt.read("facts").collect()} == want
+    _assert_manifest_matches_files(spark, ckpt, "facts")
+    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        dim = ckpt.write_stage(spark.range(120).selectExpr("id AS cell", "id AS w"), "dim", cluster_by=("cell", 4))
+        joined = ckpt.read("facts").join(dim, "cell")
+        plan = formatted_plan(joined)
+        assert "Exchange" not in plan, plan
+        assert joined.count() == 120
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
