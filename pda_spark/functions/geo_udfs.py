@@ -335,15 +335,12 @@ def _geom_cover(g, res: int) -> list[int]:
     """Tight cover of one decoded geometry: its bbox cover minus the
     cells whose rectangle doesn't intersect the geometry (the tight-cover
     soundness invariant shared by every cover UDF; a bbox cover of at
-    most 4 cells is kept whole)."""
+    most 4 cells is kept whole). All of the bbox cells are tested in one
+    ``kernels.boxes_intersect`` pass."""
     cover = cells.cover_bbox(*kernels.bbox(g), res)
     if len(cover) > 4:
-        return [
-            int(cid)
-            for cid in cover
-            if kernels.polys_intersect(g, wkb.decode(wkb.box(*cells.cell_bounds(int(cid)))))
-        ]
-    return [int(c) for c in cover]
+        cover = cover[kernels.boxes_intersect(g, *cells.cell_boxes(cover))]
+    return cover.tolist()
 
 
 def cover_cells(res: int):

@@ -27,6 +27,8 @@ scans on cell predicates.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 MAX_RES = 28
@@ -62,27 +64,30 @@ def cell_of(lon: np.ndarray, lat: np.ndarray, res: int):
     return cell_id(res, _axis_index(lon, -180.0, 360.0, n), _axis_index(lat, -90.0, 180.0, n))
 
 
-def cell_bounds(cid: int) -> tuple[float, float, float, float]:
-    res = int(cell_res(np.asarray(cid)))
-    ix, iy = cell_ixy(np.asarray(cid))
-    n = 1 << res
+def cell_boxes(cid: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(minx, miny, maxx, maxy) arrays of each cell's rectangle. Vectorized."""
+    c = np.asarray(cid, dtype=np.int64)
+    ix, iy = cell_ixy(c)
+    n = (np.int64(1) << cell_res(c).astype(np.int64)).astype(np.float64)
     w, h = 360.0 / n, 180.0 / n
-    minx = -180.0 + float(ix) * w
-    miny = -90.0 + float(iy) * h
+    minx = -180.0 + ix.astype(np.float64) * w
+    miny = -90.0 + iy.astype(np.float64) * h
     return minx, miny, minx + w, miny + h
 
 
+def _bbox_index(v: float, lo: float, span: float, n: int) -> int:
+    # clamped before the floor, so +-inf land in the edge cells
+    return math.floor(min(max((v - lo) / span * n, 0.0), n - 1.0))
+
+
 def cover_bbox(minx: float, miny: float, maxx: float, maxy: float, res: int) -> np.ndarray:
-    """All cells at ``res`` overlapping the bbox. Vectorized meshgrid."""
+    """All cells at ``res`` overlapping the bbox, x-major. Vectorized."""
     n = 1 << res
-    ix0 = int(np.clip(np.floor((minx + 180.0) / 360.0 * n), 0, n - 1))
-    ix1 = int(np.clip(np.floor((maxx + 180.0) / 360.0 * n), 0, n - 1))
-    iy0 = int(np.clip(np.floor((miny + 90.0) / 180.0 * n), 0, n - 1))
-    iy1 = int(np.clip(np.floor((maxy + 90.0) / 180.0 * n), 0, n - 1))
-    ix = np.arange(ix0, ix1 + 1, dtype=np.int64)
-    iy = np.arange(iy0, iy1 + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(ix, iy, indexing="ij")
-    return cell_id(res, gx.ravel(), gy.ravel())
+    ix0, ix1 = _bbox_index(minx, -180.0, 360.0, n), _bbox_index(maxx, -180.0, 360.0, n)
+    iy0, iy1 = _bbox_index(miny, -90.0, 180.0, n), _bbox_index(maxy, -90.0, 180.0, n)
+    ny = max(iy1 - iy0 + 1, 0)
+    k = np.arange(max(ix1 - ix0 + 1, 0) * ny)
+    return cell_id(res, ix0 + k // max(ny, 1), iy0 + k % max(ny, 1))
 
 
 def choose_res(width_deg: float, target_cells: int = 4) -> int:

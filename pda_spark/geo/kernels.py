@@ -378,12 +378,19 @@ def points_in_polygons(pts: np.ndarray, polys: list[list[np.ndarray]]) -> np.nda
         for ring in rings:
             x0, y0 = ring[:-1, 0][None, :], ring[:-1, 1][None, :]
             x1, y1 = ring[1:, 0][None, :], ring[1:, 1][None, :]
-            cond = (y0 > py) != (y1 > py)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
-            crossings += (cond & (px < xint)).sum(axis=1)
+            crossings += _ray_hits(px, py, x0, y0, x1, y1).sum(axis=1)
         inside |= (crossings % 2) == 1
     return inside
+
+
+def _ray_hits(px, py, x0, y0, x1, y1) -> np.ndarray:
+    """Elementwise: the +x ray from (px, py) crosses edge (x0,y0)-(x1,y1)
+    (half-open in y, the even-odd ray-cast step of every PIP test here).
+    Operands broadcast, so one call covers points x edges x boxes."""
+    cond = (y0 > py) != (y1 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
+    return cond & (px < xint)
 
 
 def _edges(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
@@ -393,54 +400,56 @@ def _edges(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _segments_cross(a0, a1, b0, b1) -> bool:
-    """Any proper/improper crossing between edge sets (vectorized n x m).
+    """Any proper/improper crossing between edge sets (vectorized n x m)."""
+    return bool(_seg_hits(
+        a0[:, None, 0], a0[:, None, 1], a1[:, None, 0], a1[:, None, 1],
+        b0[None, :, 0], b0[None, :, 1], b1[None, :, 0], b1[None, :, 1],
+    ).any())
+
+
+def _seg_hits(px, py, qx, qy, rx, ry, sx, sy) -> np.ndarray:
+    """Elementwise: segment p-q crosses or touches segment r-s (operands
+    broadcast).
 
     The orientation-product test alone reports a false positive for
     COLLINEAR-DISJOINT segment pairs (all four orientations zero); those
     pairs additionally require per-axis interval overlap.
     """
 
-    def orient(p, q, r):
-        return (q[..., 0] - p[..., 0]) * (r[..., 1] - p[..., 1]) - (
-            q[..., 1] - p[..., 1]
-        ) * (r[..., 0] - p[..., 0])
+    def orient(ax, ay, bx, by, cx, cy):
+        return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
 
-    p = a0[:, None, :]
-    q = a1[:, None, :]
-    r = b0[None, :, :]
-    s = b1[None, :, :]
-    d1 = orient(p, q, r)
-    d2 = orient(p, q, s)
-    d3 = orient(r, s, p)
-    d4 = orient(r, s, q)
+    d1 = orient(px, py, qx, qy, rx, ry)
+    d2 = orient(px, py, qx, qy, sx, sy)
+    d3 = orient(rx, ry, sx, sy, px, py)
+    d4 = orient(rx, ry, sx, sy, qx, qy)
     hit = ((d1 * d2) <= 0) & ((d3 * d4) <= 0)
     collinear = (d1 == 0) & (d2 == 0) & (d3 == 0) & (d4 == 0)
     if bool((hit & collinear).any()):
-        ox = np.minimum(p[..., 0], q[..., 0]) <= np.maximum(r[..., 0], s[..., 0])
-        ox &= np.minimum(r[..., 0], s[..., 0]) <= np.maximum(p[..., 0], q[..., 0])
-        oy = np.minimum(p[..., 1], q[..., 1]) <= np.maximum(r[..., 1], s[..., 1])
-        oy &= np.minimum(r[..., 1], s[..., 1]) <= np.maximum(p[..., 1], q[..., 1])
+        ox = np.minimum(px, qx) <= np.maximum(rx, sx)
+        ox &= np.minimum(rx, sx) <= np.maximum(px, qx)
+        oy = np.minimum(py, qy) <= np.maximum(ry, sy)
+        oy &= np.minimum(ry, sy) <= np.maximum(py, qy)
         hit &= ~collinear | (ox & oy)
-    return bool(hit.any())
+    return hit
 
 
 def _points_on_segments(pts: np.ndarray, e0: np.ndarray, e1: np.ndarray) -> np.ndarray:
     """(N,) bool: each point lies on any segment (collinear + in bbox)."""
     if len(pts) == 0 or len(e0) == 0:
         return np.zeros(len(pts), dtype=bool)
-    p = pts[:, None, :]
-    a = e0[None, :, :]
-    b = e1[None, :, :]
-    cross = (b[..., 0] - a[..., 0]) * (p[..., 1] - a[..., 1]) - (
-        b[..., 1] - a[..., 1]
-    ) * (p[..., 0] - a[..., 0])
-    inx = (np.minimum(a[..., 0], b[..., 0]) <= p[..., 0]) & (
-        p[..., 0] <= np.maximum(a[..., 0], b[..., 0])
-    )
-    iny = (np.minimum(a[..., 1], b[..., 1]) <= p[..., 1]) & (
-        p[..., 1] <= np.maximum(a[..., 1], b[..., 1])
-    )
-    return ((cross == 0) & inx & iny).any(axis=1)
+    return _on_segment(
+        pts[:, None, 0], pts[:, None, 1],
+        e0[None, :, 0], e0[None, :, 1], e1[None, :, 0], e1[None, :, 1],
+    ).any(axis=1)
+
+
+def _on_segment(px, py, ax, ay, bx, by) -> np.ndarray:
+    """Elementwise: point p lies on segment a-b (operands broadcast)."""
+    cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
+    inx = (np.minimum(ax, bx) <= px) & (px <= np.maximum(ax, bx))
+    iny = (np.minimum(ay, by) <= py) & (py <= np.maximum(ay, by))
+    return (cross == 0) & inx & iny
 
 
 def polys_contains(ga: wkb.Geom, gb: wkb.Geom) -> bool:
@@ -560,6 +569,80 @@ def polys_intersect(ga: wkb.Geom, gb: wkb.Geom) -> bool:
     ea0, ea1 = _edges([r for rings in pa for r in rings])
     eb0, eb1 = _edges([r for rings in pb for r in rings])
     return _segments_cross(ea0, ea1, eb0, eb1)
+
+
+# (boxes x vertices/edges) elements per chunk of ``boxes_intersect``:
+# bounds the 2-D temporaries at a few tens of MB whatever the geometry's
+# vertex count or the number of boxes
+BOX_CHUNK_ELEMS = 1 << 22
+
+
+def boxes_intersect(
+    g: wkb.Geom, minx: np.ndarray, miny: np.ndarray, maxx: np.ndarray, maxy: np.ndarray
+) -> np.ndarray:
+    """``polys_intersect(g, box)`` for many axis-aligned boxes at once:
+    (B,) bool, the same decision per box as the scalar predicate against
+    the CCW box polygon ``wkb.box(minx, miny, maxx, maxy)``.
+
+    One pass applies the scalar predicate's own primitives elementwise
+    over (box x vertex/edge) arrays, in its operand order: the bbox
+    reject; the ray cast of the geometry's vertices against each box
+    (all vertices for points and lines, outer-ring vertices for
+    polygons); for polygons, the ray cast of each box's corners against
+    the geometry; the point-on-edge test (points) or the segment
+    crossing test (lines, polygons) against the box edges. Each stage
+    runs only on the boxes still undecided; boxes are chunked so each
+    stage's temporaries stay under ``BOX_CHUNK_ELEMS`` elements."""
+    minx, miny, maxx, maxy = (np.asarray(v, dtype=np.float64) for v in (minx, miny, maxx, maxy))
+    kind = _KIND[g.gtype]
+    ax0, ay0, ax1, ay1 = bbox(g)
+    out = ~((ax1 < minx) | (maxx < ax0) | (ay1 < miny) | (maxy < ay0))
+    if kind == "pt":
+        verts = g.points()
+    elif kind == "ln":
+        lines = g.lines()
+        verts = np.concatenate(lines)
+        e0, e1 = _edges(lines)
+    else:
+        polys = g.polygons()
+        verts = np.concatenate([rings[0] for rings in polys])
+        e0, e1 = _edges([r for rings in polys for r in rings])
+    width = max(len(verts), 0 if kind == "pt" else len(e0), 1)
+    step = max(1, BOX_CHUNK_ELEMS // (4 * width))
+    for a in range(0, len(out), step):
+        idx = a + np.flatnonzero(out[a : a + step])
+        if idx.size == 0:
+            continue
+        # box ring (CCW, as wkb.box): corners c0..c3, edge k runs c_k -> c_k+1
+        box = np.column_stack([minx[idx], miny[idx], maxx[idx], maxy[idx]])
+        bx, by = box[:, [0, 2, 2, 0]], box[:, [1, 1, 3, 3]]
+        bx1, by1 = box[:, [2, 2, 0, 0]], box[:, [1, 3, 3, 1]]
+        # the geometry's vertices inside each box: (box, vertex, box edge)
+        hits = _ray_hits(
+            verts[None, :, None, 0], verts[None, :, None, 1],
+            bx[:, None, :], by[:, None, :], bx1[:, None, :], by1[:, None, :],
+        )
+        hit = ((hits.sum(axis=2) % 2) == 1).any(axis=1)
+        if kind == "pg":
+            # a box corner inside the geometry (the closing corner repeats c0)
+            rest = ~hit
+            if rest.any():
+                corners = np.stack([bx[rest], by[rest]], axis=2).reshape(-1, 2)
+                hit[rest] = points_in_polygons(corners, polys).reshape(-1, 4).any(axis=1)
+        rest = ~hit
+        if rest.any():
+            cx, cy = bx[rest][:, None, :], by[rest][:, None, :]
+            dx, dy = bx1[rest][:, None, :], by1[rest][:, None, :]
+            if kind == "pt":
+                near = _on_segment(verts[None, :, None, 0], verts[None, :, None, 1], cx, cy, dx, dy)
+            else:
+                near = _seg_hits(
+                    e0[None, :, None, 0], e0[None, :, None, 1],
+                    e1[None, :, None, 0], e1[None, :, None, 1], cx, cy, dx, dy,
+                )
+            hit[rest] = near.any(axis=(1, 2))
+        out[idx] = hit
+    return out
 
 
 # ------------------------------------------------ convex clipping (exact)

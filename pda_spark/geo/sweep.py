@@ -26,6 +26,18 @@ Cost: O((V + X) * E) for V vertices, X edge crossings, E edges — always
 polynomial (inclusion–exclusion is exponential in overlap count). The per-cell subproblems of the tiling scale path keep E small,
 so this is also the 100 TB inner kernel.
 
+Batched cost model (``union_area``): the slab loop above costs ~15
+numpy calls per slab, and on the small per-cell subproblems that fixed
+interpreter cost (a few microseconds per call) is most of the time.
+``union_area`` instead evaluates every slab at once: one S x E crossing
+mask (S slabs), one ``lexsort`` by (slab, pid, x) for the even-odd
+parity, one by (slab, x) for the union coverage, both from integer
+cumsums re-based at each slab start — a fixed ~40 calls per chunk, plus
+O(S*E + K log K) elementwise work for K crossings. Chunks hold at most
+``UNION_CHUNK_ELEMS`` mask elements, so memory stays bounded for any
+edge or slab count. The other kernels still walk slab by slab (they
+chain trapezoids across slabs or intersect two layers).
+
 Exactness: float64 arithmetic on exact slab topology — equal to the
 algebraic answer up to IEEE754 rounding (verified against shoelace /
 inclusion–exclusion oracles in tests/test_sweep_dissolve.py).
@@ -44,6 +56,16 @@ __all__ = [
     "intersect_union_geometry",
     "merged_boundary_polygons",
 ]
+
+
+# elements per chunk of the 2-D passes of ``union_area`` (the slab x
+# edge crossing mask; the edge x edge crossing search): bounds their
+# temporaries at a few tens of MB for any edge or slab count
+UNION_CHUNK_ELEMS = 1 << 22
+
+# np.sum adds fewer than this many float64 values one after another
+# (its pairwise blocks start at 8); union_area sums short slabs the same way
+_SEQ_SUM_MAX = 8
 
 
 def _edges_of_layer(polys: list[list[np.ndarray]]):
@@ -73,13 +95,16 @@ def _edges_of_layer(polys: list[list[np.ndarray]]):
     )
 
 
-def _crossing_ys(x0, y0, x1, y1, chunk: int = 256) -> np.ndarray:
+def _crossing_ys(x0, y0, x1, y1) -> np.ndarray:
     """y coordinates of proper pairwise segment crossings (vectorized,
     chunked O(E^2)). Endpoint touches need no breakpoint — endpoints are
-    vertex breakpoints already."""
+    vertex breakpoints already. A block of rows holds a quarter of
+    ``UNION_CHUNK_ELEMS`` pairs: it builds about eight float64
+    temporaries of that size."""
     n = len(x0)
     if n < 2:
         return np.empty(0)
+    chunk = max(1, UNION_CHUNK_ELEMS // (4 * n))
     dx = x1 - x0
     dy = y1 - y0
     out = []
@@ -177,21 +202,70 @@ def _slabs(layers_edges) -> np.ndarray:
 
 def union_area(polys: list[list[np.ndarray]]) -> float:
     """Exact area of union(polys); each polygon is [outer, *holes]
-    (even-odd fill). Arbitrary simple rings — no convexity requirement."""
+    (even-odd fill). Arbitrary simple rings — no convexity requirement.
+
+    Every slab is evaluated in one batched pass (see the module
+    docstring); the result equals, bit for bit, a loop that runs
+    ``_layer_union_intervals`` per slab and adds ``np.sum(ends - starts)
+    * height`` slab by slab."""
     edges = _edges_of_layer(polys)
     if len(edges[0]) == 0:
         return 0.0
     bps = _slabs([edges])
-    total = 0.0
-    for i in range(len(bps) - 1):
-        h = bps[i + 1] - bps[i]
-        if h <= 0.0:
-            continue
-        ym = 0.5 * (bps[i] + bps[i + 1])
-        s, e, _, _ = _layer_union_intervals(edges, ym)
-        if len(s):
-            total += float(np.sum(e - s)) * h
-    return total
+    h = bps[1:] - bps[:-1]
+    ym = 0.5 * (bps[:-1] + bps[1:])
+    keep = ~(h <= 0.0)
+    h, ym = h[keep], ym[keep]
+    step = max(1, UNION_CHUNK_ELEMS // len(edges[0]))
+    total = np.float64(0.0)
+    for a in range(0, len(ym), step):
+        total = _add_slab_areas(total, edges, ym[a : a + step], h[a : a + step])
+    return float(total)
+
+
+def _add_slab_areas(total, edges, ym: np.ndarray, h: np.ndarray):
+    """``total`` plus the covered area of each slab (mid-line ``ym``,
+    height ``h``), added in slab order."""
+    x0, y0, x1, y1, pid = edges
+    # one slab x edge crossing mask; nonzero keeps (slab, edge) order
+    si, ei = np.nonzero((y0[None, :] > ym[:, None]) != (y1[None, :] > ym[:, None]))
+    if si.size == 0:
+        return total
+    xs = x0[ei] + (ym[si] - y0[ei]) * (x1[ei] - x0[ei]) / (y1[ei] - y0[ei])
+    p = pid[ei]
+    # per slab: parity within each polygon (entry/exit), by (pid, x)
+    o = np.lexsort((xs, p, si))
+    xs, p, si = xs[o], p[o], si[o]
+    pos = np.arange(si.size)
+    grp_first = np.r_[True, (p[1:] != p[:-1]) | (si[1:] != si[:-1])]
+    parity = (pos - np.maximum.accumulate(np.where(grp_first, pos, 0))) % 2
+    delta = np.where(parity == 0, 1, -1)
+    # per slab: union coverage by x, entries before exits at equal x;
+    # the cumsum is re-based at each slab start
+    o = np.lexsort((-delta, xs, si))
+    xs, d, si = xs[o], delta[o], si[o]
+    cum = np.cumsum(d)
+    slab_first = np.r_[True, si[1:] != si[:-1]]
+    start = np.maximum.accumulate(np.where(slab_first, pos, 0))
+    cov = cum - (cum - d)[start]
+    opening = (cov == 1) & (d == 1)
+    closing = (cov == 0) & (d == -1)
+    length = xs[closing] - xs[opening]
+    slab = si[opening]
+    # per-slab sums as np.sum makes them: in sequence below 8 intervals
+    n = np.bincount(slab, minlength=len(ym))
+    first = np.r_[0, np.cumsum(n)[:-1]]
+    short = n[slab] < _SEQ_SUM_MAX
+    pad = np.zeros((len(ym), _SEQ_SUM_MAX - 1))
+    pad[slab[short], (np.arange(slab.size) - first[slab])[short]] = length[short]
+    sums = np.zeros(len(ym))
+    for j in range(_SEQ_SUM_MAX - 1):
+        sums = sums + pad[:, j]
+    for k in np.flatnonzero(n >= _SEQ_SUM_MAX):
+        sums[k] = np.sum(length[first[k] : first[k] + n[k]])
+    # slab areas, accumulated in slab order (cumsum adds in sequence)
+    hit = n > 0
+    return np.cumsum(np.r_[total, sums[hit] * h[hit]])[-1]
 
 
 def intersect_union_area(

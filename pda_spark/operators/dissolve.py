@@ -107,8 +107,10 @@ def cell_pieces(df: DataFrame, res: int, geom: str = "geom", key_col: str | None
             float(outer[:, 0].max()),
             float(outer[:, 1].max()),
         )
-        for cid in cells.cover_bbox(*bb, res):
-            yield (int(cid),), cells.cell_bounds(int(cid))
+        cover = cells.cover_bbox(*bb, res)
+        boxes = zip(*(v.tolist() for v in cells.cell_boxes(cover)))
+        for cid, box in zip(cover.tolist(), boxes):
+            yield (cid,), box
 
     return _clipped_pieces(df, geom, key_col, tiles, _PIECE_SCHEMA)
 

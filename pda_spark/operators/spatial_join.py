@@ -879,7 +879,7 @@ def knn_join(
         return result.drop(*helper_cols)
     # NULL ids share one window partition and never match the complete-id
     # set, so no ring can certify them: fail before the first retry
-    if queries.filter(F.col(query_id).isNull()).limit(1).count():
+    if not queries.filter(F.col(query_id).isNull()).isEmpty():
         raise ValueError(
             f"knn_join(exact=True): query_id column {query_id!r} has NULL values; "
             "exact answers need a non-NULL id per query"
@@ -909,7 +909,7 @@ def knn_join(
         # set, never collect + isin): with a large query table even 1%
         # incomplete would blow a literal IN-list
         bad = incomplete_queries(result).localCheckpoint()
-        if bad.limit(1).count() == 0:
+        if bad.isEmpty():
             break
         ring *= 4
         redo = queries.join(bad, on=query_id, how="left_semi")

@@ -16,13 +16,18 @@ Two layers:
    plane, so area(union(polys)) == sum over cells of area(union(polys
    clipped to cell)). Clipping to a cell box is an exact Sutherland-Hodgman convex
    clip, each per-cell subproblem is small (bounded by local overlap
-   density), and the whole computation is one explode + one grouped
-   aggregation — the partial/final split of a geometric UDAF, with the
-   shuffle keyed on (key, cell) so hot classes spread over many tasks.
+   density), and the whole computation is one explode + one shuffle
+   keyed on (key, cell), so hot classes spread over many tasks — the
+   partial/final split of a geometric UDAF. The partial side runs on
+   partitions sorted by (key, cell): one ``mapInPandas`` call per Arrow
+   batch unions every (key, cell) run in the batch, instead of one
+   grouped-pandas call per (key, cell) (~2 ms of fixed cost each, more
+   than the union itself for the typical few-piece cell).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -81,26 +86,68 @@ def union_area_by_cells(
     Handles arbitrary simple polygons WITH holes (holes are clipped per
     cell alongside outer rings and subtracted by the scanline kernel's
     even-odd fill — round-1 dropped holes here). Per-cell cost is
-    polynomial in local piece count (geo.sweep), so no density cap."""
+    polynomial in local piece count (geo.sweep), so no density cap.
+
+    Pieces are hash-partitioned on (key, cell) and sorted within each
+    partition, so every (key, cell) group is one contiguous run; a
+    ``mapInPandas`` pass unions the runs batch by batch, carrying a run
+    that straddles two Arrow batches into the next one."""
     from pda_spark.operators.dissolve import cell_pieces
 
-    pieces = cell_pieces(polygons, res, geom=geom, key_col=key)
+    partials = _cell_union_areas(cell_pieces(polygons, res, geom=geom, key_col=key))
+    return partials.groupBy("key").agg(F.round(F.sum("area"), 12).alias("union_area"))
 
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        polys = [wkb.decode(bytes(buf)).polygons()[0] for buf in pdf["piece"]]
-        area = sweep.union_area(polys)
-        return pd.DataFrame(
-            {"key": [pdf["key"].iloc[0]], "cell": [pdf["cell"].iloc[0]], "area": [area]}
-        )
 
+def _cell_union_areas(pieces: DataFrame) -> DataFrame:
+    """(key, cell, piece) rows -> (key, cell, area): the union area of
+    each (key, cell) group's pieces."""
     # explicit count (session.keyed_width): AQE coalesced this few-byte,
     # compute-heavy stage to one task
-    partials = (
+    return (
         pieces.repartition(keyed_width(pieces), "key", "cell")
-        .groupBy("key", "cell")
-        .applyInPandas(per_cell, _PARTIAL_SCHEMA)
+        .sortWithinPartitions("key", "cell")
+        .mapInPandas(_union_cell_runs, _PARTIAL_SCHEMA)
     )
-    return partials.groupBy("key").agg(F.round(F.sum("area"), 12).alias("union_area"))
+
+
+def _union_cell_runs(batches):
+    """(key, cell, piece) batches of a partition sorted by (key, cell) ->
+    one (key, cell, area) row per (key, cell) run: each batch unions its
+    complete runs in one Python call, and the run a batch boundary
+    splits is carried into the next batch (as a list of frames)."""
+    carry: list[pd.DataFrame] = []
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        keys, cids = pdf["key"].to_numpy(), pdf["cell"].to_numpy()
+        cut = np.flatnonzero((keys[1:] != keys[:-1]) | (cids[1:] != cids[:-1])) + 1
+        bounds = np.r_[0, cut, len(pdf)]
+        runs = [pdf.iloc[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+        if carry:
+            head = carry[0]
+            if (head["key"].iat[0], head["cell"].iat[0]) == (keys[0], cids[0]):
+                carry.append(runs.pop(0))
+            if runs:
+                runs.insert(0, pd.concat(carry))
+                carry = []
+        if runs:
+            carry = [runs.pop()]
+        if runs:
+            yield _run_areas(runs)
+    if carry:
+        yield _run_areas([pd.concat(carry)])
+
+
+def _run_areas(runs: list[pd.DataFrame]) -> pd.DataFrame:
+    areas = [
+        sweep.union_area([wkb.decode(bytes(buf)).polygons()[0] for buf in run["piece"]])
+        for run in runs
+    ]
+    return pd.DataFrame({
+        "key": [run["key"].iat[0] for run in runs],
+        "cell": np.array([run["cell"].iat[0] for run in runs], dtype=np.int64),
+        "area": np.array(areas, dtype=np.float64),
+    })
 
 
 def tile_pyramid(
@@ -1052,7 +1099,7 @@ def flow_accumulation(
         pack(F.col("ix"), F.col("iy")).alias("a"),
     )
     for _ in range(max_iter):
-        if jump.limit(1).count() == 0:
+        if jump.isEmpty():
             break
         ext = pairs.join(jump, pairs.a == jump.c).select("s", F.col("p").alias("a"))
         pairs = pairs.union(ext).distinct().localCheckpoint(eager=False)

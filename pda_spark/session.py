@@ -193,14 +193,14 @@ def arrow_width(df) -> int:
 
 def keyed_width(df) -> int:
     """Partition count for the keyed exchange under a per-group Python
-    stage (``applyInPandas`` scanline unions, per-cell dissolves): twice
+    stage (per-cell scanline unions, per-cell dissolves): twice
     the session's parallelism, so a hot key's cells spread over all
     cores. These stages are compute-heavy per row but tiny in bytes, so
     AQE's size-based coalescing would squeeze an ENSURE_REQUIREMENTS
     exchange onto one or a few tasks (q46 at sf1.0; the ``spatial``
     benchmark's ``coverage_area`` union ran its 8 shuffle partitions as
     one task). Use it as ``df.repartition(keyed_width(df), *keys)``
-    before ``groupBy(*keys)``: an explicit count is exempt from
-    coalescing and satisfies the grouping's clustering, so no second
-    exchange appears."""
+    before ``groupBy(*keys)`` or ``sortWithinPartitions(*keys)``: an
+    explicit count is exempt from coalescing and satisfies the grouping's
+    clustering, so no second exchange appears."""
     return 2 * df.sparkSession.sparkContext.defaultParallelism

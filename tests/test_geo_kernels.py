@@ -148,7 +148,7 @@ def test_clip_convex_exact():
 
 def test_cells_roundtrip():
     cid = cells.cell_of(np.array([13.4]), np.array([52.5]), 10)[0]
-    minx, miny, maxx, maxy = cells.cell_bounds(int(cid))
+    minx, miny, maxx, maxy = (float(v[0]) for v in cells.cell_boxes([cid]))
     assert minx <= 13.4 <= maxx and miny <= 52.5 <= maxy
     assert cells.cell_res(np.array([cid]))[0] == 10
 
@@ -485,3 +485,148 @@ def test_polys_contains_semantics():
     assert not kernels.polys_contains(holed, across_hole)
     assert not kernels.polys_contains(holed, swallows_hole)
     assert kernels.polys_contains(holed, beside_hole)
+
+
+# ------------------------------------------------ tight cover vs reference
+
+
+def _cell_box_reference(cid: int) -> tuple[float, float, float, float]:
+    """One cell's rectangle by scalar arithmetic (the per-cell form)."""
+    res = int(cells.cell_res(np.asarray(cid)))
+    ix, iy = cells.cell_ixy(np.asarray(cid))
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    minx = -180.0 + float(ix) * w
+    miny = -90.0 + float(iy) * h
+    return minx, miny, minx + w, miny + h
+
+
+def _cover_reference(g: wkb.Geom, res: int) -> list[int]:
+    """The per-cell tight cover: the scalar ``polys_intersect`` of the
+    geometry against each bbox cell's WKB box (a bbox cover of at most 4
+    cells is kept whole)."""
+    cover = cells.cover_bbox(*kernels.bbox(g), res)
+    if len(cover) <= 4:
+        return [int(c) for c in cover]
+    return [
+        int(c) for c in cover
+        if kernels.polys_intersect(g, wkb.decode(wkb.box(*_cell_box_reference(int(c)))))
+    ]
+
+
+def _star(rng, cx, cy, radius, n, r_lo=0.6, r_hi=1.0):
+    """Closed star-shaped ring (the benchmark's land-cover shape)."""
+    ang = 2 * np.pi * (np.arange(n) + rng.uniform(0, 0.8, n)) / n
+    r = radius * rng.uniform(r_lo, r_hi, n)
+    ring = np.column_stack([cx + r * np.cos(ang), cy + r * np.sin(ang)])
+    return np.vstack([ring, ring[:1]])
+
+
+def _cover_shapes(res: int, seed: int) -> list[wkb.Geom]:
+    """Shapes a few cells across at ``res``: holed land cover, rotated
+    footprints, multipolygons, (multi)linestrings, multipoints, and
+    polygons and boxes whose vertices and edges lie on cell boundaries."""
+    rng = np.random.default_rng([seed, res])
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    x_lo, x_hi = max(-170.0, -180.0 + 6 * w), min(170.0, 180.0 - 6 * w)
+    y_lo, y_hi = max(-80.0, -90.0 + 6 * h), min(80.0, 90.0 - 6 * h)
+    out = []
+    for _ in range(12):
+        cx, cy = rng.uniform(x_lo, x_hi), rng.uniform(y_lo, y_hi)
+        rad = h * rng.uniform(0.5, 4.0)
+        rings = [_star(rng, cx, cy, rad, int(rng.integers(12, 49)))]
+        if rng.random() < 0.5:
+            rings.append(_star(rng, cx, cy, rad, 8, 0.15, 0.3)[::-1])
+        out.append(wkb.Geom(wkb.POLYGON, rings))
+        # rotated footprint quad
+        half, th = h * rng.uniform(0.5, 3.0), rng.uniform(0.1, np.pi / 2 - 0.1)
+        c, s = np.cos(th), np.sin(th)
+        local = np.array([[-1, -1], [1, -1], [1, 1], [-1, 1], [-1, -1]]) * [half, 0.7 * half]
+        quad = np.column_stack([cx + local[:, 0] * c - local[:, 1] * s,
+                                cy + local[:, 0] * s + local[:, 1] * c])
+        out.append(wkb.Geom(wkb.POLYGON, [quad]))
+        # two-part multipolygon, open polyline, two-part multilinestring, multipoint
+        far = _star(rng, cx + 3 * w, cy - 2 * h, 0.8 * h, 7)
+        out.append(wkb.Geom(wkb.MULTIPOLYGON, [rings, [far]]))
+        line = _star(rng, cx, cy, rad, 9)[:-1]
+        out.append(wkb.Geom(wkb.LINESTRING, [line]))
+        out.append(wkb.Geom(wkb.MULTILINESTRING, [[line[:4]], [line[5:] + [w, 0.0]]]))
+        pts = np.column_stack([cx + rng.uniform(-3, 3, 6) * w, cy + rng.uniform(-3, 3, 6) * h])
+        out.append(wkb.Geom(wkb.MULTIPOINT, [[p[None, :]] for p in pts]))
+        # on the cell grid: a box of whole cells, a diamond and a triangle
+        # with grid-corner vertices, and a multipoint on cell corners
+        ix0 = int(np.floor((cx + 180.0) / w))
+        iy0 = int(np.floor((cy + 90.0) / h))
+        gx = lambda k: -180.0 + (ix0 + k) * w  # noqa: E731
+        gy = lambda k: -90.0 + (iy0 + k) * h  # noqa: E731
+        kx, ky = int(rng.integers(1, 4)), int(rng.integers(1, 4))
+        out.append(wkb.decode(wkb.box(gx(0), gy(0), gx(kx + 1), gy(ky + 1))))
+        diamond = np.array([[gx(2), gy(0)], [gx(4), gy(2)], [gx(2), gy(4)], [gx(0), gy(2)], [gx(2), gy(0)]])
+        out.append(wkb.Geom(wkb.POLYGON, [diamond]))
+        tri = np.array([[gx(0), gy(0)], [gx(3), gy(0)], [gx(0), gy(3)], [gx(0), gy(0)]])
+        out.append(wkb.Geom(wkb.POLYGON, [tri]))
+        grid = [[np.array([[gx(i), gy(j)]])] for i, j in ((0, 0), (3, 1), (1, 3))]
+        out.append(wkb.Geom(wkb.MULTIPOINT, grid))
+    return out
+
+
+@pytest.mark.parametrize("res", [4, 6, 9, 10, 12])
+def test_tight_cover_matches_per_cell_reference(res):
+    """The one-pass tight cover keeps exactly the cells (in the same
+    order) that the per-cell scalar ``polys_intersect`` loop keeps."""
+    from pda_spark.functions.geo_udfs import _geom_cover
+
+    shapes = _cover_shapes(res, seed=11)
+    tested = 0
+    for g in shapes:
+        want = _cover_reference(g, res)
+        assert _geom_cover(g, res) == want, (res, g.gtype)
+        tested += len(cells.cover_bbox(*kernels.bbox(g), res)) > 4
+    assert tested > len(shapes) // 2  # most shapes take the exact test
+
+
+def test_cell_boxes_match_scalar_arithmetic():
+    rng = np.random.default_rng(3)
+    for res in (0, 4, 12, 28):
+        n = 1 << res
+        cid = cells.cell_id(res, rng.integers(0, n, 50), rng.integers(0, n, 50))
+        got = np.column_stack(cells.cell_boxes(cid))
+        want = np.array([_cell_box_reference(int(c)) for c in cid])
+        assert got.tobytes() == want.tobytes(), res
+
+
+def test_tight_cover_across_box_chunks(monkeypatch):
+    """A polygon whose bbox cells span several box chunks gives the same
+    cover as in one chunk, and as the per-cell reference."""
+    from pda_spark.functions.geo_udfs import _geom_cover
+
+    rng = np.random.default_rng(7)
+    ring = _star(rng, 10.0, 50.0, 0.5, 40)
+    hole = _star(rng, 10.0, 50.0, 0.5, 8, 0.15, 0.3)[::-1]
+    g = wkb.Geom(wkb.POLYGON, [ring, hole])
+    whole = _geom_cover(g, 11)
+    monkeypatch.setattr(kernels, "BOX_CHUNK_ELEMS", 4 * 48 * 3)  # 3 boxes per chunk
+    assert len(cells.cover_bbox(*kernels.bbox(g), 11)) > 10 * 3
+    assert _geom_cover(g, 11) == whole == _cover_reference(g, 11)
+
+
+def test_tight_cover_large_polygon_bounded_memory():
+    """A 10k-vertex polygon at res 12 is tested in chunks: the peak of
+    traced allocations stays far below one unchunked (box x edge) array."""
+    import tracemalloc
+
+    from pda_spark.functions.geo_udfs import _geom_cover
+
+    rng = np.random.default_rng(5)
+    g = wkb.Geom(wkb.POLYGON, [_star(rng, 10.0, 50.0, 1.2, 10_000)])
+    n_cells = len(cells.cover_bbox(*kernels.bbox(g), 12))
+    tracemalloc.start()
+    try:
+        cover = _geom_cover(g, 12)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    unchunked = n_cells * 10_000 * 4 * 8  # one float64 (box, edge, box edge) array
+    assert peak < 160 * 2**20 < unchunked / 2, (peak, unchunked)
+    assert 0 < len(cover) < n_cells

@@ -205,8 +205,8 @@ def test_knn_guard_meters_sound():
     guard = spatial_join.knn_guard_meters(qlon, qlat, ring, res)
     qx, qy = proj.fwd(qlon, qlat)
     for i in range(len(qlon)):
-        cid = int(C.cell_of(np.array([qlon[i]]), np.array([qlat[i]]), res)[0])
-        x0, y0, x1, y1 = C.cell_bounds(cid)
+        cid = C.cell_of(np.array([qlon[i]]), np.array([qlat[i]]), res)
+        x0, y0, x1, y1 = (float(v[0]) for v in C.cell_boxes(cid))
         # ring rectangle: the union of cells within chebyshev distance `ring`
         rx0, ry0 = x0 - ring * lon_step, y0 - ring * lat_step
         rx1, ry1 = x1 + ring * lon_step, y1 + ring * lat_step
@@ -1000,7 +1000,7 @@ def test_builders_py4j_round_trip_budget(spark):
 
 
 @pytest.mark.parametrize("op", [
-    "points_in_polygons_join", "knn_join", "intersects_join",
+    "points_in_polygons_join", "knn_join", "knn_join_retry", "intersects_join",
     "union_area_by_cells", "rasterize_polygons",
 ])
 def test_operator_warm_repeat_compiles_nothing(spark, world, op):
@@ -1014,11 +1014,15 @@ def test_operator_warm_repeat_compiles_nothing(spark, world, op):
     lcs = world["land_cover_classes"]
     polys = lcs.select(F.col("id").alias("lc_id"), F.col("geom").alias("lc_geom"))
     knn_pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
-    # every query is certified at the seed ring: the retry path's limits
-    # get a fresh counter name, so new code, on every call
-    qs = spark.createDataFrame(
-        [(q, bytearray(wkb.point(x, y))) for q, x, y in [(0, 10.2, 50.2), (1, 10.3, 50.0)]],
-        "query_id int, qgeom binary",
+    # knn_join: every query is certified at the seed ring; knn_join_retry:
+    # (38.5, -20) needs one ring retry (test_knn_exact_one_ring_retry),
+    # so the call runs the NULL-id check and the retry loop's emptiness test
+    qs, qs_retry = (
+        spark.createDataFrame(
+            [(q, bytearray(wkb.point(x, y))) for q, x, y in [(0, 10.2, 50.2), second]],
+            "query_id int, qgeom binary",
+        )
+        for second in [(1, 10.3, 50.0), (1, 38.5, -20.0)]
     )
     for df in world.values():
         df.count()  # a cache filled by the first call changes the second's plan
@@ -1026,6 +1030,7 @@ def test_operator_warm_repeat_compiles_nothing(spark, world, op):
         "points_in_polygons_join": lambda: spatial_join.points_in_polygons_join(
             pts, polys, res=7, poly_geom="lc_geom"),
         "knn_join": lambda: spatial_join.knn_join(knn_pts, qs, **_KNN_KW),
+        "knn_join_retry": lambda: spatial_join.knn_join(knn_pts, qs_retry, **_KNN_KW),
         "intersects_join": lambda: spatial_join.intersects_join(
             imgs, polys, res=6, right_geom="lc_geom"),
         "union_area_by_cells": lambda: tiling.union_area_by_cells(lcs, res=6),

@@ -49,6 +49,57 @@ def union_area_convex(rings: list[np.ndarray], max_exact: int = 22) -> float:
     return total
 
 
+def union_area_slab_loop(polys: list[list[np.ndarray]]) -> float:
+    """Union area by the per-slab loop: ``_layer_union_intervals`` at each
+    slab's mid-line, ``np.sum`` of its interval lengths times the slab
+    height, added slab by slab — the reference the batched
+    ``sweep.union_area`` must equal bit for bit."""
+    edges = sweep._edges_of_layer(polys)
+    if len(edges[0]) == 0:
+        return 0.0
+    bps = sweep._slabs([edges])
+    total = 0.0
+    for i in range(len(bps) - 1):
+        h = bps[i + 1] - bps[i]
+        if h <= 0.0:
+            continue
+        ym = 0.5 * (bps[i] + bps[i + 1])
+        s, e, _, _ = sweep._layer_union_intervals(edges, ym)
+        if len(s):
+            total += float(np.sum(e - s)) * h
+    return total
+
+
+def _same_bits(polys) -> float:
+    want = union_area_slab_loop(polys)
+    got = sweep.union_area(polys)
+    assert np.float64(got).tobytes() == np.float64(want).tobytes(), (got, want)
+    return got
+
+
+def _land_cover(seed: int, n: int, span: float = 2.0):
+    """(class, polygon) pairs in the benchmark's land-cover style: star
+    rings of 12-48 vertices, radii log-spread, a quarter with a hole,
+    packed into a ``span``-degree square so they overlap."""
+    rng = np.random.default_rng(seed)
+    radius = rng.permutation(np.exp(np.linspace(np.log(0.05), np.log(0.6), n)))
+    out = []
+    for i in range(n):
+        cx, cy = rng.uniform(10.0, 10.0 + span), rng.uniform(50.0, 50.0 + span)
+
+        def star(rad, k, lo, hi):
+            ang = 2 * np.pi * (np.arange(k) + rng.uniform(0, 0.8, k)) / k
+            r = rad * rng.uniform(lo, hi, k)
+            ring = np.column_stack([cx + r * np.cos(ang), cy + r * np.sin(ang)])
+            return np.vstack([ring, ring[:1]])
+
+        rings = [star(radius[i], int(rng.integers(12, 49)), 0.6, 1.0)]
+        if i % 4 == 0:
+            rings.append(star(radius[i], 8, 0.15, 0.3)[::-1])
+        out.append((i % 3, rings))
+    return out
+
+
 # ------------------------------------------------------------ pure kernel
 
 
@@ -372,3 +423,88 @@ def test_dissolve_cleanup_buffer_matches_reference_semantics(spark, holed_world)
     assert len(rings) == 1  # one merged polygon, gap closed
     unhealed = dissolve.dissolve(df).collect()[0]
     assert len(wkb.decode(bytes(unhealed["geom"])).polygons()) == 2
+
+
+# ------------------------------------------- batched union vs slab loop
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_union_area_matches_slab_loop_on_cell_pieces(seed):
+    """Per-(class, cell) pieces clipped at res 7-9, as the tiling path
+    unions them, and whole-class unions (the benchmark oracle's form)."""
+    from pda_spark.geo import cells
+
+    polys = _land_cover(seed, 40)
+    for res in (7, 8, 9):
+        groups: dict = {}
+        for cls, rings in polys:
+            bb = rings[0].min(axis=0), rings[0].max(axis=0)
+            cover = cells.cover_bbox(bb[0][0], bb[0][1], bb[1][0], bb[1][1], res)
+            for cid, box in zip(cover.tolist(), zip(*cells.cell_boxes(cover))):
+                x0, y0, x1, y1 = box
+                clip = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+                oc = kernels.clip_convex(rings[0], clip)
+                if not len(oc):
+                    continue
+                rs = [oc] + [h for h in (kernels.clip_convex(r, clip) for r in rings[1:]) if len(h)]
+                groups.setdefault((cls, cid), []).append(rs)
+        assert len(groups) >= 6, res
+        for pieces in groups.values():
+            _same_bits(pieces)
+    for cls in range(3):
+        assert _same_bits([rings for c, rings in polys if c == cls]) > 0.0
+
+
+def test_union_area_matches_slab_loop_on_edge_cases():
+    """Holes, touching and nested polygons, horizontal edges, slabs with
+    no coverage between separated shapes, a zero-area ring, and a slab
+    crossed by 10 disjoint intervals (the np.sum branch, >= 8)."""
+    outer, hole = sq(0, 0, 4, 4), sq(1, 1, 3, 3)[::-1]
+    cases = [
+        [[outer, hole]],
+        [[outer, hole], [sq(1.5, 1.5, 2.5, 2.5)]],
+        [[sq(0, 0, 1, 1)], [sq(1, 0, 2, 1)], [sq(0, 1, 1, 2)]],  # edge-touching
+        [[sq(0, 0, 1, 1)], [sq(1, 1, 2, 2)]],  # corner-touching
+        [[sq(0, 0, 1, 1)], [sq(0, 5, 1, 6)]],  # an empty slab between
+        [[np.array([[0, 0], [2, 0], [1, 0], [0, 0]], float)], [sq(0, 0, 1, 1)]],
+        [[L_SHAPE], [U_SHAPE]],
+        [[sq(0, 0, 1, 1)], [sq(0, 0, 1, 1)]],  # duplicates
+        [[sq(2 * i, 0, 2 * i + 1, 1 + 0.1 * i)] for i in range(10)],
+        [[sq(2 * i, 0, 2 * i + 1.5, 1)] for i in range(12)] + [[outer, hole]],
+    ]
+    for polys in cases:
+        _same_bits(polys)
+    assert sweep.union_area(cases[8]) == pytest.approx(sum(1 + 0.1 * i for i in range(10)))
+
+
+def test_union_area_across_chunks(monkeypatch):
+    """Slabs split into several chunks give the same bits as one chunk."""
+    polys = [rings for _, rings in _land_cover(4, 25, span=0.6)]
+    whole = _same_bits(polys)
+    n_edges = len(sweep._edges_of_layer(polys)[0])
+    monkeypatch.setattr(sweep, "UNION_CHUNK_ELEMS", 3 * n_edges)  # 3 slabs per chunk
+    assert np.float64(sweep.union_area(polys)).tobytes() == np.float64(whole).tobytes()
+
+
+def test_union_area_2048_pieces_bounded_memory():
+    """A 2,048-piece cell (the dissolve routing threshold) unions in
+    chunks: the peak of traced allocations stays below half of one
+    unchunked slab x edge float64 array, and the area matches the slab
+    loop."""
+    import tracemalloc
+
+    rng = np.random.default_rng(9)
+    xy = rng.uniform(0.0, 1.0, (2048, 2))
+    size = rng.uniform(0.005, 0.03, 2048)
+    polys = [[sq(x, y, x + d, y + d)] for (x, y), d in zip(xy, size)]
+    n_edges = len(sweep._edges_of_layer(polys)[0])
+    n_slabs = len(sweep._slabs([sweep._edges_of_layer(polys)])) - 1
+    tracemalloc.start()
+    try:
+        got = sweep.union_area(polys)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    unchunked = n_slabs * n_edges * 8
+    assert peak < 96 * 2**20 < unchunked / 2, (peak, unchunked)
+    assert np.float64(got).tobytes() == np.float64(union_area_slab_loop(polys)).tobytes()

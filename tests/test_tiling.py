@@ -53,10 +53,71 @@ def test_union_area_by_cells_keyed_exchange_not_coalescable(spark, world):
     polys = world["land_cover_classes"]
     plan = formatted_plan(tiling.union_area_by_cells(polys, res=8))
     tree = plan.split("\n\n")[0]
-    below = tree[tree.index("FlatMapGroupsInPandas"):]
+    below = tree[tree.index("MapInPandas"):]
     node = re.search(r"Exchange \((\d+)\)", below).group(1)
     args = re.search(rf"^\({node}\) Exchange\n.*\nArguments: (.*)$", plan, re.M).group(1)
     assert f", {keyed_width(polys)}), REPARTITION_BY_NUM" in args, plan
+
+
+def _union_by_group(pieces_pdf):
+    """Per-(key, cell) union areas of collected pieces, one group at a time."""
+    from pda_spark.geo import sweep, wkb
+
+    return {
+        (k, c): sweep.union_area([wkb.decode(bytes(b)).polygons()[0] for b in g["piece"]])
+        for (k, c), g in pieces_pdf.groupby(["key", "cell"], dropna=False)
+    }
+
+
+def test_union_cell_runs_carries_runs_across_batches(spark, world):
+    """Every split of a sorted partition into batches (empty batches
+    included) gives one area per (key, cell) run, equal to the union of
+    that group's pieces."""
+    import pandas as pd
+
+    pieces = dissolve.cell_pieces(world["land_cover_classes"], 7, key_col="featureclass")
+    pdf = pieces.toPandas().sort_values(["key", "cell"], kind="mergesort").reset_index(drop=True)
+    want = _union_by_group(pdf)
+    assert len(want) > 10 and len(pdf) > len(want)
+    for size in (1, 2, 3, 7, len(pdf)):
+        batches = [pdf.iloc[a:a + size] for a in range(0, len(pdf), size)]
+        batches.insert(1, pdf.iloc[:0])
+        out = pd.concat(list(tiling._union_cell_runs(iter(batches))), ignore_index=True)
+        got = {(k, c): a for k, c, a in out.itertuples(index=False)}
+        assert len(out) == len(got) == len(want), size
+        assert got == want, size
+    assert list(tiling._union_cell_runs(iter([pdf.iloc[:0]]))) == []
+
+
+def test_union_area_by_cells_streams_two_row_batches(spark, world):
+    """With 2-row Arrow batches most (key, cell) runs straddle a batch
+    boundary, and some partitions of the keyed exchange are empty: the
+    per-cell areas still equal a per-group union, and the per-key areas
+    their sums."""
+    from pda_spark.session import keyed_width
+
+    polys = world["land_cover_classes"].limit(6).localCheckpoint()
+    pieces = dissolve.cell_pieces(polys, 6, key_col="featureclass").localCheckpoint()
+    want = _union_by_group(pieces.toPandas())
+    sizes = pieces.repartition(keyed_width(pieces), "key", "cell").rdd.glom().map(len).collect()
+    assert 0 in sizes and max(sizes) > 2, sizes
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        cells_out = tiling._cell_union_areas(pieces).collect()
+        keyed = tiling.union_area_by_cells(polys, res=6).collect()
+    finally:
+        spark.conf.set(conf, old)
+    got = {(r["key"], r["cell"]): r["area"] for r in cells_out}
+    assert len(cells_out) == len(got) == len(want)
+    assert got == want
+    sums: dict = {}
+    for (k, _), a in sorted(want.items()):
+        sums[k] = sums.get(k, 0.0) + a
+    assert {r["key"]: r["union_area"] for r in keyed} == pytest.approx(
+        {k: round(v, 12) for k, v in sums.items()}, rel=1e-12
+    )
 
 
 def test_cover_cells_bbox_expr_parity(spark):
