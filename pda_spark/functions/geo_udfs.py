@@ -312,8 +312,8 @@ def geojson_feature(geom_col, id_col, props_col):
 
 def point_cell_lonlat(res: int):
     """One decode pass returning struct(cell, lon, lat) for point WKBs —
-    the lon/lat ride along so the join can bbox-prefilter candidates
-    JVM-side before any Python refine."""
+    the lon/lat ride along so a cell join's distance refine needs no
+    second decode."""
 
     @pandas_udf(T.StructType([
         T.StructField("cell", T.LongType()),
@@ -321,8 +321,13 @@ def point_cell_lonlat(res: int):
         T.StructField("lat", T.DoubleType()),
     ]))
     def _cell(geom: pd.Series) -> pd.DataFrame:
-        lon, lat = _decode_points(geom)
-        return pd.DataFrame({"cell": cells.cell_of(lon, lat, res), "lon": lon, "lat": lat})
+        # a NULL point gets a NULL cell, so it joins nothing
+        ok = geom.notna().to_numpy()
+        lon, lat = np.full(len(geom), np.nan), np.full(len(geom), np.nan)
+        if ok.any():
+            lon[ok], lat[ok] = _decode_points(geom[ok])
+        cell = pd.Series(cells.cell_of(lon, lat, res), dtype="Int64").mask(~ok)
+        return pd.DataFrame({"cell": cell, "lon": lon, "lat": lat})
 
     # asNondeterministic: the function IS deterministic, but the flag
     # stops CollapseProject from inlining the call once per struct-field
@@ -357,30 +362,6 @@ def cover_cells(res: int):
         return pd.Series([_geom_cover(get(buf), res) for buf in geom])
 
     return _cover
-
-
-def bbox_cover_struct(res: int):
-    """bbox AND tight cover cells in ONE decode pass -> struct(bbox, cells).
-    Chaining bbox_arr + cover_cells costs a second Python worker per
-    task (and doubles the per-action worker spin-up fixed cost on small
-    broadcast sides); this fuses them."""
-
-    @pandas_udf(T.StructType([
-        T.StructField("bbox", T.ArrayType(T.DoubleType())),
-        T.StructField("cells", T.ArrayType(T.LongType())),
-    ]))
-    def _bc(geom: pd.Series) -> pd.DataFrame:
-        get = _decode_cache()
-        bbs, covers = [], []
-        for buf in geom:
-            g = get(buf)
-            bbs.append(list(kernels.bbox(g)))
-            covers.append(_geom_cover(g, res))
-        return pd.DataFrame({"bbox": bbs, "cells": covers})
-
-    # single evaluation per row (see point_cell_lonlat): Catalyst would
-    # otherwise duplicate the UDF once per struct-field read
-    return _bc.asNondeterministic()
 
 
 # ----------------------------------------------------- refine predicates
@@ -437,34 +418,6 @@ def intersects_pair(geom_a: pd.Series, geom_b: pd.Series) -> pd.Series:
         res_u = kernels.polys_intersect_batch(ga_list, gb_list, ia, ib)
         out[slow_i] = res_u[inv]
     return pd.Series(out)
-
-
-@pandas_udf(T.BooleanType())
-def point_in_polygon_lonlat(lon: pd.Series, lat: pd.Series, poly_geom: pd.Series) -> pd.Series:
-    """PIP refine on already-decoded lon/lat doubles (skips re-decoding
-    point WKBs inside the join's refine stage)."""
-    pts = np.column_stack([lon.to_numpy(), lat.to_numpy()])
-    keys = pd.Series([bytes(b) for b in poly_geom])
-    out = np.zeros(len(keys), dtype=bool)
-    for key, idx in keys.groupby(keys).groups.items():
-        g = wkb.decode(key)
-        ii = np.asarray(idx)
-        out[ii] = kernels.points_in_polygons(pts[ii], g.polygons())
-    return pd.Series(out)
-
-
-def distance_m_lonlat():
-    """Planar EPSG:3035 distance in metres from four plain double columns
-    (no WKB decode — the cheap path when lon/lat ride along the plan)."""
-    from pda_spark.geo import proj
-
-    @pandas_udf(T.DoubleType())
-    def _dist(lon_a: pd.Series, lat_a: pd.Series, lon_b: pd.Series, lat_b: pd.Series) -> pd.Series:
-        xa, ya = proj.fwd(lon_a.to_numpy(), lat_a.to_numpy())
-        xb, yb = proj.fwd(lon_b.to_numpy(), lat_b.to_numpy())
-        return pd.Series(np.hypot(xa - xb, ya - yb))
-
-    return _dist
 
 
 @pandas_udf(T.DoubleType())

@@ -7,23 +7,43 @@ Reference semantics being reproduced:
 - city-buffer x image distance join (db.py:236-245, app/query.py:98)
 - kNN (BASELINE north_star; absent in reference, generalizes the above)
 
-Physical strategy (Spark-first):
-1. COVER   — each polygon explodes to its covering cells at resolution R
-             (arrays built in one Arrow UDF, exploded JVM-side); points map
-             to exactly one cell (fully vectorized, no per-geometry loop).
-2. JOIN    — plain equi-join on ``cell``. The polygon / right / center /
-             segment side is the dimension table (countries ~241 rows,
-             land cover ~2.4k) and is always broadcast, so the fact side
-             never shuffles. Only ``knn_join(broadcast_queries=False)``
-             runs a shuffled hash join on the int64 key (range-
-             partitionable, AQE-skew-splittable) for a large query side.
-3. DEDUP   — polygon x polygon covers overlap in many cells; duplicate
-             pairs are eliminated *without a shuffle* by the reference-point
-             rule: a pair is emitted only by the cell that contains the
-             top-left corner of the bbox-intersection of the two geometries
-             (pure Catalyst arithmetic, codegen'd filter).
-4. REFINE  — exact kernel predicate (vectorized PIP / intersects) as an
-             Arrow UDF filter.
+Physical strategy (Spark-first). The small side of every join here is a
+dimension table (countries ~241 rows, land cover ~2.4k, a few hundred
+kNN queries), so the large point / fact side never shuffles.
+
+PIP and kNN (``points_in_polygons_join[_multires]``, ``knn_join``) run as
+a broadcast INDEX PROBE in one Arrow pass:
+1. INDEX   — the builder collects the small side once (``toArrow``, one
+             eager job; it must fit in driver memory) and builds a numpy
+             table of (cell id, owner row) sorted by cell: a polygon's
+             tight cover cells, a kNN query's Chebyshev ring cells. The
+             table rides in the pass function's closure.
+2. PROBE   — one ``mapInArrow`` pass over the point side computes each
+             point's cell (``cells.cell_of``), finds its owners with
+             ``searchsorted`` and refines the (point, owner) pairs in
+             numpy: bbox test + ray-cast PIP per polygon, or the metric
+             distance plus a per-query partial top-k. No candidate pair
+             is ever built in the JVM or shipped to Python; Python sees
+             each point row once.
+3. JOIN BACK — PIP emits (point columns, ``_idx``) rows that a broadcast
+             hash join against the collected table (a local relation)
+             completes; kNN emits its few surviving rows with the query
+             columns already taken from the collected table, and a
+             ``row_number`` window on them picks the top k.
+Only ``knn_join(broadcast_queries=False)`` keeps a shuffled cell
+equi-join, for a query side too large to collect.
+
+Polygon x polygon joins (``intersects_join[_multires]``) keep the cell
+equi-join:
+1. COVER   — each geometry explodes to its bbox cover cells (a Catalyst
+             expression over one bbox decode stage).
+2. JOIN    — plain equi-join on ``cell`` with the right side broadcast.
+3. DEDUP   — covers overlap in many cells; duplicate pairs are eliminated
+             *without a shuffle* by the reference-point rule: a pair is
+             emitted only by the cell that contains the top-left corner of
+             the bbox-intersection of the two geometries (pure Catalyst
+             arithmetic, codegen'd filter).
+4. REFINE  — exact polygon-pair kernel as an Arrow UDF filter.
 
 Plan construction: cell ids, covers, bbox prefilters and the dedup
 filter are written as Spark SQL text (``geo_udfs.cell_of_xy_text``,
@@ -33,21 +53,25 @@ or more on the driver, and each DataFrame step is re-analyzed, so a
 Column-chain build made hundreds to thousands of round trips per call;
 the text builds the same optimized plan.
 
-Skew: pass ``salt=k`` to split hot cells: the big side gets a random salt
-in [0,k), the small side is replicated k times (explode of a literal
-array). AQE skew-join is also on (session.py) as a safety net.
+Skew: ``intersects_join(salt=k)`` splits hot cells: the big side gets a
+random salt in [0,k), the small side is replicated k times (explode of a
+literal array). AQE skew-join is also on (session.py) as a safety net.
+The index probe chunks a hot cell's pairs (``PROBE_CHUNK_PAIRS``).
 
-Scale notes (100 TB): the broadcast equi-join of step 2 needs no shuffle
-(the intersects_join kernel refine adds one round-robin exchange to widen
-its Python stage). Resolution
-R trades fan-out (cells/geometry) against refine selectivity; for web-page
-points x country polygons R=6..8 keeps dimension fan-out < 100k rows while
-making candidate lists small.
+Scale notes (100 TB): neither plan shuffles the fact side (the
+intersects_join kernel refine adds one round-robin exchange to widen its
+Python stage). Resolution R trades fan-out (cells/geometry) against
+refine selectivity; for web-page points x country polygons R=6..8 keeps
+the index < 100k rows while making candidate lists small.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -56,11 +80,20 @@ from pyspark.sql.functions import pandas_udf
 
 from pda_spark.functions import geo_udfs
 from pda_spark.geo import cells as C
+from pda_spark.geo import kernels, wkb
+from pda_spark.geo import proj as P
 from pda_spark.session import arrow_width
 
 # cover fan-out the data-derived resolutions aim for, per geometry
 # (cells.choose_res): ~2 cells per axis
 TARGET_CELLS = 4
+
+# (point, owner) pairs the index probe expands at once: a hot cell (many
+# points in one indexed cell, or many owners over one point) is refined
+# in chunks of this many pairs, so a worker's pair arrays stay bounded
+# whatever the skew (a single point's owners are never split). Read when
+# a join is built and carried in its pass function.
+PROBE_CHUNK_PAIRS = 1 << 20
 
 
 def _salted(df: DataFrame, salt: int, side: str) -> DataFrame:
@@ -79,26 +112,40 @@ def _salted(df: DataFrame, salt: int, side: str) -> DataFrame:
     return df.withColumn("_salt", F.explode(F.array([F.lit(i) for i in range(salt)])))
 
 
+def _extent_res(dim: float) -> int:
+    """The ``res="auto"`` resolution for a geometry extent of ``dim``
+    degrees: where it spans ~sqrt(TARGET_CELLS) cells per axis
+    (cells.choose_res), clamped to [2, 12] — below 2 everything lands in
+    a handful of world-size cells, above 12 point cells are already
+    street-scale. A point-like extent gets the finest clamped res."""
+    if dim <= 0.0:
+        return 12
+    return int(min(max(C.choose_res(dim, TARGET_CELLS), 2), 12))
+
+
 def _auto_res(polygons: DataFrame, geom: str) -> int:
     """Pick the cell resolution from the data (SURVEY §4 item 1): sample
     polygon bboxes (bounded limit, not a full scan), take the p95 of the
-    per-geometry extent, and choose the resolution where that extent
-    spans ~sqrt(TARGET_CELLS) cells per axis (cells.choose_res). p95 —
-    not the mean — so the LARGE geometries (country polygons joined
-    against 1 km scenes, reference db.py:208-224 vs :103-122) are the
-    ones whose fan-out is bounded; smaller geometries always cover >= 1
-    cell and only get cheaper. Clamped to [2, 12]: below 2 everything
-    lands in a handful of world-size cells, above 12 point cells are
-    already street-scale. One small eager job at plan-construction time
+    per-geometry extent, and choose ``_extent_res`` of it. p95 — not the
+    mean — so the LARGE geometries (country polygons joined against 1 km
+    scenes, reference db.py:208-224 vs :103-122) are the ones whose
+    fan-out is bounded; smaller geometries always cover >= 1 cell and
+    only get cheaper. One small eager job at plan-construction time
     (same pattern as dissolve's _auto_step)."""
     bb = polygons.select(geo_udfs.bbox_arr(F.col(geom)).alias("_bb")).limit(4096)
     row = bb.select(
         F.greatest(F.col("_bb")[2] - F.col("_bb")[0], F.col("_bb")[3] - F.col("_bb")[1]).alias("d")
     ).agg(F.percentile_approx("d", F.lit(0.95)).alias("d")).first()
-    dim = float(row["d"]) if row is not None and row["d"] is not None else 0.0
-    if dim <= 0.0:
-        return 12  # point-like sample: finest clamped res
-    return int(min(max(C.choose_res(dim, TARGET_CELLS), 2), 12))
+    return _extent_res(float(row["d"]) if row is not None and row["d"] is not None else 0.0)
+
+
+def _p95_res(dims: np.ndarray) -> int:
+    """``res="auto"`` of the PIP joins, from the collected polygons' bbox
+    extents (NaN for a NULL geometry): ``_extent_res`` of the
+    ceil(0.95 n)-th smallest extent, the element ``percentile_approx``
+    returns for 0.95 over an exact sample. No Spark job."""
+    d = np.sort(dims[~np.isnan(dims)])
+    return _extent_res(float(d[max(math.ceil(0.95 * len(d)) - 1, 0)]) if len(d) else 0.0)
 
 
 def _snap_res(dim: float, res_list: list[int]) -> int:
@@ -135,7 +182,8 @@ def _outer(
 
     The inner result is consumed TWICE (the output union and the
     matched-id set), so it is materialized once (lazy localCheckpoint):
-    the candidate join and Arrow refine don't re-execute per consumer.
+    the candidate join or probe pass and its refine don't re-execute per
+    consumer.
     The backfill is a null-SAFE anti-join on the preserved side's id: a
     matched row with a NULL id must not reappear (plain left_anti treats
     NULL != NULL and would emit it twice, matched and null-padded)."""
@@ -162,9 +210,9 @@ def _cols(df: DataFrame) -> list[str]:
 def _point_side(
     points: DataFrame, res: int, point_geom: str, lonlat_cols: tuple[str, str] | None
 ) -> DataFrame:
-    """Point side of a cell join: ``_cell`` at ``res`` plus the
-    ``_plon``/``_plat`` the refine reads. With ``lonlat_cols`` all three
-    are Catalyst expressions (no Python stage); otherwise one
+    """Point side of a shuffled cell join: ``_cell`` at ``res`` plus the
+    ``_plon``/``_plat`` the distance reads. With ``lonlat_cols`` all
+    three are Catalyst expressions (no Python stage); otherwise one
     ``point_cell_lonlat`` pass decodes the point WKB."""
     if lonlat_cols is not None:
         lon_c, lat_c = lonlat_cols
@@ -180,16 +228,6 @@ def _point_side(
     )
 
 
-def _pip_refine(cand: DataFrame, poly_geom: str) -> DataFrame:
-    """Exact PIP refine of (point, polygon) candidates behind a JVM-side
-    bbox prefilter (whole-stage codegen) on the polygon's ``_pbb``: the
-    Python refine sees only near-hit candidates."""
-    cand = cand.filter(
-        "(_plon >= _pbb[0] AND _plon <= _pbb[2]) AND (_plat >= _pbb[1] AND _plat <= _pbb[3])"
-    )
-    return cand.filter(geo_udfs.point_in_polygon_lonlat("_plon", "_plat", poly_geom))
-
-
 def _bboxes_overlap(lb: str, rb: str) -> str:
     """Overlap of two [minx, miny, maxx, maxy] bbox columns, as codegen'd
     comparisons (SQL text): geometries can share a cell without their
@@ -200,12 +238,141 @@ def _bboxes_overlap(lb: str, rb: str) -> str:
     )
 
 
-def _polygon_cover(polygons: DataFrame, cover_udf, poly_geom: str) -> DataFrame:
-    """Polygon side of a PIP cell join: one ``cover_udf`` pass (a
-    struct of bbox and cover cells), then ``_pbb`` and one row per cover
-    cell in ``_cell``."""
-    pys = polygons.withColumn("_bc", cover_udf(poly_geom))
-    return pys.selectExpr(*_cols(polygons), "_bc.bbox AS _pbb", "explode(_bc.cells) AS _cell")
+# ---- broadcast index probe (PIP and kNN) --------------------------------
+
+
+def _cell_index(cells_per_owner: list) -> tuple[np.ndarray, np.ndarray]:
+    """(keys, owners): every owner row's cell ids, sorted by cell, and the
+    owner row index of each."""
+    sizes = [len(c) for c in cells_per_owner]
+    keys = np.concatenate([np.asarray(c, dtype=np.int64) for c in cells_per_owner] or
+                          [np.empty(0, dtype=np.int64)])
+    owners = np.repeat(np.arange(len(sizes), dtype=np.int64), sizes)
+    order = np.argsort(keys, kind="stable")
+    return keys[order], owners[order]
+
+
+def _batch_lonlat(batch: pa.RecordBatch, point_geom: str, lonlat_cols) -> tuple:
+    """float64 lon/lat of one Arrow batch of the point side, read from the
+    ``lonlat_cols`` or decoded from the point WKB; a NULL coordinate or
+    point reads as NaN."""
+    if lonlat_cols is not None:
+        return tuple(
+            batch.column(c).cast(pa.float64()).to_numpy(zero_copy_only=False) for c in lonlat_cols
+        )
+    col = batch.column(point_geom)
+    lon, lat = np.full(len(col), np.nan), np.full(len(col), np.nan)
+    valid = col.is_valid()
+    ok = valid.to_numpy(zero_copy_only=False)
+    if ok.any():
+        lon[ok], lat[ok] = wkb.decode_points_vec(col.filter(valid).to_pylist())
+    return lon, lat
+
+
+def _probe_chunks(lon, lat, resolutions, keys, owners, chunk):
+    """The (row, owner) pairs of a batch's points whose cell at one of
+    ``resolutions`` is in the index (``keys`` sorted, ``owners``
+    aligned), in chunks of at most ``chunk`` pairs. A point with a NaN
+    coordinate matches nothing."""
+    ok = np.flatnonzero(~(np.isnan(lon) | np.isnan(lat)))
+    rows, starts, counts = [ok[:0]], [ok[:0]], [ok[:0]]
+    for r in resolutions:
+        cell = C.cell_of(lon[ok], lat[ok], r)
+        lo = np.searchsorted(keys, cell, "left")
+        n = np.searchsorted(keys, cell, "right") - lo
+        hit = n > 0
+        rows.append(ok[hit])
+        starts.append(lo[hit])
+        counts.append(n[hit])
+    rows, starts, counts = (np.concatenate(a) for a in (rows, starts, counts))
+    ends = np.cumsum(counts)
+    i = 0
+    while i < len(rows):
+        j = max(int(np.searchsorted(ends, ends[i] - counts[i] + chunk, "right")), i + 1)
+        n = counts[i:j]
+        first = np.repeat(starts[i:j] - (np.cumsum(n) - n), n)
+        yield np.repeat(rows[i:j], n), owners[first + np.arange(int(n.sum()))]
+        i = j
+
+
+def _take(batch: pa.RecordBatch, rows: np.ndarray, extra: dict) -> pa.RecordBatch:
+    """``batch``'s rows at ``rows`` (every column keeps its Arrow type)
+    followed by the ``extra`` columns."""
+    t = batch.take(pa.array(rows))
+    return pa.RecordBatch.from_arrays(
+        [*t.columns, *(pa.array(v) if isinstance(v, np.ndarray) else v for v in extra.values())],
+        names=[*t.schema.names, *extra],
+    )
+
+
+def _pip_pairs(lon, lat, rows, owner, bboxes, polys):
+    """The (row, owner) pairs whose point lies in the owner polygon: the
+    closed bbox test, then one ``kernels.points_in_polygons`` call per
+    polygon over its points."""
+    bb = bboxes[owner]
+    x, y = lon[rows], lat[rows]
+    keep = (x >= bb[:, 0]) & (x <= bb[:, 2]) & (y >= bb[:, 1]) & (y <= bb[:, 3])
+    order = np.flatnonzero(keep)[np.argsort(owner[keep], kind="stable")]
+    rows, owner = rows[order], owner[order]
+    if not len(rows):
+        return rows, owner
+    hit = np.empty(len(rows), dtype=bool)
+    cut = np.flatnonzero(np.diff(owner)) + 1
+    for s, e in zip(np.r_[0, cut], np.r_[cut, len(rows)]):
+        r = rows[s:e]
+        hit[s:e] = kernels.points_in_polygons(np.column_stack([lon[r], lat[r]]), polys[owner[s]])
+    return rows[hit], owner[hit]
+
+
+def _pip_pass(batches, coords, resolutions, keys, owners, bboxes, polys, chunk):
+    """The PIP probe over a partition's Arrow batches: each point row
+    once per containing polygon, with the polygon's row index in
+    ``_idx``."""
+    for batch in batches:
+        lon, lat = _batch_lonlat(batch, *coords)
+        found = [
+            _pip_pairs(lon, lat, r, o, bboxes, polys)
+            for r, o in _probe_chunks(lon, lat, resolutions, keys, owners, chunk)
+        ]
+        rows = np.concatenate([f[0] for f in found]) if found else np.empty(0, dtype=np.int64)
+        if len(rows):
+            yield _take(batch, rows, {"_idx": np.concatenate([f[1] for f in found])})
+
+
+def _pip_probe_join(
+    points: DataFrame, polygons: DataFrame, res_of, point_geom: str, poly_geom: str,
+    lonlat_cols: tuple[str, str] | None,
+) -> DataFrame:
+    """The broadcast index PIP join (module docstring): collect the
+    polygons, index each one's tight cover (``geo_udfs._geom_cover``) at
+    ``res_of(extents)`` (one resolution per polygon, from its bbox
+    extent; NaN for a NULL geometry), probe in one ``mapInArrow`` pass
+    and join the polygon columns back by row index. A NULL polygon
+    matches nothing (``ST_Contains(NULL, p)`` is NULL)."""
+    table = polygons.toArrow()
+    geoms = [None if b is None else wkb.decode(b) for b in table.column(poly_geom).to_pylist()]
+    bboxes = np.array(
+        [kernels.bbox(g) if g is not None else (np.nan,) * 4 for g in geoms], dtype=np.float64
+    ).reshape(-1, 4)
+    res_each = res_of(np.maximum(bboxes[:, 2] - bboxes[:, 0], bboxes[:, 3] - bboxes[:, 1]))
+    covers = [
+        [] if g is None else geo_udfs._geom_cover(g, int(r)) for g, r in zip(geoms, res_each)
+    ]
+    keys, owners = _cell_index(covers)
+    polys = [g.polygons() if c else None for g, c in zip(geoms, covers)]
+    resolutions = sorted({int(r) for r, c in zip(res_each, covers) if c})
+    coords, chunk = (point_geom, lonlat_cols), PROBE_CHUNK_PAIRS
+
+    def probe(batches):
+        return _pip_pass(batches, coords, resolutions, keys, owners, bboxes, polys, chunk)
+
+    idx = T.StructField("_idx", T.LongType(), False)
+    mapped = points.mapInArrow(probe, T.StructType([*points.schema.fields, idx]))
+    small = polygons.sparkSession.createDataFrame(
+        table.append_column("_idx", pa.array(np.arange(len(geoms), dtype=np.int64))),
+        T.StructType([*polygons.schema.fields, idx]),
+    )
+    return mapped.join(F.broadcast(small), on="_idx").drop("_idx")
 
 
 def points_in_polygons_join(
@@ -214,26 +381,30 @@ def points_in_polygons_join(
     res: int | str = 7,
     point_geom: str = "geom",
     poly_geom: str = "geom",
-    salt: int = 1,
     how: str = "inner",
     lonlat_cols: tuple[str, str] | None = None,
     point_id: str | None = None,
     poly_id: str | None = None,
 ) -> DataFrame:
     """ST_Contains/ST_Intersects join of a large point table against a
-    polygon table. Columns of both inputs are preserved; clashing names
-    must be disambiguated by the caller beforehand.
+    polygon table. Columns of both inputs are preserved (points', then
+    polygons'); clashing names must be disambiguated by the caller
+    beforehand.
+
+    Plan: the broadcast index probe of the module docstring. Building
+    the join runs one eager job, the collect of the polygon side, which
+    must fit in driver memory (the broadcast it replaces had the same
+    bound); the action runs one ``mapInArrow`` pass over the points,
+    which reads only their coordinates, and a broadcast join of the
+    polygon columns back by row index.
 
     ``lonlat_cols``: pass (lon, lat) column names if the point table
-    already carries plain coordinates. Cell assignment and the bbox
-    prefilter then run as pure Catalyst expressions and the exact PIP
-    refine is the ONLY Python stage in the plan. This matters: every
-    chained Arrow UDF adds a python worker per task (JVM->py->JVM hops),
-    and deep UDF pipelines stop scaling with cores. Without lonlat_cols
-    one combined UDF decodes WKB to (cell, lon, lat) in a single pass.
+    already carries plain coordinates; otherwise the pass decodes the
+    ``point_geom`` WKB. Points with a NULL or NaN coordinate match
+    nothing.
 
-    ``res="auto"`` derives the resolution from a bounded bbox sample of
-    the polygon side (see ``_auto_res``) — one small eager probe job.
+    ``res="auto"`` derives the resolution from the collected polygons'
+    bbox extents (p95, see ``_p95_res``): no extra job.
 
     ``how``: 'inner' (default), 'left' (keep points with no containing
     polygon, polygon columns null — requires ``point_id``), or 'right'
@@ -241,7 +412,7 @@ def points_in_polygons_join(
     ``poly_id``; the reference dashboard's "cities with zero images"
     ask, app/query.py:94-105 keeps only matched cities). Outer variants
     backfill via one anti-join on the preserved side's id against the
-    matched-id set — no change to the candidate/refine pipeline, and the
+    matched-id set — no change to the probe pipeline, and the
     matched-id projection is column-pruned to the id alone.
 
     CONTRACT for the outer variants: the preserved side's id must be a
@@ -255,28 +426,12 @@ def points_in_polygons_join(
         "points_in_polygons_join", how, points, point_id, polygons, poly_id,
         ("point_id", "poly_id"),
     )
-    if res == "auto":
-        res = _auto_res(polygons, poly_geom)
-    pts = _point_side(points, res, point_geom, lonlat_cols)
-    # one fused decode on the polygon side: bbox + tight cover in a
-    # single Python stage (chained UDFs would spin up two workers). The
-    # tight cover is sound here: a point in a cell the polygon doesn't
-    # touch cannot be inside the polygon.
-    pys = _polygon_cover(polygons, geo_udfs.bbox_cover_struct(res), poly_geom)
-    pts = _salted(pts, salt, "big")
-    pys = _salted(pys, salt, "small")
-    keys = ["_cell", "_salt"] if salt > 1 else ["_cell"]
-    # NOTE (round-7 measured NON-fix): an exchange here (the
-    # intersects_join pattern) made the PIP family SLOWER (q64 2.2 ->
-    # 3.0 s, q44 1.7 -> 2.4 s at sf1.0): the bbox prefilter keeps the
-    # PIP refine cheap, so the chained decode+refine pipeline on the
-    # scan's few splits already saturates, and the exchange only adds a
-    # WKB-payload shuffle. The exchange pays off only when the refine
-    # dominates (intersects_join's polygon-pair kernel).
-    cand = pts.join(F.broadcast(pys), on=keys, how="inner")
-    refined = _pip_refine(cand, poly_geom)
-    drop = ["_cell", "_plon", "_plat", "_pbb"] + (["_salt"] if salt > 1 else [])
-    return _outer(refined.drop(*drop), how, points, polygons, point_id, poly_id)
+
+    def res_of(dims):
+        return np.full(len(dims), _p95_res(dims) if res == "auto" else int(res))
+
+    inner = _pip_probe_join(points, polygons, res_of, point_geom, poly_geom, lonlat_cols)
+    return _outer(inner, how, points, polygons, point_id, poly_id)
 
 
 def within_distance_join(
@@ -321,56 +476,28 @@ def points_in_polygons_join_multires(
     lonlat_cols: tuple[str, str] | None = None,
 ) -> DataFrame:
     """PIP join with PER-GEOMETRY resolution (SURVEY §4 item 1, the
-    full answer beyond the global ``res='auto'`` sample): each polygon
+    full answer beyond the global ``res='auto'`` pick): each polygon
     covers itself at the coarsest resolution in ``resolutions`` whose
     cells still bound fan-out (~``TARGET_CELLS`` per geometry via
     cells.choose_res), so continent-size and scene-size geometries
     coexist in ONE join with bounded cover size for both.
 
-    The trick making this a single equi-join: the cell id packs the
-    resolution into the high bits (res<<58|ix<<29|iy, geo/cells), so
-    cells at different resolutions can NEVER collide — the point side
-    just emits one cell per candidate resolution (explode of a small
-    literal list, pure Catalyst when lonlat_cols) and joins on the one
-    int64 column. A (point, polygon) pair meets at exactly the
-    polygon's single resolution: no pair dedup needed. Point-side
-    fan-out is bounded by len(resolutions); cells at a resolution no
-    polygon used are immediate hash-miss rows in the (broadcast) join.
+    Same index probe as ``points_in_polygons_join`` (and the same one
+    eager collect): the cell id packs the resolution into the high bits
+    (res<<58|ix<<29|iy, geo/cells), so cells at different resolutions
+    can NEVER collide and one sorted index holds every polygon's cover
+    at its own resolution. A point probes its cell at each resolution
+    some polygon uses; a (point, polygon) pair meets at exactly the
+    polygon's single resolution: no pair dedup needed.
     """
     res_list = sorted(set(int(r) for r in resolutions))
 
-    @pandas_udf(T.StructType([
-        T.StructField("bbox", T.ArrayType(T.DoubleType())),
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("res", T.IntegerType()),
-    ]))
-    def _bc_auto(geom: pd.Series) -> pd.DataFrame:
-        from pda_spark.functions.geo_udfs import _decode_cache, _geom_cover
-        from pda_spark.geo import kernels
+    def res_of(dims):
+        return np.array(
+            [res_list[0] if np.isnan(d) else _snap_res(d, res_list) for d in dims], dtype=np.int64
+        )
 
-        get = _decode_cache()
-        bbs, covers, rss = [], [], []
-        for buf in geom:
-            g = get(buf)
-            bb = kernels.bbox(g)
-            r = _snap_res(max(bb[2] - bb[0], bb[3] - bb[1]), res_list)
-            bbs.append(list(bb))
-            covers.append(_geom_cover(g, r))
-            rss.append(r)
-        return pd.DataFrame({"bbox": bbs, "cells": covers, "res": rss})
-
-    pys = _polygon_cover(polygons, _bc_auto.asNondeterministic(), poly_geom)
-
-    pts = _point_side(points, res_list[0], point_geom, lonlat_cols)
-    # one cell per resolution the polygon side can use (replacing the
-    # res_list[0] one); res lives in the id's high bits, so this single
-    # column joins against every level
-    level_cells = ", ".join(geo_udfs.cell_of_xy_text("_plon", "_plat", r) for r in res_list)
-    pts = pts.selectExpr(
-        *_cols(points), "_plon", "_plat", f"explode(array({level_cells})) AS _cell"
-    )
-    cand = pts.join(F.broadcast(pys), on="_cell", how="inner")
-    return _pip_refine(cand, poly_geom).drop("_cell", "_plon", "_plat", "_pbb")
+    return _pip_probe_join(points, polygons, res_of, point_geom, poly_geom, lonlat_cols)
 
 
 def _disambiguate_right_geom(
@@ -615,10 +742,6 @@ def knn_guard_meters(lon, lat, ring: int, res: int):
     centre (covers EPSG:3035's area of use with huge margin) — beyond it
     |dlon| can exceed 180 deg where step 2's sin() bound breaks down.
     """
-    import numpy as np
-
-    from pda_spark.geo import proj as P
-
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     lat_step = np.radians(180.0 / (1 << res))
@@ -671,10 +794,6 @@ def knn_guard_geodesic(lon, lat, ring: int, res: int):
     radius distance_geodesic_lonlat uses), with a 0.999 slack factor
     against libm rounding.
     """
-    import numpy as np
-
-    from pda_spark.geo import proj as P
-
     lat = np.asarray(lat, dtype=np.float64)
     n = 1 << res
     lat_step = np.radians(180.0 / n)
@@ -700,10 +819,6 @@ def knn_guard_geodesic(lon, lat, ring: int, res: int):
 
 
 def _init_guard_constants():
-    import numpy as np
-
-    from pda_spark.geo import proj as P
-
     grid = np.linspace(-np.pi / 2 + 1e-6, np.pi / 2 - 1e-6, 4001)
     betas = np.arcsin(np.clip(P._q_auth(grid) / P.QP, -1.0, 1.0))
     slopes = np.diff(betas) / np.diff(grid)
@@ -728,6 +843,169 @@ def _observed_count(obs: Observation) -> int | None:
         return None
 
 
+def _knn_xy(metric: str, lon, lat):
+    """The plane a kNN metric measures in: EPSG:3035 metres
+    (``proj.fwd``) for 'meters', lon/lat degrees for the others."""
+    if metric == "meters":
+        return P.fwd(lon, lat)
+    return lon, lat
+
+
+def _knn_dist(metric: str, ax, ay, bx, by):
+    """Distance between points a and b given in ``_knn_xy(metric)``
+    coordinates, point side first. One function per metric for both kNN
+    plans, so they agree bit for bit: 'meters' planar ``hypot``,
+    'degrees' ``sqrt(dx*dx + dy*dy)`` (the SQL oracle's op order),
+    'geodesic' ``haversine_m`` on the authalic sphere."""
+    if metric == "meters":
+        return np.hypot(ax - bx, ay - by)
+    if metric == "degrees":
+        dx, dy = ax - bx, ay - by
+        return np.sqrt(dx * dx + dy * dy)
+    return geo_udfs.haversine_m(ax, ay, bx, by, P.RQ)
+
+
+def _ring_index(lon, lat, ring: int, res: int, metric: str) -> tuple[list, np.ndarray]:
+    """Each query point's Chebyshev ``ring`` of cells at ``res`` and its
+    guard: a lower bound on the ``metric`` distance to any point outside
+    that ring (``knn_guard_*``; for degrees, any point outside differs by
+    >= ring*lat_step in lat or >= ring*lon_step = 2*lat_step in lon)."""
+    base = C.cell_of(lon, lat, res)
+    cells = [C.ring(int(b), ring) for b in base]
+    if metric == "degrees":
+        guard = np.full(len(base), ring * 180.0 / (1 << res))
+    elif metric == "geodesic":
+        guard = knn_guard_geodesic(lon, lat, ring, res)
+    else:
+        guard = knn_guard_meters(lon, lat, ring, res)
+    return cells, guard
+
+
+def _knn_pairs(px, py, rows, owner, qx, qy, metric: str, k: int):
+    """The chunk's (row, owner, distance) candidates that can still be in
+    their query's top k: every candidate whose distance is <= the k-th
+    smallest of its query in the chunk, ties included (a query with
+    fewer than k candidates, or a NaN k-th distance, keeps them all)."""
+    d = _knn_dist(metric, px[rows], py[rows], qx[owner], qy[owner])
+    order = np.lexsort((d, owner))
+    rows, owner, d = rows[order], owner[order], d[order]
+    first = np.r_[0, np.flatnonzero(np.diff(owner)) + 1]
+    size = np.diff(np.r_[first, len(owner)])
+    kth = np.repeat(d[first + np.minimum(size, k) - 1], size)
+    keep = (d <= kth) | np.isnan(kth) | (np.arange(len(d)) - np.repeat(first, size) < k)
+    return rows[keep], owner[keep], d[keep]
+
+
+def _knn_pass(batches, coords, res, keys, owners, qx, qy, metric, k, qbatch, guard, chunk):
+    """The kNN probe over a partition's Arrow batches: each surviving
+    (point row, query row) candidate with the query's columns, its
+    ``_guard`` and ``dist_m``."""
+    for batch in batches:
+        lon, lat = _batch_lonlat(batch, *coords)
+        # projected once per point, then gathered per pair
+        px, py = _knn_xy(metric, lon, lat)
+        found = [
+            _knn_pairs(px, py, r, o, qx, qy, metric, k)
+            for r, o in _probe_chunks(lon, lat, [res], keys, owners, chunk)
+        ]
+        if not found or not sum(len(f[0]) for f in found):
+            continue
+        rows, owner, dist = (np.concatenate([f[i] for f in found]) for i in range(3))
+        q = qbatch.take(pa.array(owner))
+        extra = dict(zip(q.schema.names, q.columns))
+        extra.update(_guard=guard[owner], dist_m=dist)
+        yield _take(batch, rows, extra)
+
+
+def _knn_probe(
+    points: DataFrame, queries: DataFrame, ring: int, *, k, res, metric, point_geom,
+    query_geom, query_id, lonlat_cols, exact,
+) -> tuple[DataFrame, int]:
+    """The broadcast index kNN candidates (module docstring) at ``ring``:
+    (the candidate rows — point columns, query columns, ``_guard``,
+    ``dist_m`` — and the number of query rows). Collects the query side
+    (one job); a NULL query point, or with ``exact`` a NULL id, raises
+    ``ValueError`` naming the column before any other job."""
+    qt = queries.toArrow()
+    if qt.column(query_geom).null_count:
+        raise ValueError(
+            f"knn_join: query_geom column {query_geom!r} has NULL values; "
+            "every query needs a point"
+        )
+    if exact and qt.column(query_id).null_count:
+        raise ValueError(
+            f"knn_join(exact=True): query_id column {query_id!r} has NULL values; "
+            "exact answers need a non-NULL id per query"
+        )
+    qlon, qlat = wkb.decode_points_vec(qt.column(query_geom).to_pylist())
+    cells, guard = _ring_index(qlon, qlat, ring, res, metric)
+    keys, owners = _cell_index(cells)
+    qx, qy = _knn_xy(metric, qlon, qlat)
+    qbatch = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in qt.columns], schema=qt.schema
+    )
+    coords, chunk = (point_geom, lonlat_cols), PROBE_CHUNK_PAIRS
+
+    def probe(batches):
+        return _knn_pass(
+            batches, coords, res, keys, owners, qx, qy, metric, k, qbatch, guard, chunk
+        )
+
+    schema = T.StructType([
+        *points.schema.fields, *queries.schema.fields,
+        T.StructField("_guard", T.DoubleType()), T.StructField("dist_m", T.DoubleType()),
+    ])
+    return points.mapInArrow(probe, schema), qt.num_rows
+
+
+def _knn_cell_join(
+    points: DataFrame, queries: DataFrame, ring: int, *, res, metric, point_geom, query_geom,
+    lonlat_cols,
+) -> DataFrame:
+    """The shuffled kNN candidates (``broadcast_queries=False``): the
+    query side explodes its ring cells in one Arrow stage and a
+    shuffled hash join on the cell id meets the points; same columns as
+    ``_knn_probe``'s, every candidate kept."""
+
+    @pandas_udf(T.StructType([
+        T.StructField("cells", T.ArrayType(T.LongType())),
+        T.StructField("guard", T.DoubleType()),
+        T.StructField("qlon", T.DoubleType()),
+        T.StructField("qlat", T.DoubleType()),
+    ]))
+    def _rc(geom: pd.Series) -> pd.DataFrame:
+        lon, lat = wkb.decode_points_vec([bytes(b) for b in geom])
+        cells, guard = _ring_index(lon, lat, ring, res, metric)
+        return pd.DataFrame(
+            {"cells": [c.tolist() for c in cells], "guard": guard, "qlon": lon, "qlat": lat}
+        )
+
+    @pandas_udf(T.DoubleType())
+    def _dist(plon: pd.Series, plat: pd.Series, qlon: pd.Series, qlat: pd.Series) -> pd.Series:
+        return pd.Series(_knn_dist(
+            metric,
+            *_knn_xy(metric, plon.to_numpy(), plat.to_numpy()),
+            *_knn_xy(metric, qlon.to_numpy(), qlat.to_numpy()),
+        ))
+
+    p = _point_side(points, res, point_geom, lonlat_cols)
+    keep = _cols(queries)
+    # single evaluation per row: without the flag the 4 struct-field
+    # reads each re-run the WKB decode + ring build (VERDICT r3)
+    q = queries.withColumn("_rc", _rc.asNondeterministic()(query_geom))
+    q = q.selectExpr("*", "_rc.guard AS _guard", "_rc.qlon AS _qlon", "_rc.qlat AS _qlat")
+    q = q.selectExpr(*keep, "_guard", "_qlon", "_qlat", "explode(_rc.cells) AS _cell")
+    cand = p.join(q, on="_cell", how="inner")
+    if metric == "degrees":
+        # _knn_dist's 'degrees' op order, as a Catalyst expression
+        dist = F.expr(
+            "sqrt((_plon - _qlon) * (_plon - _qlon) + (_plat - _qlat) * (_plat - _qlat))"
+        )
+    else:
+        dist = _dist("_plon", "_plat", "_qlon", "_qlat")
+    return cand.withColumn("dist_m", dist).drop("_cell", "_plon", "_plat", "_qlon", "_qlat")
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -746,29 +1024,39 @@ def knn_join(
 ) -> DataFrame:
     """k nearest points for each query point (BASELINE north_star).
 
-    ``broadcast_queries=False`` switches the candidate join to a shuffled
-    hash join on the cell id — required when the query side itself is a
-    large table (a broadcast of 10M queries x ring cells would not fit);
-    both sides then partition by ``_cell`` and AQE handles skewed cells.
+    Strategy: H3-style ring expansion — each query's candidates are the
+    points in its cell neighbourhood (Chebyshev ring ``max_ring``), and
+    a window ``row_number() over (partition by query_id order by dist,
+    tiebreak)`` takes the top k (the reference has no kNN; SURVEY §2.3
+    J10). Output: the points' columns, the queries' columns, ``dist_m``
+    and ``knn_rank``.
 
-    Strategy: H3-style ring expansion — each query joins candidate points
-    in its cell neighbourhood (Chebyshev ring ``max_ring``), distances are
-    refined per candidate, and a window ``row_number() over (partition by
-    query_id order by dist)`` takes the top k (the reference has no kNN;
-    SURVEY §2.3 J10).
+    Default plan: the broadcast index probe of the module docstring.
+    Building the join collects the query side (one eager job; it must
+    fit in driver memory, as the broadcast it replaces had to), and one
+    ``mapInArrow`` pass over the points computes each candidate's
+    distance and keeps, per query, only the candidates that can still
+    rank within the top k; the window runs on those survivors, so Spark
+    still decides ties. A NULL ``query_geom`` raises ``ValueError``
+    naming the column, and so does a NULL ``query_id`` with
+    ``exact=True``, both before any further job.
+
+    ``broadcast_queries=False`` switches to a shuffled hash join on the
+    cell id — required when the query side itself is a large table (a
+    collect of 10M queries x ring cells would not fit); both sides then
+    partition by ``_cell`` and AQE handles skewed cells, and every
+    candidate pair reaches the window.
 
     ``lonlat_cols``: pass (lon, lat) column names when the point table
-    already carries plain coordinates — cell assignment then runs as a
-    pure Catalyst expression and (for metric='degrees') the whole point
-    leg is Python-free; metric='meters' keeps exactly one Arrow stage
-    (projection) over plain doubles, no WKB decode.
+    already carries plain coordinates; otherwise the point WKB is
+    decoded. Points with a NULL or NaN coordinate match nothing.
 
     ``metric``: 'meters' (EPSG:3035 planar metres), 'degrees' (planar
     lon/lat Euclidean — SQL-oracle-friendly), or 'geodesic' (true
     great-circle metres on the authalic sphere — haversine; the metric
     real users reach for outside EPSG:3035's European domain).
     ``tiebreak`` optionally names a column for deterministic ordering
-    among equal distances.
+    among equal distances (default: the point coordinates).
 
     ``max_ring`` seeds the candidate search; with ``exact=True`` (default)
     the result is verified per query — a kNN answer is only exact when k
@@ -776,56 +1064,26 @@ def knn_join(
     guaranteed radius (``knn_guard_meters`` for metres — sound in
     projected space; ring*lat_step for degrees). The candidate result is
     localCheckpoint'ed so the guard check and the final consumer never
-    re-execute the join DAG. The checkpoint's own job counts, through
-    two ``Observation``s, the query side's rows and the complete answers
-    (rows with a non-NULL id, ``knn_rank = k`` and ``dist_m`` below the
-    guard). When the two are equal every query is exact and the call
-    returns with no further job. Otherwise a NULL ``query_id`` raises
-    ``ValueError`` (one job checks, before any retry), and for an
-    incomplete query, a duplicate id or a subtree the optimizer removed
-    as empty the guard loop runs: incomplete queries re-run with a 4x
-    wider ring, up to ``max_retries`` times (a driver-side loop over an
-    ever-smaller broadcast query set — bounded work at scale).
+    re-execute the pass. The checkpoint's own job counts, through an
+    ``Observation``, the complete answers (rows with a non-NULL id,
+    ``knn_rank = k`` and ``dist_m`` below the guard); when that equals
+    the number of query rows (known from the collect; observed on the
+    query side in the shuffled plan) every query is exact and the call
+    returns with no further job. Otherwise — an incomplete query, a
+    duplicate id, or a subtree the optimizer removed as empty — the
+    guard loop runs: incomplete queries re-run with a 4x wider ring, up
+    to ``max_retries`` times (a driver-side loop that collects only the
+    incomplete queries — bounded work at scale).
     """
-    import numpy as np
-
     if metric not in ("meters", "degrees", "geodesic"):
         raise ValueError(f"knn_join: unknown metric {metric!r}")
-    lat_step = 180.0 / (1 << res)
-
-    def ring_cells_udf(ring: int):
-        @pandas_udf(T.StructType([
-            T.StructField("cells", T.ArrayType(T.LongType())),
-            T.StructField("guard", T.DoubleType()),
-            T.StructField("qlon", T.DoubleType()),
-            T.StructField("qlat", T.DoubleType()),
-        ]))
-        def _rc(geom: pd.Series) -> pd.DataFrame:
-            from pda_spark.geo import wkb as W
-
-            lon, lat = W.decode_points_vec([bytes(b) for b in geom])
-            base = C.cell_of(lon, lat, res)
-            cells_out = [[int(c) for c in C.ring(int(b), ring)] for b in base]
-            if metric == "degrees":
-                # any point outside the ring differs by >= ring*lat_step
-                # in lat or >= ring*lon_step (= 2*lat_step) in lon
-                guard = np.full(len(base), ring * lat_step)
-            elif metric == "geodesic":
-                guard = knn_guard_geodesic(lon, lat, ring, res)
-            else:
-                guard = knn_guard_meters(lon, lat, ring, res)
-            return pd.DataFrame({"cells": cells_out, "guard": guard, "qlon": lon, "qlat": lat})
-
-        # single evaluation per row: without the flag the 4 struct-field
-        # reads each re-run the WKB decode + ring build (VERDICT r3)
-        return _rc.asNondeterministic()
-
-    p = _point_side(points, res, point_geom, lonlat_cols)
-
+    if max_ring < 1:
+        # ring 0 would also break the retry loop (ring *= 4 keeps it 0)
+        raise ValueError(f"knn_join: max_ring must be >= 1, got {max_ring}")
     if tiebreak:
         order = [tiebreak]
     elif lonlat_cols is not None:
-        order = ["_plon", "_plat"]
+        order = list(lonlat_cols)
     else:
         order = [point_geom]
     rank = (
@@ -833,53 +1091,45 @@ def knn_join(
         + ", ".join(f"{c} ASC" for c in ["dist_m", *order])
         + ")"
     )
+    kw = dict(res=res, metric=metric, point_geom=point_geom, query_geom=query_geom,
+              lonlat_cols=lonlat_cols)
 
-    def attempt(queries_df: DataFrame, ring: int) -> DataFrame:
-        keep = _cols(queries_df)
-        q = queries_df.withColumn("_rc", ring_cells_udf(ring)(query_geom))
-        q = q.selectExpr("*", "_rc.guard AS _guard", "_rc.qlon AS _qlon", "_rc.qlat AS _qlat")
-        q = q.selectExpr(*keep, "_guard", "_qlon", "_qlat", "explode(_rc.cells) AS _cell")
-        cand = p.join(F.broadcast(q) if broadcast_queries else q, on="_cell", how="inner")
-        if metric == "degrees":
-            # same IEEE754 op order as the SQL oracle's sqrt(dx*dx+dy*dy)
-            dist = F.expr(
-                "sqrt((_plon - _qlon) * (_plon - _qlon) + (_plat - _qlat) * (_plat - _qlat))"
+    def attempt(queries_df: DataFrame, ring: int) -> tuple[DataFrame, int | None]:
+        if broadcast_queries:
+            cand, n_rows = _knn_probe(
+                points, queries_df, ring, k=k, query_id=query_id, exact=exact, **kw
             )
-        elif metric == "geodesic":
-            dist = geo_udfs.distance_geodesic_lonlat()("_plon", "_plat", "_qlon", "_qlat")
         else:
-            dist = geo_udfs.distance_m_lonlat()("_plon", "_plat", "_qlon", "_qlat")
-        return (
-            cand.withColumn("dist_m", dist)
-            .withColumn("knn_rank", F.expr(rank))
-            .filter(f"knn_rank <= {k}")
-            .drop("_cell", "_qlon", "_qlat")
-        )
+            cand, n_rows = _knn_cell_join(points, queries_df, ring, **kw), None
+        ranked = cand.withColumn("knn_rank", F.expr(rank)).filter(f"knn_rank <= {k}")
+        return ranked, n_rows
 
-    helper_cols = ["_guard", "_plon", "_plat"]
-    if max_ring < 1:
-        # ring 0 would also break the retry loop (ring *= 4 keeps it 0)
-        raise ValueError(f"knn_join: max_ring must be >= 1, got {max_ring}")
     if not exact:
-        return attempt(queries, max_ring).drop(*helper_cols)
+        return attempt(queries, max_ring)[0].drop("_guard")
 
     # materialize once: the final consumer reads the checkpointed
-    # candidates instead of re-executing the join DAG. The checkpoint's
-    # own job also counts the query rows (inside the broadcast side) and
-    # the complete answers, so the common all-exact case needs no
-    # further job.
+    # candidates instead of re-executing the pass. The checkpoint's own
+    # job counts the complete answers (and, in the shuffled plan, the
+    # query rows inside the query side), so the common all-exact case
+    # needs no further job.
     n_queries, n_complete = Observation(), Observation()
-    result = attempt(queries.observe(n_queries, F.count(F.lit(1)).alias("n")), max_ring)
+    first_q = queries if broadcast_queries else queries.observe(
+        n_queries, F.count(F.lit(1)).alias("n")
+    )
+    result, n_rows = attempt(first_q, max_ring)
     complete_row = f"{query_id} IS NOT NULL AND knn_rank = {k} AND dist_m < _guard"
     result = result.observe(
         n_complete, F.expr(f"count(CASE WHEN {complete_row} THEN 1 END)").alias("n")
     ).localCheckpoint()
     complete = _observed_count(n_complete)
-    if complete is not None and complete == _observed_count(n_queries):
-        return result.drop(*helper_cols)
+    if n_rows is None:
+        n_rows = _observed_count(n_queries)
+    if complete is not None and complete == n_rows:
+        return result.drop("_guard")
     # NULL ids share one window partition and never match the complete-id
-    # set, so no ring can certify them: fail before the first retry
-    if not queries.filter(F.col(query_id).isNull()).isEmpty():
+    # set, so no ring can certify them: fail before the first retry (the
+    # probe plan checked its collected query table already)
+    if not broadcast_queries and not queries.filter(F.col(query_id).isNull()).isEmpty():
         raise ValueError(
             f"knn_join(exact=True): query_id column {query_id!r} has NULL values; "
             "exact answers need a non-NULL id per query"
@@ -913,7 +1163,7 @@ def knn_join(
             break
         ring *= 4
         redo = queries.join(bad, on=query_id, how="left_semi")
-        fixed = attempt(redo, ring)
+        fixed = attempt(redo, ring)[0]
         result = result.join(bad, on=query_id, how="left_anti").unionByName(fixed).localCheckpoint()
     else:
         n_left = incomplete_queries(result).count()
@@ -924,7 +1174,7 @@ def knn_join(
                 "may exist in reach; raise max_ring/max_retries or pass "
                 "exact=False for best-effort answers"
             )
-    return result.drop(*helper_cols)
+    return result.drop("_guard")
 
 
 def snap_to_segments(

@@ -103,8 +103,11 @@ AUDITED = [
 
 def _q42_knn_candidates(spark, sf_dir):
     """q42 with exact=True localCheckpoints the candidate result, so its
-    explain shows only the checkpoint scan; this is the real ring-join
-    DAG (the exact=False plan, identical up to the guard loop)."""
+    explain shows only the checkpoint scan; this is the real candidate
+    DAG (the exact=False plan, identical up to the guard loop): the
+    index probe's one ``mapInArrow`` pass over the points and the
+    ``row_number`` window on its survivors. Building it collects the
+    query side (one job)."""
     from pda_spark.operators import spatial_join
     from pda_spark.plans.fixtures import _event_points, _knn_query_table
 

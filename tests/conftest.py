@@ -39,9 +39,19 @@ def jobs_in_group(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+# physical plan nodes that run Python: scalar UDF evaluation, map /
+# grouped / co-grouped functions, Python aggregates, windows and UDTFs
+PYTHON_NODE = (
+    r"(?:ArrowEvalPython|BatchEvalPython|MapInPandas|(?:Python)?MapInArrow"
+    r"|FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)|AggregateInPandas|ArrowAggregatePython"
+    r"|WindowInPandas|ArrowWindowPython|(?:Arrow|Batch)EvalPythonUDTF)"
+)
+
+
 def n_arrow_nodes(plan: str) -> int:
-    """Count physical ArrowEvalPython nodes: formatted explain prints
-    each node twice (tree + detail section) — count detail headers."""
+    """Count the physical nodes that run Python (``PYTHON_NODE``):
+    formatted explain prints each node twice (tree + detail section) —
+    count detail headers."""
     import re
 
-    return len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
+    return len(re.findall(rf"^\(\d+\) {PYTHON_NODE}\b", plan, re.M))

@@ -62,3 +62,45 @@ def test_spatial_public_names_have_non_test_callers():
         if not name.startswith("_") and name not in used
     ]
     assert not orphans, "public names reached only from tests: " + ", ".join(orphans)
+
+
+def test_spatial_private_functions_have_callers():
+    """A private top-level function of the spatial layer is called from
+    somewhere outside itself (its own module included): a helper whose
+    last caller was replaced is dead code."""
+    used = set()
+    for path in _files(CALLERS):
+        for stmt in _parse(path).body:
+            used.update(set(_referenced(stmt)) - _defined(stmt))
+    orphans = [
+        f"{os.path.relpath(path, ROOT)}:{stmt.name}"
+        for path in _files(SPATIAL)
+        for stmt in _parse(path).body
+        if isinstance(stmt, ast.FunctionDef) and stmt.name.startswith("_")
+        and stmt.name not in used
+    ]
+    assert not orphans, "private helpers nobody calls: " + ", ".join(orphans)
+
+
+# parameters kept for a shared signature: the kNN guards all take
+# (lon, lat, ring, res), and the geodesic bound does not depend on lon
+SHARED_SIGNATURE = {("knn_guard_geodesic", "lon")}
+
+
+def test_spatial_function_parameters_are_read():
+    """Every parameter of a top-level spatial function is read in its
+    body: an option the code no longer honours is removed, not kept as a
+    silent no-op."""
+    unread = []
+    for path in _files(SPATIAL):
+        for stmt in _parse(path).body:
+            if not isinstance(stmt, ast.FunctionDef):
+                continue
+            a = stmt.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+            names = {n.id for b in stmt.body for n in ast.walk(b) if isinstance(n, ast.Name)}
+            unread += [f"{os.path.relpath(path, ROOT)}:{stmt.name}({p})"
+                       for p in params
+                       if p not in names and (stmt.name, p) not in SHARED_SIGNATURE]
+    assert not unread, "parameters never read: " + ", ".join(unread)

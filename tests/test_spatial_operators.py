@@ -271,7 +271,8 @@ def test_pip_join_rejects_unsupported_how(spark, world):
 
 def test_knn_shuffled_queries_matches_broadcast(spark, world):
     """broadcast_queries=False (the huge-query-side plan: shuffled hash
-    join on cell) must return exactly the broadcast plan's answer."""
+    join on cell) must return exactly the index probe's answer, distances
+    and schema included."""
     pts = world["cities"].select(F.col("id").alias("pt_id"), "geom")
     queries = spark.createDataFrame(
         [(0, bytearray(wkb.point(10.0, 50.0))), (1, bytearray(wkb.point(13.4, 52.5)))],
@@ -280,8 +281,9 @@ def test_knn_shuffled_queries_matches_broadcast(spark, world):
     kw = dict(k=4, res=5, query_id="query_id", max_ring=3, tiebreak="pt_id")
     a = spatial_join.knn_join(pts, queries, **kw)
     b = spatial_join.knn_join(pts, queries, broadcast_queries=False, **kw)
-    sa = {(r["query_id"], r["pt_id"], r["knn_rank"]) for r in a.collect()}
-    sb = {(r["query_id"], r["pt_id"], r["knn_rank"]) for r in b.collect()}
+    assert a.schema == b.schema
+    sa = {(r["query_id"], r["pt_id"], r["dist_m"], r["knn_rank"]) for r in a.collect()}
+    sb = {(r["query_id"], r["pt_id"], r["dist_m"], r["knn_rank"]) for r in b.collect()}
     assert sa == sb
 
 
@@ -407,19 +409,18 @@ def test_salt_spreads_identical_hot_rows(spark):
 
 
 def test_pip_join_wkb_single_decode_stage(spark, world):
-    """WKB-input PIP join (no lonlat_cols): the struct UDFs must appear
-    exactly ONCE per leg in the physical plan. Catalyst duplicates a
-    deterministic struct UDF once per field access (3x decode on the
-    point leg, 2x on the polygon leg) — asNondeterministic forces the
-    single evaluation (VERDICT r3 perf item)."""
+    """WKB-input PIP join (no lonlat_cols): the point WKB decode, the
+    cell probe and the PIP refine are ONE Python node (the index probe's
+    mapInArrow pass); the polygon side is collected at build time and
+    joins back through a local relation with no Python at all."""
     pts = world["cities"].select(F.col("id").alias("pt_id"), "geom")
     polys = world["land_cover_classes"].select(
         F.col("id").alias("lc_id"), F.col("geom").alias("lc_geom")
     )
     joined = spatial_join.points_in_polygons_join(pts, polys, res=7, poly_geom="lc_geom")
     plan = _formatted_plan(joined)
-    # one point_cell_lonlat + one bbox_cover_struct + one PIP refine
-    assert _n_arrow_nodes(plan) == 3, plan
+    assert _n_arrow_nodes(plan) == 1, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_intersects_join_bbox_single_decode_stage(spark, world):
@@ -883,29 +884,20 @@ def test_knn_exact_duplicate_query_ids(spark):
 def test_knn_exact_null_query_id_raises(spark):
     """A NULL query id matches no complete id and shares one window
     partition with every other NULL id, so no ring can certify it: the
-    call raises before its first retry, naming the id column. Its jobs
-    are the checkpoint's (as many as a certified call's checkpoint) plus
-    one filtered count (a shuffle-map job and a result job); one retry
-    round runs over a dozen more (a checkpoint of the incomplete ids,
-    counts and a wider ring attempt)."""
+    call raises, naming the id column, from the collected query table —
+    its one job is that collect (no candidate pass, no retry)."""
     pts = spark.createDataFrame(_KNN_PTS, "pt_id int, lon double, lat double")
-
-    def queries(q0):
-        return spark.createDataFrame(
-            [(q0, bytearray(wkb.point(10.1, 50.1))), (1, bytearray(wkb.point(10.2, 50.2)))],
-            "query_id int, qgeom binary",
-        )
-
-    _, ckpt_jobs = jobs_in_group(
-        spark, "knn-null-ref", lambda: spatial_join.knn_join(pts, queries(0), **_KNN_KW)
+    queries = spark.createDataFrame(
+        [(None, bytearray(wkb.point(10.1, 50.1))), (1, bytearray(wkb.point(10.2, 50.2)))],
+        "query_id int, qgeom binary",
     )
 
     def null_call():
         with pytest.raises(ValueError, match="query_id"):
-            spatial_join.knn_join(pts, queries(None), max_retries=1, **_KNN_KW)
+            spatial_join.knn_join(pts, queries, max_retries=1, **_KNN_KW)
 
     _, jobs = jobs_in_group(spark, "knn-null", null_call)
-    assert jobs <= ckpt_jobs + 2, (jobs, ckpt_jobs)
+    assert jobs <= 1, jobs
 
 
 def test_knn_exact_zero_candidate_query(spark):
@@ -1000,8 +992,8 @@ def test_builders_py4j_round_trip_budget(spark):
 
 
 @pytest.mark.parametrize("op", [
-    "points_in_polygons_join", "knn_join", "knn_join_retry", "intersects_join",
-    "union_area_by_cells", "rasterize_polygons",
+    "points_in_polygons_join", "points_in_polygons_join_auto", "knn_join", "knn_join_retry",
+    "intersects_join", "union_area_by_cells", "rasterize_polygons",
 ])
 def test_operator_warm_repeat_compiles_nothing(spark, world, op):
     """A second call of an operator on the same inputs generates the same
@@ -1029,6 +1021,10 @@ def test_operator_warm_repeat_compiles_nothing(spark, world, op):
     calls = {
         "points_in_polygons_join": lambda: spatial_join.points_in_polygons_join(
             pts, polys, res=7, poly_geom="lc_geom"),
+        # res="auto" picks the resolution from the collected polygons,
+        # with no sampling job of its own
+        "points_in_polygons_join_auto": lambda: spatial_join.points_in_polygons_join(
+            pts, polys, res="auto", poly_geom="lc_geom"),
         "knn_join": lambda: spatial_join.knn_join(knn_pts, qs, **_KNN_KW),
         "knn_join_retry": lambda: spatial_join.knn_join(knn_pts, qs_retry, **_KNN_KW),
         "intersects_join": lambda: spatial_join.intersects_join(
